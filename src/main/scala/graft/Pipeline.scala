@@ -25,8 +25,8 @@ final case class MetadataRow(doc_id: String, jsonld: String)
   *    fan-out, so task memory is O(largest doc), not O(partition).
   *  - The QUDT dictionary (~3.3k keys) is a driver-built broadcast.
   *  - The only wide operations are at the very end and are both optional:
-  *    the pred-bucketed, doc-salted repartition for the triples table
-  *    (deterministic salt = xxhash64(doc_id) % S — resumable, no rand())
+  *    the pred-bucket repartition for the triples table (one shuffle
+  *    partition, so one file, per bucket — deterministic, no rand())
   *    and the global range-sort for the canonical N-Triples text sink.
   *  - Resume: left_anti join of docs against already-materialized doc_ids
   *    (broadcast when small; shuffle-hash otherwise via AQE).
@@ -82,7 +82,7 @@ object Pipeline {
         TripleExpand.expandDoc(meta, lines, includeProv)
           .map(t => TripleRow(id, t.subj, t.pred, t.obj))
       } catch {
-        case e: Throwable if !failFast =>
+        case scala.util.control.NonFatal(_) if !failFast =>
           errorCounter.foreach(_.add(1))
           Vector.empty
       }
@@ -107,7 +107,7 @@ object Pipeline {
         TripleExpand.expandDoc(meta, lines, includeProv)
           .map(t => TripleRow(d.doc_id, t.subj, t.pred, t.obj))
       } catch {
-        case _: Throwable if !failFast =>
+        case scala.util.control.NonFatal(_) if !failFast =>
           errorCounter.foreach(_.add(1))
           Vector.empty
       }
@@ -134,7 +134,7 @@ object Pipeline {
         TripleExpand.expandDoc(meta, lines, includeProv)
           .map(t => TripleRow(meta.id, t.subj, t.pred, t.obj))
       } catch {
-        case _: Throwable if !failFast =>
+        case scala.util.control.NonFatal(_) if !failFast =>
           errorCounter.foreach(_.add(1))
           Vector.empty
       }
@@ -218,36 +218,31 @@ object Pipeline {
     tokens
   }
 
-  /** Partition a triples frame so every output file holds EXACTLY ONE
-    * `pred_bucket` value (per-file manifest bounds are points, so
+  /** Partition a triples frame so every `pred_bucket` value lands in
+    * its own shuffle partition, so every output file holds EXACTLY ONE
+    * bucket value (per-file manifest bounds are points, and
     * [[readTriplesSnap]]'s bucket pruning selects only that bucket's
-    * files), while a head-heavy bucket still spreads over `spread`
-    * tasks/files via the doc-hash salt. Deterministic — no rand — so
-    * output is identical across retries and cluster sizes.
+    * file). Deterministic — no rand — so output is identical across
+    * retries and cluster sizes.
     */
-  private[graft] def routeByBucket(df: DataFrame, spread: Int): DataFrame = {
-    val nPart = PredBuckets * spread
-    val tokens = routeTokens(nPart)
-    df.withColumn("_slot",
-        (col("pred_bucket") * spread +
-          pmod(xxhash64(col("doc_id")), lit(spread.toLong))).cast("int"))
-      .withColumn("_route",
-        element_at(array(tokens.toIndexedSeq.map(lit(_)): _*), col("_slot") + 1))
-      .repartition(nPart, col("_route"))
-      .drop("_slot", "_route")
+  private[graft] def routeByBucket(df: DataFrame): DataFrame = {
+    val tokens = routeTokens(PredBuckets)
+    df.withColumn("_route", element_at(array(tokens.toIndexedSeq.map(lit(_)): _*),
+        (col("pred_bucket") + 1).cast("int")))
+      .repartition(PredBuckets, col("_route"))
+      .drop("_route")
   }
 
   /** [[writeTriples]]'s layout committed through [[graft.table
     * .SnapTable]] — the batch triples path on the SAME commit protocol
     * as the streaming [[StreamingPipeline.startSnap]], replacing the
     * directory-swap journal that [[compactTriples]] needs on the raw
-    * layout. Same salted pred-bucket shape (deterministic, skew-proof),
-    * but the bucket lands in per-file manifest bounds instead of
-    * partition directories: [[routeByBucket]] gives every staged file
-    * exactly one bucket value (lo == hi — a point, so
+    * layout. Same pred-bucket shape, but the bucket lands in per-file
+    * manifest bounds instead of partition directories:
+    * [[routeByBucket]] writes one file per non-empty bucket, holding
+    * exactly that bucket value (lo == hi — a point, so
     * [[readTriplesSnap]]'s bucket pruning reads only the queried
-    * bucket's files, ~1/PredBuckets of the table) with head-predicate
-    * skew spread over `filesPerBucket` files. Readers prune
+    * bucket's file, ~1/PredBuckets of the table). Readers prune
     * manifest-side before Spark lists anything, appends/overwrites are
     * atomic manifest commits, and compaction is a snapshot-isolated
     * [[graft.table.SnapTable.rewrite]] — concurrent readers keep a
@@ -256,13 +251,10 @@ object Pipeline {
     */
   def writeTriplesSnap(ts: Dataset[TripleRow], tableRoot: String,
                        append: Boolean = false,
-                       watermark: Option[String] = None,
-                       filesPerBucket: Int = 4): graft.table.SnapTable.Snapshot = {
+                       watermark: Option[String] = None): graft.table.SnapTable.Snapshot = {
     val spark = ts.sparkSession
     val df = routeByBucket(
-      ts.toDF().withColumn("pred_bucket",
-        pmod(xxhash64(col("pred")), lit(PredBuckets))),
-      filesPerBucket)
+      ts.toDF().withColumn("pred_bucket", pmod(xxhash64(col("pred")), lit(PredBuckets))))
     // clusterFiles = -1: keep the exact one-bucket-per-partition
     // routing (point bounds) instead of letting the stage re-cluster
     // by range and undo it
@@ -310,7 +302,7 @@ object Pipeline {
     if (victims.isEmpty) return None
     graft.table.SnapTable.rewrite(spark, tableRoot,
       e => victims(e.path),
-      routeByBucket(_, 1), // one file per bucket, point bounds preserved
+      routeByBucket, // one file per bucket, point bounds preserved
       statsCol = Some("pred_bucket"), clusterFiles = -1)
   }
 

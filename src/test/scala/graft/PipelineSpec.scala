@@ -205,9 +205,13 @@ class PipelineSpec extends AnyFunSuite {
     val snapFiles = graft.table.SnapTable.snapshot(spark, s"$base/snap").get.files
     assert(snapFiles.forall(e => e.lo.isDefined && e.lo == e.hi),
       snapFiles.map(e => (e.lo, e.hi)).mkString(", "))
-    val bktFiles = snapFiles.filter(_.lo.get.toInt == bkt)
-    assert(bktFiles.nonEmpty && bktFiles.size <= 4, // filesPerBucket default
-      s"bucket $bkt holds ${bktFiles.size} files")
+    // exactly one file per non-empty bucket, so a fresh table has
+    // nothing for compaction to fold
+    val nonEmpty = Pipeline.readTriplesSnap(spark, s"$base/snap")
+      .select("pred_bucket").distinct().count()
+    assert(snapFiles.groupBy(_.lo).forall(_._2.size == 1) && snapFiles.size == nonEmpty,
+      snapFiles.groupBy(_.lo).map { case (b, fs) => s"$b: ${fs.size}" }.mkString(", "))
+    assert(Pipeline.compactTriplesSnap(spark, s"$base/snap").isEmpty)
     // appends accumulate small files; snapshot compaction folds them
     // with identical content and the pre-compaction snapshot intact
     for (k <- 0 until 2) {
@@ -232,6 +236,22 @@ class PipelineSpec extends AnyFunSuite {
     // time travel to the pre-append snapshot still reproduces run 1
     assert(Pipeline.readTriplesSnap(spark, s"$base/snap", asOf = Some(s1.id)).count() ==
       spark.read.parquet(s"$base/legacy").count())
+  }
+
+  test("failFast = false skips and counts non-fatal doc errors; interrupts still fail the job") {
+    val dict = Pipeline.broadcastDict(spark)
+    val docs = SynthCorpus.corpus(spark, 8)
+    val errors = spark.sparkContext.longAccumulator("triple-errors")
+    val rows = Pipeline.triples(docs, dict, _ => throw new RuntimeException("bad label"),
+      failFast = false, errorCounter = Some(errors)).count()
+    assert(rows == 0L && errors.value == 8L, s"rows=$rows errors=${errors.value}")
+    val e = intercept[org.apache.spark.SparkException] {
+      Pipeline.triples(docs, dict, _ => throw new InterruptedException("task killed"),
+        failFast = false).count()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.isInstanceOf[InterruptedException] ||
+        String.valueOf(c.getMessage).contains("java.lang.InterruptedException")), e)
   }
 
   test("sidecar compaction: fewer files, same resume answer, crash-shaped leftovers tolerated") {

@@ -59,8 +59,7 @@ class PlanSpec extends AnyFunSuite {
     val routed = Pipeline.routeByBucket(
       Pipeline.triples(docs, dict).toDF()
         .withColumn("pred_bucket",
-          pmod(xxhash64(col("pred")), lit(Pipeline.PredBuckets))),
-      2)
+          pmod(xxhash64(col("pred")), lit(Pipeline.PredBuckets))))
     val p = routed.queryExecution.executedPlan.toString
     // one hash repartition on the route token — never a range exchange
     // (sampled boundaries would straddle buckets) and never a sort
