@@ -1,6 +1,6 @@
 package graft
 
-import graft.annotate.{Annotator, CsvwReader, JsonLd}
+import graft.annotate.{Annotator, CsvwReader, DocMeta, JsonLd}
 import graft.ingest.{Doc, SpanCodec}
 import graft.link.UnitDict
 import graft.rdf.{Term, TripleExpand}
@@ -28,8 +28,10 @@ final case class MetadataRow(doc_id: String, jsonld: String)
   *    the pred-bucket repartition for the triples table (one shuffle
   *    partition, so one file, per bucket — deterministic, no rand())
   *    and the global range-sort for the canonical N-Triples text sink.
-  *  - Resume: left_anti join of docs against already-materialized doc_ids
-  *    (broadcast when small; shuffle-hash otherwise via AQE).
+  *  - Resume: every table is a [[graft.table.SnapTable]], so a commit is
+  *    atomic and [[resumeFilter]] is one left_anti join of docs against
+  *    the committed doc_ids (broadcast when small; shuffle-hash otherwise
+  *    via AQE).
   */
 object Pipeline {
 
@@ -65,10 +67,27 @@ object Pipeline {
     }
   }
 
-  /** Stage B-E: full triple expansion per doc. Narrow. With
+  /** Stage E for one document, under the failure policy every stage
+    * B-E entry shares: `doc` yields the document's metadata (annotated,
+    * or read from supplied JSON-LD) and its text lines. With
     * `failFast = false` a pathological document cannot kill a
-    * 1000-executor job: it is skipped and counted in the accumulator.
+    * 1000-executor job: a non-fatal error skips it and is counted in
+    * `errorCounter`; fatal errors and interrupts still fail the task.
     */
+  private def expandRows(includeProv: Boolean, failFast: Boolean,
+                         errorCounter: Option[org.apache.spark.util.LongAccumulator])(
+                          doc: => (DocMeta, IndexedSeq[String])): Vector[TripleRow] =
+    try {
+      val (meta, lines) = doc
+      TripleExpand.expandDoc(meta, lines, includeProv)
+        .map(t => TripleRow(meta.id, t.subj, t.pred, t.obj))
+    } catch {
+      case scala.util.control.NonFatal(_) if !failFast =>
+        errorCounter.foreach(_.add(1))
+        Vector.empty
+    }
+
+  /** Stage B-E: full triple expansion per doc. Narrow. */
   def triples(docs: Dataset[Doc], dict: Broadcast[UnitDict],
               encodingOf: String => String = _ => "utf-8",
               includeProv: Boolean = true,
@@ -76,15 +95,9 @@ object Pipeline {
               errorCounter: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[TripleRow] = {
     import docs.sparkSession.implicits._
     docLines(docs).flatMap { case (id, ls) =>
-      try {
+      expandRows(includeProv, failFast, errorCounter) {
         val lines = ls.toIndexedSeq
-        val meta = Annotator.annotate(id, lines, encodingOf(id), dict.value)
-        TripleExpand.expandDoc(meta, lines, includeProv)
-          .map(t => TripleRow(id, t.subj, t.pred, t.obj))
-      } catch {
-        case scala.util.control.NonFatal(_) if !failFast =>
-          errorCounter.foreach(_.add(1))
-          Vector.empty
+        (Annotator.annotate(id, lines, encodingOf(id), dict.value), lines)
       }
     }
   }
@@ -101,15 +114,9 @@ object Pipeline {
                       errorCounter: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[TripleRow] = {
     import docs.sparkSession.implicits._
     docs.flatMap { case (d, enc) =>
-      try {
+      expandRows(includeProv, failFast, errorCounter) {
         val lines = SpanCodec.lines(d.spans)
-        val meta = Annotator.annotate(d.doc_id, lines, enc, dict.value)
-        TripleExpand.expandDoc(meta, lines, includeProv)
-          .map(t => TripleRow(d.doc_id, t.subj, t.pred, t.obj))
-      } catch {
-        case scala.util.control.NonFatal(_) if !failFast =>
-          errorCounter.foreach(_.add(1))
-          Vector.empty
+        (Annotator.annotate(d.doc_id, lines, enc, dict.value), lines)
       }
     }
   }
@@ -128,15 +135,9 @@ object Pipeline {
                           errorCounter: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[TripleRow] = {
     import rows.sparkSession.implicits._
     rows.flatMap { case (metaJson, csvText) =>
-      try {
+      expandRows(includeProv, failFast, errorCounter) {
         val meta = CsvwReader.read(metaJson)
-        val lines = SpanCodec.lines(SpanCodec.encode(meta.id, csvText).spans)
-        TripleExpand.expandDoc(meta, lines, includeProv)
-          .map(t => TripleRow(meta.id, t.subj, t.pred, t.obj))
-      } catch {
-        case scala.util.control.NonFatal(_) if !failFast =>
-          errorCounter.foreach(_.add(1))
-          Vector.empty
+        (meta, SpanCodec.lines(SpanCodec.encode(meta.id, csvText).spans))
       }
     }
   }
@@ -161,39 +162,7 @@ object Pipeline {
     }.count()
   }
 
-  /** Bucketed materialization of a triple/metadata table: downstream
-    * analytics that repeatedly join on the bucket column (triples ↔
-    * triples, triples ↔ metadata, entity-centric rollups) read
-    * co-located buckets on both sides and skip the shuffle entirely —
-    * at 100 TB the single biggest repeated-join saving. PlanSpec pins
-    * the no-Exchange join plan.
-    */
-  def writeBucketed(df: DataFrame, tableName: String, path: String,
-                    bucketCol: String = "subj", buckets: Int = 64): Unit =
-    df.write.format("parquet")
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .option("path", path)
-      .mode(SaveMode.Overwrite)
-      .saveAsTable(tableName)
-
   val PredBuckets = 32
-  val DocSalt = 64
-
-  /** Materialize the triples table: parquet partitioned by predicate
-    * bucket, salted by doc hash against head-predicate skew (rdf:type,
-    * oa:hasBody dominate). Deterministic (no rand) -> identical output
-    * across retries and cluster sizes.
-    */
-  def writeTriples(ts: Dataset[TripleRow], outDir: String,
-                   mode: SaveMode = SaveMode.Overwrite): Unit = {
-    ts.withColumn("pred_bucket", pmod(xxhash64(col("pred")), lit(PredBuckets)))
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(DocSalt)))
-      .repartition(col("pred_bucket"), col("salt"))
-      .drop("salt")
-      .write.mode(mode)
-      .partitionBy("pred_bucket")
-      .parquet(outDir)
-  }
 
   /** Tokens that make hash repartitioning EXACT: `tokens(p)` is a long
     * whose Murmur3 partition assignment under `repartition(nPart, _)`
@@ -233,21 +202,19 @@ object Pipeline {
       .drop("_route")
   }
 
-  /** [[writeTriples]]'s layout committed through [[graft.table
-    * .SnapTable]] — the batch triples path on the SAME commit protocol
-    * as the streaming [[StreamingPipeline.startSnap]], replacing the
-    * directory-swap journal that [[compactTriples]] needs on the raw
-    * layout. Same pred-bucket shape, but the bucket lands in per-file
-    * manifest bounds instead of partition directories:
+  /** Materialize the triples table as a [[graft.table.SnapTable]] —
+    * the one triples layout, written by the batch [[RunPipeline]] and
+    * the streaming [[StreamingPipeline.startSnap]] alike. Rows carry a
+    * `pred_bucket` column (xxhash64 of pred mod [[PredBuckets]]), and
     * [[routeByBucket]] writes one file per non-empty bucket, holding
-    * exactly that bucket value (lo == hi — a point, so
+    * exactly that bucket value (lo == hi in the manifest — a point, so
     * [[readTriplesSnap]]'s bucket pruning reads only the queried
     * bucket's file, ~1/PredBuckets of the table). Readers prune
-    * manifest-side before Spark lists anything, appends/overwrites are
-    * atomic manifest commits, and compaction is a snapshot-isolated
-    * [[graft.table.SnapTable.rewrite]] — concurrent readers keep a
-    * consistent view, crash at any point leaves only orphan stage
-    * files (swept by expire), never a torn table.
+    * manifest-side before Spark lists anything; appends and overwrites
+    * are atomic manifest commits, so a crash at any point leaves only
+    * orphan stage files (swept by expire), never a torn table, and
+    * [[resumeFilter]] needs no reconcile pass. `watermark` records the
+    * writer's progress in the same commit as its rows.
     */
   def writeTriplesSnap(ts: Dataset[TripleRow], tableRoot: String,
                        append: Boolean = false,
@@ -289,9 +256,8 @@ object Pipeline {
     * buckets that accumulated >= `minFilesPerBucket` small files (from
     * appends) back into the one-file-per-bucket shape. Readers of the
     * pre-compaction snapshot are untouched; a concurrent append simply
-    * wins or loses the commit CAS and retries. This subsumes
-    * [[compactTriples]]'s pending-manifest journal entirely on the
-    * Snap-backed path.
+    * wins or loses the commit CAS and retries, and a crash mid-rewrite
+    * leaves the old snapshot current ([[graft.table.SnapTable.rewrite]]).
     */
   def compactTriplesSnap(spark: SparkSession, tableRoot: String,
                          minFilesPerBucket: Int = 4): Option[graft.table.SnapTable.Snapshot] = {
@@ -371,312 +337,45 @@ object Pipeline {
       watermark = watermark, exactStats = false)
   }
 
-  /** Snapshot-commit sidecar dir under the triples table. */
-  private def commitsDir(triplesDir: String) = triplesDir + "_doc_commits"
-
-  /** Record completed doc_ids AFTER a successful triples write — the
-    * snapshot-commit half of resume. One tiny parquet append per run
-    * (one row per DOC, not per triple): at 10^12 docs the resume
-    * anti-join reads this sidecar, never the 500x-larger triple table.
-    *
-    * Write-then-commit is NOT atomic across the two directories: a
-    * crash between them (or an at-least-once foreachBatch replay)
-    * leaves committed triples with no sidecar row, and a parquet
-    * re-append would DUPLICATE those rows. [[resumeFilter]]'s default
-    * reconcile pass closes exactly that window (and self-heals the
-    * sidecar); periodic [[compactCommits]] keeps the sidecar a handful
-    * of files instead of one-per-micro-batch.
+  /** Resume: the `docs` whose rows are not yet committed to the
+    * [[graft.table.SnapTable]] at `tableRoot` (a left-anti join against
+    * its committed doc_ids; no distinct, the anti-join tolerates
+    * duplicate ids). A commit is atomic, so a crashed write left nothing
+    * behind to reconcile: its docs are simply absent and run again. A
+    * doc that produced no rows is never recorded and also runs again,
+    * which again adds nothing. `docs` unchanged when nothing is
+    * committed yet.
     */
-  def commitDocIds(docs: Dataset[Doc], triplesDir: String,
-                   mode: SaveMode = SaveMode.Append): Unit = {
-    import docs.sparkSession.implicits._
-    docs.map(_.doc_id).toDF("doc_id")
-      .write.mode(mode).parquet(commitsDir(triplesDir))
-  }
-
-  /** One-time sidecar reconcile: append to the sidecar any doc_ids
-    * present in the triples table but missing from it — the
-    * writeTriples -> commitDocIds crash window. [[resumeFilter]] with
-    * `reconcile = true` performs the same heal inline; this standalone
-    * form is for callers that afterwards want the CHEAP per-batch
-    * sidecar-only filter ([[StreamingPipeline.startBucketed]] runs it
-    * once at stream start instead of paying a table-wide doc_id scan
-    * per micro-batch).
-    */
-  def healSidecar(spark: SparkSession, triplesDir: String): Unit = {
-    val sidecar =
-      try Some(spark.read.parquet(commitsDir(triplesDir)).select("doc_id"))
-      catch { case _: Exception => None }
-    val table =
-      try Some(spark.read.parquet(triplesDir).select("doc_id"))
-      catch { case _: Exception => None }
-    (sidecar, table) match {
-      case (Some(s), Some(t)) =>
-        val missing = t.join(s.withColumnRenamed("doc_id", "done_id"),
-          t("doc_id") === col("done_id"), "left_anti").distinct()
-        if (!missing.isEmpty)
-          missing.write.mode(SaveMode.Append).parquet(commitsDir(triplesDir))
-      case (None, Some(t)) => // no sidecar at all: seed it from the table
-        t.distinct().write.mode(SaveMode.Append).parquet(commitsDir(triplesDir))
-      case _ => ()
-    }
-  }
-
-  /** Checkpoint resume: drop docs whose triples are already
-    * materialized.
-    *
-    * `reconcile = true` (default — crash-consistent): docs are dropped
-    * if they appear in the commit sidecar OR already have triples in
-    * the table, so a crash between [[writeTriples]] and
-    * [[commitDocIds]] can never re-append a doc's triples. The
-    * table-side doc_ids found missing from the sidecar are appended to
-    * it (self-heal), so the reconcile scan re-reads only the
-    * column-pruned doc_id column once per recovery, not the payload.
-    *
-    * `reconcile = false` (fast path): sidecar only — one tiny scan at
-    * any corpus size. Safe when the previous run is known to have
-    * completed its commit step (clean shutdown, or a catalog with
-    * atomic multi-table commits such as Iceberg).
-    */
-  def resumeFilter(docs: Dataset[Doc], spark: SparkSession,
-                   triplesDir: String, reconcile: Boolean = true): Dataset[Doc] = {
+  def resumeFilter(docs: Dataset[Doc], tableRoot: String): Dataset[Doc] = {
+    val spark = docs.sparkSession
     import spark.implicits._
-    val sidecar =
-      try Some(spark.read.parquet(commitsDir(triplesDir)).select("doc_id"))
-      catch { case _: Exception => None }
-    // raw (duplicate-bearing) doc_id column: the left_anti probes below
-    // tolerate duplicate done-ids, so the reconcile scan never pays a
-    // corpus-wide distinct — only the (normally tiny) `missing` set is
-    // deduplicated before being appended to the sidecar
-    val table =
-      if (reconcile || sidecar.isEmpty)
-        try Some(spark.read.parquet(triplesDir).select("doc_id"))
-        catch { case _: Exception => None }
-      else None
-    // self-heal the sidecar: ids whose triples are committed but were
-    // never recorded (crash window / replayed micro-batch)
-    (sidecar, table) match {
-      case (Some(s), Some(t)) =>
-        val missing = t.join(s.withColumnRenamed("doc_id", "done_id"),
-          t("doc_id") === col("done_id"), "left_anti").distinct()
-        if (!missing.isEmpty)
-          missing.write.mode(SaveMode.Append).parquet(commitsDir(triplesDir))
-      case _ => ()
-    }
-    // no distinct: the left_anti probe tolerates duplicate done-ids, and
-    // a corpus-wide distinct would add a full shuffle to every resume
-    val done = (sidecar, table) match {
-      case (Some(s), Some(t)) => s.union(t)
-      case (Some(s), None)    => s
-      case (None, Some(t))    => t
-      case (None, None)       => return docs
-    }
-    docs.join(done.withColumnRenamed("doc_id", "done_id"),
+    if (graft.table.SnapTable.snapshot(spark, tableRoot).forall(_.files.isEmpty)) docs
+    else docs.join(
+        graft.table.SnapTable.read(spark, tableRoot).select(col("doc_id").as("done_id")),
         docs("doc_id") === col("done_id"), "left_anti")
       .as[Doc]
-  }
-
-  /** Compact the triples table's data files: streaming/resumed appends
-    * leave one small file per micro-batch in EVERY pred_bucket
-    * partition; at 10^12 docs downstream scans pay the file-listing +
-    * per-file-footer overhead forever. Rewrites each partition's
-    * SNAPSHOTTED data files to ~`targetBytesPerFile` files (split count
-    * derived from the listed file sizes — no extra counting pass),
-    * sorted by (subj, pred, obj) for better column compression and
-    * row-group pruning.
-    *
-    * Concurrent-writer safety: the compactor reads EXACTLY the files it
-    * listed (`spark.read.parquet(files*)`, never the live directory),
-    * moves the compacted replacements in under stamp-unique names, and
-    * deletes ONLY the snapshotted originals — a file appended to the
-    * partition by a concurrent streaming `foreachBatch` at ANY point is
-    * never read, never rewritten, and never deleted (pinned by
-    * StreamingSpec's mid-compaction-append case via `midCompactHook`).
-    *
-    * Crash safety: each partition's swap is journaled by a manifest
-    * (written atomically via create-temp + rename) that names the
-    * snapshotted originals and the expected compacted-file count. On
-    * the next invocation the repair pass completes or rolls back any
-    * interrupted swap: all compacted files present -> finish (delete
-    * remaining originals); some missing -> roll back (delete the moved
-    * compacted files; originals are untouched because deletion only
-    * ever starts after the move-in completes). Duplicate rows are
-    * therefore never left behind by a crash.
-    *
-    * Isolation caveat (document, not a bug): a concurrent READER that
-    * lists the partition between move-in and delete-originals sees both
-    * copies; run compaction off-peak or use a snapshot-isolated table
-    * format (Iceberg RewriteFiles — this is its MERGE-free parquet
-    * mirror). One compactor at a time (stamps keep two runs from
-    * deleting each other's files, but both may rewrite the same
-    * originals).
-    */
-  def compactTriples(spark: SparkSession, triplesDir: String,
-                     targetBytesPerFile: Long = 128L * 1024 * 1024,
-                     minFilesToCompact: Int = 4,
-                     midCompactHook: String => Unit = _ => ()): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(triplesDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    def isData(name: String) = !name.startsWith("_") && !name.startsWith(".")
-    // ---- repair pass: finish or roll back any interrupted swap -------
-    for (s <- fs.listStatus(root)) {
-      val name = s.getPath.getName
-      if (name.startsWith(".compact_pending-") && name.endsWith(".txt")) {
-        val lines = {
-          val in = fs.open(s.getPath)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        }
-        val partName = lines(0); val stamp = lines(1); val n = lines(2).toInt
-        val originals = lines.drop(3)
-        val live = new Path(root, partName)
-        val moved =
-          if (fs.exists(live))
-            fs.listStatus(live).count(f => f.isFile &&
-              f.getPath.getName.startsWith(s"compact-$stamp-"))
-          else 0
-        if (moved == n) // move-in completed: finish the interrupted delete
-          originals.foreach(o => fs.delete(new Path(live, o), false))
-        else if (fs.exists(live)) // crash mid-move: roll back our files
-          fs.listStatus(live).filter(f => f.isFile &&
-              f.getPath.getName.startsWith(s"compact-$stamp-"))
-            .foreach(f => fs.delete(f.getPath, false))
-        fs.delete(s.getPath, false)
-      } else if (s.isDirectory && name.startsWith(".") && name.contains(".compact_tmp")) {
-        fs.delete(s.getPath, true) // incomplete compacted copy (pre-manifest crash)
-      } else if (s.isDirectory && name.startsWith(".pred_bucket=") && name.endsWith(".trash")) {
-        // legacy (pre-manifest) swap leftovers from older versions
-        val live = new Path(root, name.stripPrefix(".").stripSuffix(".trash"))
-        if (!fs.exists(live)) fs.rename(s.getPath, live)
-        else fs.delete(s.getPath, true)
-      }
-    }
-    // ---- compaction pass ---------------------------------------------
-    val parts = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("pred_bucket="))
-    for (part <- parts) {
-      val live = part.getPath
-      // the snapshot: exactly these files are read, replaced, deleted
-      val files = fs.listStatus(live)
-        .filter(f => f.isFile && isData(f.getPath.getName))
-      if (files.length >= minFilesToCompact) {
-        val df = spark.read.parquet(files.map(_.getPath.toString): _*)
-        // split count from the (already listed) file bytes — no extra
-        // counting pass over the partition
-        val bytes = files.map(_.getLen).sum
-        val nParts = math.max(1L, bytes / targetBytesPerFile).toInt
-        val stamp = java.util.UUID.randomUUID().toString.take(8)
-        val tmp = new Path(root, "." + live.getName + s".compact_tmp-$stamp")
-        fs.delete(tmp, true)
-        df.repartitionByRange(nParts, col("subj"), col("pred"), col("obj"))
-          .sortWithinPartitions("subj", "pred", "obj")
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        val compacted = fs.listStatus(tmp)
-          .filter(f => f.isFile && isData(f.getPath.getName)).map(_.getPath)
-        // journal the swap BEFORE touching the live dir (atomic rename)
-        val manifest = new Path(root, s".compact_pending-$stamp.txt")
-        val manifestTmp = new Path(root, s".compact_pending-$stamp.txt.tmp")
-        val out = fs.create(manifestTmp, true)
-        try out.write((Seq(live.getName, stamp, compacted.length.toString) ++
-          files.map(_.getPath.getName)).mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        require(fs.rename(manifestTmp, manifest),
-          s"compactTriples: cannot journal $manifest")
-        midCompactHook(live.getName) // test injection point: concurrent append
-        compacted.zipWithIndex.foreach { case (f, i) =>
-          require(fs.rename(f, new Path(live, s"compact-$stamp-$i.parquet")),
-            s"compactTriples: cannot move in $f")
-        }
-        // delete ONLY the snapshotted originals — concurrent appends survive
-        files.foreach(f => fs.delete(f.getPath, false))
-        fs.delete(manifest, false)
-        fs.delete(tmp, true)
-      }
-    }
-  }
-
-  /** Compact the doc-commit sidecar: the streaming writer appends one
-    * tiny parquet file per micro-batch ([[StreamingPipeline
-    * .startBucketed]]), so at 10^12 docs the resume anti-join's
-    * file-listing would dominate. Rewrites the sidecar as sorted,
-    * range-partitioned files of ~`targetRowsPerFile` ids.
-    *
-    * Crash-safe without a rename-atomic filesystem: (1) snapshot the
-    * current file list, (2) write the compacted copy to a temp dir,
-    * (3) move the compacted files IN, (4) delete the snapshotted
-    * originals. After any prefix of these steps the directory holds a
-    * SUPERSET of the ids committed before the snapshot (duplicate ids
-    * are harmless to the anti-join), and files appended concurrently
-    * after the snapshot are never touched.
-    */
-  def compactCommits(spark: SparkSession, triplesDir: String,
-                     targetRowsPerFile: Long = 32L * 1024 * 1024): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(commitsDir(triplesDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
-    def isData(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    val before = fs.listStatus(dir).filter(f => f.isFile && isData(f.getPath)).map(_.getPath)
-    if (before.length <= 1) return
-    val ids = spark.read.parquet(before.map(_.toString): _*)
-      .select("doc_id").distinct()
-    val parts = math.max(1L, ids.count() / targetRowsPerFile).toInt
-    val tmp = new Path(commitsDir(triplesDir) + "_compact_tmp")
-    fs.delete(tmp, true)
-    ids.repartitionByRange(parts, col("doc_id")).sortWithinPartitions("doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    fs.listStatus(tmp).filter(f => f.isFile && isData(f.getPath))
-      .zipWithIndex.foreach { case (f, i) =>
-        fs.rename(f.getPath, new Path(dir, s"compact-$stamp-$i.parquet"))
-      }
-    before.foreach(p => fs.delete(p, false))
-    fs.delete(tmp, true)
   }
 }
 
 /** Structured Streaming mode: the per-doc pipeline is stateless across
   * documents (each is self-contained), so incremental processing is the
-  * same narrow flatMap under a streaming source — no watermarks or
-  * stateful operators needed (SURVEY.md §2.9). Checkpointing gives
-  * exactly-once into the triples table.
+  * same narrow flatMap under a streaming source — no stateful operators
+  * needed (SURVEY.md §2.9). Each micro-batch commits to the same
+  * triples table layout as the batch [[Pipeline.writeTriplesSnap]], so
+  * a stream, a batch backfill and `RunPipeline --resume` all work on
+  * one table.
   */
 object StreamingPipeline {
   import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
-  /** Start a stream: parquet docs dir -> triples parquet sink. */
-  def start(spark: SparkSession, docsDir: String, outDir: String,
-            checkpointDir: String,
-            dict: org.apache.spark.broadcast.Broadcast[graft.link.UnitDict]): StreamingQuery = {
-    implicit val docEnc = Encoders.product[graft.ingest.Doc]
-    implicit val tEnc = Encoders.product[TripleRow]
-    val docSchema = Encoders.product[graft.ingest.Doc].schema
-    val docs: Dataset[graft.ingest.Doc] = spark.readStream
-      .schema(docSchema).parquet(docsDir).as[graft.ingest.Doc]
-    val triples = docs.flatMap { d =>
-      val lines = graft.ingest.SpanCodec.lines(d.spans)
-      val meta = graft.annotate.Annotator.annotate(d.doc_id, lines, "utf-8", dict.value)
-      graft.rdf.TripleExpand.expandDoc(meta, lines)
-        .map(t => TripleRow(d.doc_id, t.subj, t.pred, t.obj))
-    }
-    triples.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", outDir)
-      .start()
-  }
-
   /** Streaming triples into a [[graft.table.SnapTable]]: one manifest
     * commit per micro-batch makes DATA and PROGRESS atomic — the
     * north star's "resumable from snapshot checkpoints" shape realized
-    * on the engine's own snapshot-manifest layer. Per-file `pred`
-    * bounds land in the manifest for predicate-pruned reads, and
-    * [[graft.table.SnapTable.rewrite]] compacts the accumulated small
+    * on the engine's own snapshot-manifest layer. Each batch appends
+    * through [[Pipeline.writeTriplesSnap]] (one file per pred bucket,
+    * point bounds for bucket-pruned reads), and
+    * [[Pipeline.compactTriplesSnap]] folds the accumulated per-batch
     * files with snapshot isolation.
     *
     * Exactly-once via an EPOCHED watermark `"epoch:batchId"`. Batch ids
@@ -767,24 +466,17 @@ object StreamingPipeline {
         if (epoch == cEpoch && id <= cBatch) {
           () // pure replay of a committed batch within this epoch
         } else {
-          val todo: Dataset[graft.ingest.Doc] =
-            if (epoch > cEpoch &&
-                SnapTable.snapshot(spark, tableRoot).exists(_.files.nonEmpty)) {
-              // first batch of a fresh checkpoint: old AND new files fold
-              // into it — doc-level anti-join against the committed table
-              import org.apache.spark.sql.functions.col
-              val seen = SnapTable.read(spark, tableRoot)
-                .select(col("doc_id")).distinct()
-              batch.join(seen, batch("doc_id") === seen("doc_id"), "left_anti")
-                .as[graft.ingest.Doc]
-            } else batch
+          // first batch of a fresh checkpoint: old AND new files fold
+          // into it — doc-level anti-join against the committed table
+          val todo =
+            if (epoch > cEpoch) Pipeline.resumeFilter(batch, tableRoot) else batch
           // persist: the expansion feeds BOTH the data append and the
           // per-batch metrics commit — without the pin it would run
           // twice per batch
-          val ts = Pipeline.triples(todo, dict).toDF().persist()
+          val ts = Pipeline.triples(todo, dict).persist()
           try {
-            SnapTable.append(spark, tableRoot, ts,
-              watermark = Some(s"$epoch:$id"), statsCol = Some("pred"))
+            Pipeline.writeTriplesSnap(ts, tableRoot, append = true,
+              watermark = Some(s"$epoch:$id"))
             // per-partition lineage metrics into <tableRoot>_metrics on
             // the SAME watermark protocol: replays skip on the metrics
             // table's own watermark exactly like data appends. A crash
@@ -796,9 +488,8 @@ object StreamingPipeline {
             val mRoot = tableRoot + "_metrics"
             val (mE, mB) = parseWm(SnapTable.lastWatermark(spark, mRoot))
             if (mE < epoch || (mE == epoch && mB < id)) {
-              implicit val tEnc = Encoders.product[TripleRow]
               Pipeline.writeMetricsSnap(
-                Pipeline.metrics(ts.as[TripleRow],
+                Pipeline.metrics(ts,
                   runId = s"$epoch:$id", stage = "stream-append"),
                 mRoot, watermark = Some(s"$epoch:$id"))
               ()
@@ -806,51 +497,6 @@ object StreamingPipeline {
           } finally ts.unpersist()
         }
         ()
-      }
-      .start()
-  }
-
-  /** Streaming into the SAME salted, pred-bucketed triples table layout
-    * as the batch [[Pipeline.writeTriples]], via foreachBatch, with the
-    * doc-commit sidecar appended per micro-batch — so a streaming
-    * ingest, a batch backfill, and `--resume` all interoperate on one
-    * table.
-    *
-    * Exactly-once in effect under at-least-once foreachBatch delivery
-    * (`resume = true`, default): every batch is anti-joined against the
-    * doc-commit sidecar before writing, so a batch replayed after a
-    * crash (checkpoint behind the data writes) re-appends nothing.
-    * The one window the sidecar filter alone cannot see — a crash
-    * BETWEEN writeTriples and commitDocIds — is closed by a single
-    * [[Pipeline.healSidecar]] pass at stream start (table doc_ids
-    * missing from the sidecar are appended to it before any batch
-    * runs); a failed foreachBatch terminates the query, so in-run
-    * replays always pass through a restart and hit that heal. Cost:
-    * one table-wide doc_id scan per START (not per batch) + one
-    * sidecar-sized anti-join per batch (keep it small with
-    * [[Pipeline.compactCommits]]). `resume = false` restores the raw
-    * append path for single-run bounded backfills where replays are
-    * acceptable or impossible.
-    */
-  def startBucketed(spark: SparkSession, docsDir: String, outDir: String,
-                    checkpointDir: String,
-                    dict: org.apache.spark.broadcast.Broadcast[graft.link.UnitDict],
-                    resume: Boolean = true): StreamingQuery = {
-    implicit val docEnc = Encoders.product[graft.ingest.Doc]
-    val docSchema = Encoders.product[graft.ingest.Doc].schema
-    if (resume) Pipeline.healSidecar(spark, outDir)
-    val docs: Dataset[graft.ingest.Doc] = spark.readStream
-      .schema(docSchema).parquet(docsDir).as[graft.ingest.Doc]
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[graft.ingest.Doc], _: Long) =>
-        val todo =
-          if (resume) Pipeline.resumeFilter(batch, spark, outDir, reconcile = false)
-          else batch
-        val ts = Pipeline.triples(todo, dict)
-        Pipeline.writeTriples(ts, outDir, org.apache.spark.sql.SaveMode.Append)
-        Pipeline.commitDocIds(todo, outDir)
       }
       .start()
   }

@@ -1,16 +1,23 @@
 package graft
 
-import graft.ingest.{Doc, Fixtures, SpanCodec, SynthCorpus}
+import graft.ingest.{Doc, Fixtures, SynthCorpus}
+import graft.link.UnitDict
+import graft.table.SnapTable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** spark-submit entry: run the KG pipeline end-to-end.
   *
   *   runMain graft.RunPipeline <fixtures|synth:N> <outDir> [--resume] [--compact]
   *
-  * Writes: <outDir>/metadata (parquet), <outDir>/triples (parquet,
-  * pred-bucket partitioned), <outDir>/ntriples (sorted text),
-  * <outDir>/metrics (a [[graft.table.SnapTable]] — read with
-  * `SnapTable.read`; atomic watermarked commits per run).
+  * Writes three [[graft.table.SnapTable]]s — read them with
+  * `SnapTable.read`: <outDir>/metadata (one JSON-LD row per doc),
+  * <outDir>/triples ([[Pipeline.writeTriplesSnap]]'s one file per pred
+  * bucket) and <outDir>/metrics (watermarked by run) — plus
+  * <outDir>/ntriples (sorted text). Every table commit is atomic.
+  * `--resume` appends only the docs each table has not committed yet
+  * ([[Pipeline.resumeFilter]]); `--compact` folds buckets that appends
+  * split into several files ([[Pipeline.compactTriplesSnap]]).
   */
 object RunPipeline {
 
@@ -26,21 +33,35 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     val what = args.headOption.getOrElse("fixtures")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_out"
-    val resume = args.contains("--resume")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-
-    val dict = Pipeline.broadcastDict(spark)
-    val (docs0, encodingOf): (Dataset[Doc], String => String) = what match {
+    val (docs, encodingOf): (Dataset[Doc], String => String) = what match {
       case s if s.startsWith("synth:") =>
         (SynthCorpus.corpus(spark, s.drop(6).toLong), (_: String) => "utf-8")
       case _ =>
         val ds = spark.createDataset(Fixtures.Names.map(Fixtures.doc))
         (ds, (id: String) => Fixtures.Encodings.getOrElse(id, "utf-8"))
     }
-    val docs = if (resume) Pipeline.resumeFilter(docs0, spark, s"$outDir/triples") else docs0
+    materialize(docs, encodingOf, Pipeline.broadcastDict(spark), outDir, runId = what,
+      resume = args.contains("--resume"), compact = args.contains("--compact"))
+    spark.stop()
+  }
+
+  /** Run stages B-E over `docs0` and commit the metadata, triples and
+    * metrics tables plus the sorted N-Triples text under `outDir`.
+    */
+  def materialize(docs0: Dataset[Doc], encodingOf: String => String,
+                  dict: Broadcast[UnitDict], outDir: String, runId: String,
+                  resume: Boolean, compact: Boolean): Unit = {
+    val spark = docs0.sparkSession
+    import spark.implicits._
+    // each table resumes against its own commits: a crash between the
+    // metadata and the triples commit re-runs only the triples
+    def todo(table: String) =
+      if (resume) Pipeline.resumeFilter(docs0, s"$outDir/$table") else docs0
+    val docs = todo("triples")
 
     val bad = Pipeline.spanInvariantViolations(docs)
     require(bad == 0, s"span invariant violated by $bad docs")
@@ -51,41 +72,31 @@ object RunPipeline {
       now
     }
     var tl = t0
-    Pipeline.metadata(docs, dict, encodingOf)
-      .write.mode(if (resume) "append" else "overwrite")
-      .parquet(s"$outDir/metadata")
+    val meta = Pipeline.metadata(todo("metadata"), dict, encodingOf).toDF()
+    if (resume) SnapTable.append(spark, s"$outDir/metadata", meta)
+    else SnapTable.overwrite(spark, s"$outDir/metadata", meta)
     tl = lap("metadata", tl)
-    val ts = Pipeline.triples(docs, dict, encodingOf)
-    Pipeline.writeTriples(ts, outDir + "/triples",
-      if (resume) org.apache.spark.sql.SaveMode.Append else org.apache.spark.sql.SaveMode.Overwrite)
-    // snapshot commit: record completed doc_ids (tiny) so a later
-    // --resume anti-joins the sidecar, not the triple table; a fresh
-    // (non-resume) run must not inherit stale commits
-    Pipeline.commitDocIds(docs, outDir + "/triples",
-      if (resume) org.apache.spark.sql.SaveMode.Append
-      else org.apache.spark.sql.SaveMode.Overwrite)
+    Pipeline.writeTriplesSnap(Pipeline.triples(docs, dict, encodingOf),
+      s"$outDir/triples", append = resume)
     tl = lap("triples-table", tl)
-    if (args.contains("--compact")) { // fold small append/micro-batch files
-      Pipeline.compactTriples(spark, s"$outDir/triples")
-      Pipeline.compactCommits(spark, s"$outDir/triples")
+    if (compact) { // fold small append files
+      Pipeline.compactTriplesSnap(spark, s"$outDir/triples")
       tl = lap("compact", tl)
     }
-    val tsOut = spark.read.parquet(s"$outDir/triples")
+    val tsOut = Pipeline.readTriplesSnap(spark, s"$outDir/triples")
+      .select($"doc_id", $"subj", $"pred", $"obj").as[TripleRow]
     // metrics commit through the snapshot layer: atomic, watermarked by
     // run id, snapshot-readable (SnapTable.read(outDir + "/metrics"))
     Pipeline.writeMetricsSnap(
-      Pipeline.metrics(tsOut.select($"doc_id", $"subj", $"pred", $"obj").as[TripleRow],
-        runId = what, stage = "materialize"),
-      s"$outDir/metrics", watermark = Some(what))
+      Pipeline.metrics(tsOut, runId = runId, stage = "materialize"),
+      s"$outDir/metrics", watermark = Some(runId))
     tl = lap("metrics", tl)
-    Pipeline.writeSortedNTriples(
-      tsOut.select($"doc_id", $"subj", $"pred", $"obj").as[TripleRow], s"$outDir/ntriples")
+    Pipeline.writeSortedNTriples(tsOut, s"$outDir/ntriples")
     tl = lap("ntriples-sorted", tl)
     val secs = (System.nanoTime() - t0) / 1e9
-    val nDocs = spark.read.parquet(s"$outDir/metadata").count()
+    val nDocs = SnapTable.read(spark, s"$outDir/metadata").count()
     val nTriples = tsOut.count()
     println(f"[pipeline] docs=$nDocs triples=$nTriples in $secs%.1f s " +
       f"(${nDocs / secs}%.1f docs/s)")
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** spark-submit entry for the snapshot-table streaming materialization
   * ([[StreamingPipeline.startSnap]]): stream a parquet docs directory
   * through the KG pipeline into a [[graft.table.SnapTable]], one
@@ -15,8 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * `synth:N` writes the deterministic synthetic corpus next to the
   * table first (self-contained demo/bench). `--compact` folds the
-  * accumulated per-batch files into sorted (subj,pred,obj) files via
-  * the snapshot-isolated [[graft.table.SnapTable.rewrite]];
+  * per-batch files of buckets that accumulated several back into one
+  * file per bucket ([[Pipeline.compactTriplesSnap]], snapshot-isolated);
   * `--expire K` retains only the newest K snapshots and GCs orphaned
   * data files. Prints one JSON line: snapshot id, watermark, rows,
   * files.
@@ -52,12 +50,7 @@ object RunSnapStream {
       val dict = Pipeline.broadcastDict(spark)
       StreamingPipeline.startSnap(spark, docsDir, tableRoot,
         s"${tableRoot}_ckpt", dict).awaitTermination()
-      if (args.contains("--compact"))
-        graft.table.SnapTable.rewrite(spark, tableRoot,
-          pick = _ => true,
-          rewriteAs = _.repartitionByRange(col("pred"), col("subj"))
-            .sortWithinPartitions("subj", "pred", "obj"),
-          statsCol = Some("pred"))
+      if (args.contains("--compact")) Pipeline.compactTriplesSnap(spark, tableRoot)
       expireK.foreach(k => graft.table.SnapTable.expire(spark, tableRoot, k))
       val snap = graft.table.SnapTable.snapshot(spark, tableRoot).get
       println(s"""{"metric":"snap_table","snapshot":${snap.id},""" +

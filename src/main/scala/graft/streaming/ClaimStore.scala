@@ -309,12 +309,10 @@ object ClaimStore {
                                shards: Int, persist: Boolean): Int = {
     val rp = new Path(root)
     val f = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(new Path(rp, "meta")) ||
-        (f.exists(rp) && f.listStatus(rp).exists(s =>
-          s.isDirectory && s.getPath.getName.startsWith("batch="))))
+    if (f.exists(new Path(rp, "meta")))
       throw new IllegalStateException(
-        s"claim root $root holds an UNSHARDED store (meta/ or legacy batch= " +
-          "dirs present) but was opened with Config.shards > 1 — refusing: " +
+        s"claim root $root holds an UNSHARDED store (meta/ present) but " +
+          "was opened with Config.shards > 1 — refusing: " +
           "its claims would be invisible and duplicates re-admitted")
     readShardMarker(f, shardMarkerPath(root)) match {
       case Some(n) if n != shards =>
@@ -417,109 +415,36 @@ object ClaimStore {
     }
 
   private def lastBatch1(spark: SparkSession, root: String): Option[Long] = {
-    ensureMigrated(spark, root)
+    guardUnsharded(spark, root)
     SnapTable.lastWatermark(spark, root).map(_.toLong)
   }
 
-  // ---- legacy layout migration -----------------------------------------
-  //
-  // Before the SnapTable move the claim domains were plain
-  // batch-partitioned parquet (`<root>/batch=N/...`, folded base at
-  // `batch=-1`). A checkpointed stream resumed across the upgrade must
-  // keep honoring those claims — silently ignoring them would re-admit
-  // every previously-claimed duplicate and break batch parity. On first
-  // touch of a root that still has legacy batch dirs, each legacy batch
-  // whose id is above the table watermark imports as a tagged append in
-  // batch order (the per-batch tags preserve the replay-exclusion rule;
-  // `batch=-1` sorts below every real batch, exactly its old contract),
-  // ending at the legacy watermark. The gate is the WATERMARK, never
-  // mere meta/ existence: a crash after the first imported batch leaves
-  // meta/ present with the import half done, and a restart must resume
-  // the remaining batches, not skip them. Claims are distinct'd and
-  // anti-joined against the already-imported table on the way in (the
-  // legacy layout's own crash caveats could leave a hash in two dirs;
-  // the table's claims-globally-distinct invariant must hold). Legacy
-  // dirs are left in place — the import is watermark-idempotent, and
-  // deleting user data on upgrade is not this layer's call.
-  // Single-streaming-writer contract for the WRITE path; concurrent
-  // READERS (monitoring threads calling lastBatch/seenFor) are safe:
-  // migration runs exactly once per root per JVM and every other
-  // caller BLOCKS on its completion (a mere putIfAbsent marker would
-  // let a second thread read a half-imported claim table).
-
-  private val migratedRoots =
+  // Layout cross-guard for an UNSHARDED open: a root previously used
+  // sharded (`shard-0/meta` present) must be refused, or its claims
+  // would be invisible and every duplicate re-admitted. Checked once
+  // per root per JVM — the memo keeps the filesystem probe off every
+  // later lastBatch/seenFor/fold call — and concurrent first callers
+  // block on the one check (a failed check is uncached, so a later
+  // open re-checks).
+  private val unshardedChecked =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[Unit]]()
 
-  private def ensureMigrated(spark: SparkSession, root: String): Unit = {
-    val task = migratedRoots.computeIfAbsent(root,
-      _ => new java.util.concurrent.FutureTask[Unit](() => doMigrate(spark, root)))
+  private def guardUnsharded(spark: SparkSession, root: String): Unit = {
+    val task = unshardedChecked.computeIfAbsent(root,
+      _ => new java.util.concurrent.FutureTask[Unit](() => {
+        val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (f.exists(new Path(shardRoot(root, 0), "meta")))
+          throw new IllegalStateException(
+            s"claim root $root holds a SHARDED store (shard-0/meta present) but " +
+              "was opened unsharded — refusing: pass the same Config.shards or " +
+              "its claims would be invisible and duplicates re-admitted")
+      }))
     task.run() // first caller executes; concurrent callers no-op here...
     try task.get() // ...and block on completion (or rethrow its failure)
     catch {
       case e: java.util.concurrent.ExecutionException =>
-        migratedRoots.remove(root, task) // a later touch may retry
-        throw new IllegalStateException(
-          s"legacy claim-sidecar migration failed for $root — claims from " +
-            "the old batch-partitioned layout could not be imported; refusing " +
-            "to continue without them (duplicates would be re-admitted)",
-          e.getCause)
-    }
-  }
-
-  private def doMigrate(spark: SparkSession, root: String): Unit = {
-    val rp = new Path(root)
-    val f = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // layout cross-guard: this root was previously used SHARDED
-    if (f.exists(new Path(shardRoot(root, 0), "meta")))
-      throw new IllegalStateException(
-        s"claim root $root holds a SHARDED store (shard-0/meta present) but " +
-          "was opened unsharded — refusing: pass the same Config.shards or " +
-          "its claims would be invisible and duplicates re-admitted")
-    if (!f.exists(rp)) return
-    val legacy = f.listStatus(rp)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(s => (s.getPath.getName.stripPrefix("batch=").toLong, s.getPath))
-      .sortBy(_._1)
-    if (legacy.isEmpty) return
-    // ONE watermark read up front, tracked through the loop (re-reading
-    // the manifest per legacy dir is O(batches) pointless round-trips
-    // on a one-time path); the import itself is watermark-idempotent so
-    // a crash mid-loop resumes exactly where the committed state says
-    var wm: Option[Long] = SnapTable.lastWatermark(spark, root).map(_.toLong)
-    // the hash column is whatever single column the legacy files hold
-    for ((b, dir) <- legacy) {
-      val hasData = f.listStatus(dir).exists(s => s.isFile &&
-        s.getPath.getName.endsWith(".parquet") &&
-        !s.getPath.getName.startsWith(".") && !s.getPath.getName.startsWith("_"))
-      if (hasData && !wm.exists(_ >= b)) {
-        val df = spark.read.parquet(dir.toString)
-        val hc = df.columns.head
-        val cur = df.select(col(hc)).distinct()
-        val imported = SnapTable.snapshot(spark, root) match {
-          case Some(s) if s.files.nonEmpty =>
-            cur.join(SnapTable.read(spark, root).select(col(hc)),
-              Seq(hc), "left_anti")
-          case _ => cur
-        }
-        SnapTable.append(spark, root, imported,
-          watermark = Some(b.toString), tag = Some(s"b:$b"),
-          exactStats = false)
-        wm = Some(b)
-      }
-    }
-    // trailing empty batches carry no claims but DO advance the
-    // watermark (appendClaims replay-skips on it)
-    val maxB = legacy.map(_._1).max
-    if (!wm.exists(_ >= maxB)) {
-      val hc = SnapTable.snapshot(spark, root)
-        .flatMap(_.files.headOption).map(e =>
-          spark.read.parquet(e.path).columns.head).getOrElse("h")
-      SnapTable.append(spark, root,
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(hc,
-              org.apache.spark.sql.types.StringType)))),
-        watermark = Some(maxB.toString), exactStats = false)
+        unshardedChecked.remove(root, task)
+        throw e.getCause
     }
   }
 
@@ -587,7 +512,7 @@ object ClaimStore {
   private def seenFor1(spark: SparkSession, root: String, batchHashes: DataFrame,
                        hCol: String, batchId: Long,
                        cfg: Config): Option[DataFrame] = {
-    ensureMigrated(spark, root)
+    guardUnsharded(spark, root)
     val snap = SnapTable.snapshot(spark, root).getOrElse(return None)
     val recent = snap.files.filter(e => batchOf(e).exists(_ < batchId))
     val base = snap.files.filter(isBase)
@@ -729,7 +654,7 @@ object ClaimStore {
   private def fold1(spark: SparkSession, root: String, hCol: String,
                     upToBatch: Long, cfg: Config): Unit = {
     if (upToBatch < 0) return
-    ensureMigrated(spark, root)
+    guardUnsharded(spark, root)
     val snap = SnapTable.snapshot(spark, root).getOrElse(return)
     val victims = snap.files.filter(e => batchOf(e).exists(_ <= upToBatch))
     if (victims.nonEmpty) {

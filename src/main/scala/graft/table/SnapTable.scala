@@ -25,9 +25,8 @@ import org.apache.spark.sql.functions._
   *    HadoopTableOperations documents).
   *  - **Snapshot isolation**: readers resolve a committed manifest
   *    ONCE and read exactly its file list. Concurrent appends,
-  *    overwrites and compactions are invisible — no torn reads; and
-  *    [[rewrite]] closes the documented `compactTriples` caveat (a
-  *    directory lister seeing old and new files mid-swap).
+  *    overwrites and compactions are invisible — no torn reads, and a
+  *    [[rewrite]] never shows a reader old and new files mid-swap.
   *  - **Time travel**: manifests are retained until [[expire]];
   *    `read(asOf = Some(v))` reproduces any historical state.
   *  - **Resumable checkpoints with lineage**: every commit records an
@@ -952,7 +951,7 @@ object SnapTable {
     // repartition width is a hard constraint AQE will not coalesce);
     // 0 lets Spark/AQE size the files; < 0 means the caller already
     // partitioned `df` the way it wants the files laid out (e.g. the
-    // salted pred-bucket triples shape) — keep it, record bounds only
+    // one-file-per-pred-bucket triples shape) — keep it, record bounds only
     val toWrite = statsCol match {
       case Some(c) if clusterFiles > 0 =>
         df.repartitionByRange(clusterFiles, col(c)).sortWithinPartitions(col(c))

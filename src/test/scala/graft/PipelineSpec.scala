@@ -65,32 +65,11 @@ class PipelineSpec extends AnyFunSuite {
     val dict = Pipeline.broadcastDict(spark)
     val dir = java.nio.file.Files.createTempDirectory("resume").toString + "/t"
     val docs = SynthCorpus.corpus(spark, 10)
-    Pipeline.writeTriples(Pipeline.triples(docs.filter($"doc_id" < "doc-000000000005"), dict), dir)
-    val remaining = Pipeline.resumeFilter(docs, spark, dir).collect().map(_.doc_id).sorted
+    // nothing committed yet: every doc is still to do
+    assert(Pipeline.resumeFilter(docs, dir).count() == 10)
+    Pipeline.writeTriplesSnap(Pipeline.triples(docs.filter($"doc_id" < "doc-000000000005"), dict), dir)
+    val remaining = Pipeline.resumeFilter(docs, dir).collect().map(_.doc_id).sorted
     assert(remaining.toVector == (5L until 10L).map(SynthCorpus.docId).toVector)
-  }
-
-  test("resume fast path (reconcile=false) scans only the doc-commit sidecar") {
-    import spark.implicits._
-    val dict = Pipeline.broadcastDict(spark)
-    val dir = java.nio.file.Files.createTempDirectory("resume2").toString + "/t"
-    val docs = SynthCorpus.corpus(spark, 10)
-    val first = docs.filter($"doc_id" < "doc-000000000005")
-    Pipeline.writeTriples(Pipeline.triples(first, dict), dir)
-    Pipeline.commitDocIds(first, dir)
-    val remaining = Pipeline.resumeFilter(docs, spark, dir, reconcile = false)
-    // sidecar path: the plan must scan <dir>_doc_commits, not the table
-    val p = remaining.queryExecution.executedPlan.toString
-    assert(p.contains("_doc_commits"), p.take(1500))
-    assert(!p.linesIterator.exists(l => l.contains("FileScan") && l.contains("/t]")), p.take(1500))
-    assert(remaining.collect().map(_.doc_id).sorted.toVector ==
-      (5L until 10L).map(SynthCorpus.docId).toVector)
-    // second increment: append commit, everything done
-    val rest = Pipeline.resumeFilter(docs, spark, dir, reconcile = false)
-    Pipeline.writeTriples(Pipeline.triples(rest, dict), dir,
-      org.apache.spark.sql.SaveMode.Append)
-    Pipeline.commitDocIds(rest, dir)
-    assert(Pipeline.resumeFilter(docs, spark, dir, reconcile = false).count() == 0)
   }
 
   test("resume reconcile closes the write/commit crash window and self-heals") {
@@ -98,71 +77,50 @@ class PipelineSpec extends AnyFunSuite {
     val dict = Pipeline.broadcastDict(spark)
     val dir = java.nio.file.Files.createTempDirectory("resume3").toString + "/t"
     val docs = SynthCorpus.corpus(spark, 10)
-    // triples written for docs 0-4 but the commit 'crashed' after 0-2:
-    // docs 3-4 have committed triples and no sidecar row
-    val first5 = docs.filter($"doc_id" < "doc-000000000005")
-    Pipeline.writeTriples(Pipeline.triples(first5, dict), dir)
-    Pipeline.commitDocIds(docs.filter($"doc_id" < "doc-000000000003"), dir)
-    // default (reconciling) resume must NOT reprocess 3-4 — a re-append
-    // would duplicate their triples
-    val remaining = Pipeline.resumeFilter(docs, spark, dir)
+    Pipeline.writeTriplesSnap(Pipeline.triples(docs.filter($"doc_id" < "doc-000000000003"), dict), dir)
+    // docs 3-4 crashed mid-append: their rows sit in data/ as files no
+    // manifest references, so resume must re-expand them
+    PipelineSpec.crashedAppend(Pipeline.triples(
+      docs.filter($"doc_id" >= "doc-000000000003" && $"doc_id" < "doc-000000000005"), dict), dir)
+    val remaining = Pipeline.resumeFilter(docs, dir)
     assert(remaining.collect().map(_.doc_id).sorted.toVector ==
-      (5L until 10L).map(SynthCorpus.docId).toVector)
-    // ...and it healed the sidecar: the fast path now agrees
-    assert(Pipeline.resumeFilter(docs, spark, dir, reconcile = false)
-      .collect().map(_.doc_id).sorted.toVector ==
-      (5L until 10L).map(SynthCorpus.docId).toVector)
+      (3L until 10L).map(SynthCorpus.docId).toVector)
     // finish the corpus; the table must hold each doc's triples exactly once
-    val rest = Pipeline.resumeFilter(docs, spark, dir)
-    Pipeline.writeTriples(Pipeline.triples(rest, dict), dir,
-      org.apache.spark.sql.SaveMode.Append)
-    Pipeline.commitDocIds(rest, dir)
-    val table = spark.read.parquet(dir)
+    Pipeline.writeTriplesSnap(Pipeline.triples(remaining, dict), dir, append = true)
+    assert(Pipeline.resumeFilter(docs, dir).count() == 0)
+    val table = Pipeline.readTriplesSnap(spark, dir).select("doc_id", "subj", "pred", "obj")
     assert(table.count() == Pipeline.triples(docs, dict).count())
-    assert(table.select("doc_id", "subj", "pred", "obj").distinct().count() == table.count())
+    assert(table.distinct().count() == table.count())
+    // expire sweeps the crashed append's orphans; the table is unchanged
+    def dataFiles() = new java.io.File(dir, "data").listFiles()
+      .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+    def liveFiles() = graft.table.SnapTable.snapshot(spark, dir).get.files.size
+    assert(dataFiles() > liveFiles())
+    graft.table.SnapTable.expire(spark, dir, keepLast = 1, orphanGraceMs = 0)
+    assert(dataFiles() == liveFiles())
+    assert(Pipeline.readTriplesSnap(spark, dir).count() == table.count())
   }
 
-  test("triples-table compaction: identical rows, fewer files, crash-parked partition repaired") {
+  test("RunPipeline --resume after a crash between the metadata and triples commits: one metadata row per doc") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, xxhash64, expr, count, lit}
     val dict = Pipeline.broadcastDict(spark)
-    val dir = java.nio.file.Files.createTempDirectory("tcompact").toString + "/t"
-    val docs = SynthCorpus.corpus(spark, 16)
-    for (k <- 0 until 4) { // 4 appends -> >= 4 files per touched partition
-      val slice = docs.filter($"doc_id" >= SynthCorpus.docId(4L * k) &&
-        $"doc_id" < SynthCorpus.docId(4L * k + 4))
-      Pipeline.writeTriples(Pipeline.triples(slice, dict), dir,
-        if (k == 0) org.apache.spark.sql.SaveMode.Overwrite
-        else org.apache.spark.sql.SaveMode.Append)
-    }
-    def sig() = spark.read.parquet(dir)
-      .select(xxhash64(col("doc_id"), col("subj"), col("pred"), col("obj"), col("pred_bucket")).as("h"))
-      .agg(expr("bit_xor(h)"), count(lit(1))).collect()(0)
-    def nFiles() = {
-      def walk(f: java.io.File): Int =
-        if (f.isFile) { if (f.getName.endsWith(".parquet")) 1 else 0 }
-        else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0)
-      walk(new java.io.File(dir))
-    }
-    def buckets() = spark.read.parquet(dir).groupBy("pred_bucket").count()
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val b0 = buckets()
-    val (before, filesBefore) = (sig(), nFiles())
-    Pipeline.compactTriples(spark, dir, minFilesToCompact = 2)
-    val b1 = buckets()
-    val diff = (b0.keySet ++ b1.keySet).toSeq.sortBy(_.toInt)
-      .filter(k => b0.getOrElse(k, 0L) != b1.getOrElse(k, 0L))
-      .map(k => s"$k: ${b0.getOrElse(k, 0L)} -> ${b1.getOrElse(k, 0L)}")
-    assert(sig() == before, s"dir=$dir diff=${diff.mkString("; ")}")
-    assert(nFiles() < filesBefore, s"$filesBefore -> ${nFiles()}")
-    // crash shape: a partition parked in .trash with no live dir is repaired
-    val root = new java.io.File(dir)
-    val part = root.listFiles().filter(f => f.isDirectory &&
-      f.getName.startsWith("pred_bucket=")).head
-    val trash = new java.io.File(root, "." + part.getName + ".trash")
-    assert(part.renameTo(trash))
-    Pipeline.compactTriples(spark, dir, minFilesToCompact = 2)
-    assert(sig() == before)
+    val out = java.nio.file.Files.createTempDirectory("rpresume").toString
+    val docs = SynthCorpus.corpus(spark, 10)
+    val first = docs.filter($"doc_id" < SynthCorpus.docId(6))
+    RunPipeline.materialize(first, _ => "utf-8", dict, out, "run1", resume = false, compact = false)
+    // the crash shape: the next run committed docs 6-9's metadata, then
+    // died before its triples commit
+    graft.table.SnapTable.append(spark, s"$out/metadata",
+      Pipeline.metadata(docs.filter($"doc_id" >= SynthCorpus.docId(6)), dict).toDF())
+    RunPipeline.materialize(docs, _ => "utf-8", dict, out, "run2", resume = true, compact = true)
+    val meta = graft.table.SnapTable.read(spark, s"$out/metadata")
+    assert(meta.groupBy("doc_id").count().where($"count" =!= 1).isEmpty)
+    assert(meta.select("doc_id").as[String].collect().sorted.toVector ==
+      (0L until 10L).map(SynthCorpus.docId).toVector)
+    def rows(ds: org.apache.spark.sql.Dataset[TripleRow]) =
+      ds.collect().map(t => (t.doc_id, t.subj, t.pred, t.obj)).sorted.toVector
+    assert(rows(Pipeline.readTriplesSnap(spark, s"$out/triples")
+      .select("doc_id", "subj", "pred", "obj").as[TripleRow]) == rows(Pipeline.triples(docs, dict)))
   }
 
   test("Snap-backed triples: byte-identical N-Triples, bucket-pruned reads, snapshot compaction") {
@@ -171,10 +129,10 @@ class PipelineSpec extends AnyFunSuite {
     val dict = Pipeline.broadcastDict(spark)
     val base = java.nio.file.Files.createTempDirectory("tsnap").toString
     val docs = SynthCorpus.corpus(spark, 12)
-    Pipeline.writeTriples(Pipeline.triples(docs, dict), s"$base/legacy")
     val s1 = Pipeline.writeTriplesSnap(Pipeline.triples(docs, dict), s"$base/snap")
-    // byte-identical canonical N-Triples from the legacy directory
-    // layout and the Snap-backed table
+    val run1Count = Pipeline.readTriplesSnap(spark, s"$base/snap").count()
+    // byte-identical canonical N-Triples from the pipeline's rows and
+    // from the Snap-backed table
     def ntBytes(src: org.apache.spark.sql.Dataset[TripleRow], out: String): Array[Byte] = {
       Pipeline.writeSortedNTriples(src, out, compress = false)
       new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
@@ -183,7 +141,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", $"subj", $"pred", $"obj").as[TripleRow]
-    val a = ntBytes(rows(spark.read.parquet(s"$base/legacy")), s"$base/nt_legacy")
+    val a = ntBytes(Pipeline.triples(docs, dict), s"$base/nt_direct")
     val b = ntBytes(rows(Pipeline.readTriplesSnap(spark, s"$base/snap")), s"$base/nt_snap")
     assert(a.nonEmpty && java.util.Arrays.equals(a, b))
     // predBucketOf matches the engine's column computation, and the
@@ -235,7 +193,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(afterFiles.forall(e => e.lo.isDefined && e.lo == e.hi))
     // time travel to the pre-append snapshot still reproduces run 1
     assert(Pipeline.readTriplesSnap(spark, s"$base/snap", asOf = Some(s1.id)).count() ==
-      spark.read.parquet(s"$base/legacy").count())
+      run1Count && run1Count > 0)
   }
 
   test("failFast = false skips and counts non-fatal doc errors; interrupts still fail the job") {
@@ -253,30 +211,25 @@ class PipelineSpec extends AnyFunSuite {
       .exists(c => c.isInstanceOf[InterruptedException] ||
         String.valueOf(c.getMessage).contains("java.lang.InterruptedException")), e)
   }
+}
 
-  test("sidecar compaction: fewer files, same resume answer, crash-shaped leftovers tolerated") {
-    import spark.implicits._
-    val dict = Pipeline.broadcastDict(spark)
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
-    val docs = SynthCorpus.corpus(spark, 12)
-    for (k <- 0 until 4) { // 4 separate commits -> >= 4 sidecar files
-      val slice = docs.filter($"doc_id" >= SynthCorpus.docId(3L * k) &&
-        $"doc_id" < SynthCorpus.docId(3L * k + 3))
-      Pipeline.writeTriples(Pipeline.triples(slice, dict), dir,
-        if (k == 0) org.apache.spark.sql.SaveMode.Overwrite
-        else org.apache.spark.sql.SaveMode.Append)
-      Pipeline.commitDocIds(slice, dir)
-    }
-    def dataFiles = new java.io.File(dir + "_doc_commits").listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    val nBefore = dataFiles.length
-    assert(nBefore >= 4)
-    Pipeline.compactCommits(spark, dir)
-    assert(dataFiles.length < nBefore)
-    assert(Pipeline.resumeFilter(docs, spark, dir, reconcile = false).count() == 0)
-    // a half-done compaction (compact copy moved in, originals not yet
-    // deleted = duplicate ids) must still resume correctly
-    Pipeline.commitDocIds(docs.filter($"doc_id" < SynthCorpus.docId(6)), dir)
-    assert(Pipeline.resumeFilter(docs, spark, dir, reconcile = false).count() == 0)
+object PipelineSpec {
+  /** What a writer that crashed between staging its files and the
+    * manifest commit leaves behind: the rows as uuid-named parquet
+    * files in the table's `data/` dir, referenced by no snapshot.
+    */
+  def crashedAppend(ts: org.apache.spark.sql.Dataset[TripleRow], tableRoot: String): Unit = {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val stage = s"$tableRoot/.stage-crashed-${java.util.UUID.randomUUID()}"
+    ts.toDF().withColumn("pred_bucket", pmod(xxhash64(col("pred")), lit(Pipeline.PredBuckets)))
+      .write.parquet(stage)
+    val data = new java.io.File(tableRoot, "data")
+    data.mkdirs()
+    val stamp = java.util.UUID.randomUUID().toString.replace("-", "")
+    new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet"))
+      .zipWithIndex.foreach { case (f, i) =>
+        assert(f.renameTo(new java.io.File(data, f"$stamp-$i%05d.parquet")))
+      }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
   }
 }

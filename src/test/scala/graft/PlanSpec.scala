@@ -299,25 +299,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!exec.contains("Exchange"), exec.take(1500))
   }
 
-  test("bucketed tables join co-located: no exchange on either side") {
-    import spark.implicits._
-    val dict = Pipeline.broadcastDict(spark)
-    val ts = Pipeline.triples(graft.ingest.SynthCorpus.corpus(spark, 32), dict).toDF()
-    val tmp = java.nio.file.Files.createTempDirectory("bucketed").toString
-    Pipeline.writeBucketed(ts, "t_buck_a", s"$tmp/a", "subj", 4)
-    Pipeline.writeBucketed(ts.select("subj", "pred"), "t_buck_b", s"$tmp/b", "subj", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val j = spark.table("t_buck_a")
-        .join(spark.table("t_buck_b"), "subj")
-        .groupBy("subj").count()
-      val p = j.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"), p.take(2500))
-      assert(j.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("AQE splits the skewed join partition at runtime (skew=true)") {
     import spark.implicits._
     val restore = Seq(

@@ -33,8 +33,8 @@ class PropertySpec extends AnyFunSuite {
       .getOrCreate()
 
   test("resume reconcile: randomized crash points + interleaved compaction never lose or duplicate triples") {
-    import org.apache.spark.sql.SaveMode
     import org.apache.spark.sql.functions.col
+    import graft.table.SnapTable
     import spark.implicits._
     val dict = Pipeline.broadcastDict(spark)
     val docs = graft.ingest.SynthCorpus.corpus(spark, 12)
@@ -43,34 +43,36 @@ class PropertySpec extends AnyFunSuite {
     for (seed <- Seq(1L, 7L, 13L, 99L)) {
       val rnd = new scala.util.Random(seed)
       val dir = java.nio.file.Files.createTempDirectory(s"fuzz$seed").toString + "/t"
+      // compaction and expiry (which sweeps crashed appends' orphan
+      // files) interleaved at random points of the recovery sequence
+      def maintain(): Unit = {
+        if (rnd.nextInt(3) == 0) Pipeline.compactTriplesSnap(spark, dir, minFilesPerBucket = 2)
+        if (rnd.nextInt(3) == 0 && SnapTable.snapshot(spark, dir).isDefined)
+          SnapTable.expire(spark, dir, keepLast = 1 + rnd.nextInt(2), orphanGraceMs = 0)
+      }
       var runs = 0
       var done = false
       while (!done && runs < 20) {
         runs += 1
-        // a recovery run may start with compaction (the interaction
-        // matrix: compaction over a table holding ORPHANED triples whose
-        // sidecar commit was lost in the crash)
-        if (rnd.nextInt(3) == 0) Pipeline.compactTriples(spark, dir, minFilesToCompact = 2)
-        if (rnd.nextInt(3) == 0) Pipeline.compactCommits(spark, dir)
-        val todo = Pipeline.resumeFilter(docs, spark, dir) // reconcile default
+        maintain()
+        val todo = Pipeline.resumeFilter(docs, dir)
         val ids = todo.select("doc_id").as[String].collect().sorted
         if (ids.isEmpty) done = true
         else {
           var crashed = false
           for (b <- ids.grouped(4).toVector if !crashed) {
-            val batch = docs.filter(col("doc_id").isin(b: _*))
-            Pipeline.writeTriples(Pipeline.triples(batch, dict), dir, SaveMode.Append)
-            if (rnd.nextInt(4) == 0) crashed = true // crash BETWEEN the two commits
+            val ts = Pipeline.triples(docs.filter(col("doc_id").isin(b: _*)), dict)
+            // crash between staging the batch's files and the commit
+            if (rnd.nextInt(4) == 0) { PipelineSpec.crashedAppend(ts, dir); crashed = true }
             else {
-              Pipeline.commitDocIds(batch, dir)
-              if (rnd.nextInt(4) == 0) Pipeline.compactCommits(spark, dir)
-              if (rnd.nextInt(4) == 0) Pipeline.compactTriples(spark, dir, minFilesToCompact = 2)
+              Pipeline.writeTriplesSnap(ts, dir, append = true)
+              maintain()
             }
           }
         }
       }
       assert(done, s"seed $seed: not recovered after $runs runs")
-      val got = spark.read.parquet(dir).select("doc_id", "subj", "pred", "obj")
+      val got = Pipeline.readTriplesSnap(spark, dir).select("doc_id", "subj", "pred", "obj")
         .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
         .sorted.toVector
       assert(got == expected, s"seed $seed after $runs runs: " +

@@ -12,23 +12,6 @@ class StreamingSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("streaming pipeline == batch pipeline on the same docs") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("stream").toString
-    val docs = SynthCorpus.corpus(spark, 40)
-    docs.write.parquet(s"$base/docs")
-    val dict = Pipeline.broadcastDict(spark)
-    val q = StreamingPipeline.start(spark, s"$base/docs", s"$base/out", s"$base/ckpt", dict)
-    q.awaitTermination()
-    val streamed = spark.read.parquet(s"$base/out")
-      .select("doc_id", "subj", "pred", "obj").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).sorted
-    val batch = Pipeline.triples(docs, dict).collect()
-      .map(t => (t.doc_id, t.subj, t.pred, t.obj)).sorted
-    assert(streamed.toVector == batch.toVector)
-    assert(batch.nonEmpty)
-  }
-
   test("startSnap: snapshot-watermark sink == batch triples; checkpoint-loss replay appends nothing") {
     import spark.implicits._
     import graft.table.SnapTable
@@ -99,15 +82,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(finalRows == batch36, // new docs landed exactly once, old not duplicated
       s"got ${finalRows.length} vs ${batch36.length}")
     assert(SnapTable.snapshot(spark, s"$base/tbl").get.watermark.contains("4:0"))
-    // manifest-side pred pruning really skips files: prune to a single
-    // predicate's bound-window and check the rows survive intact
+    // streamed batches share the batch writer's layout: manifest-side
+    // bucket pruning to one predicate's bucket keeps its rows intact
     val somePred = batch.head._3
-    val pruned = SnapTable.read(spark, s"$base/tbl",
-      prune = Some((lo, hi) => lo <= somePred && somePred <= hi))
+    val pruned = Pipeline.readTriplesSnap(spark, s"$base/tbl",
+      Some(Set(Pipeline.predBucketOf(somePred))))
       .filter($"pred" === somePred).count()
-    val full = SnapTable.read(spark, s"$base/tbl")
+    val full = Pipeline.readTriplesSnap(spark, s"$base/tbl")
       .filter($"pred" === somePred).count()
     assert(pruned == full && full > 0)
+    // and --resume over the streamed table finds every doc committed
+    assert(Pipeline.resumeFilter(SynthCorpus.corpus(spark, 36), s"$base/tbl").count() == 0)
     // per-batch lineage metrics landed in the snapshot-committed
     // metrics table, one commit per DATA-WRITING batch (replays and
     // empty folds wrote none), watermark in step with the data table
@@ -121,157 +106,6 @@ class StreamingSpec extends AnyFunSuite {
     val mTriples = m.agg(org.apache.spark.sql.functions.sum($"triple_count"))
       .head.getLong(0)
     assert(mTriples == SnapTable.read(spark, s"$base/tbl").count(), s"$mTriples")
-  }
-
-  test("streaming foreachBatch into the bucketed table == batch layout; resume sees it") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("sbucket").toString
-    val docs = SynthCorpus.corpus(spark, 24)
-    docs.write.parquet(s"$base/docs")
-    val dict = Pipeline.broadcastDict(spark)
-    val q = StreamingPipeline.startBucketed(spark, s"$base/docs", s"$base/t", s"$base/ckpt", dict)
-    q.awaitTermination()
-    // identical rows AND identical physical layout keys as the batch writer
-    val streamed = spark.read.parquet(s"$base/t")
-    assert(streamed.columns.contains("pred_bucket"))
-    val batchRows = Pipeline.triples(docs, dict).collect()
-      .map(t => (t.doc_id, t.subj, t.pred, t.obj)).sorted
-    val streamRows = streamed.select("doc_id", "subj", "pred", "obj").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).sorted
-    assert(streamRows.toVector == batchRows.toVector)
-    // the per-batch doc commits make resume a no-op over the same corpus
-    assert(Pipeline.resumeFilter(docs, spark, s"$base/t").count() == 0)
-    // compaction mid-stream: compact the sidecar, stream MORE docs into
-    // the same table+checkpoint, and resume still sees every doc
-    Pipeline.compactCommits(spark, s"$base/t")
-    val more = SynthCorpus.corpus(spark, 30).filter($"doc_id" >= SynthCorpus.docId(24))
-    more.write.mode("append").parquet(s"$base/docs")
-    val q2 = StreamingPipeline.startBucketed(spark, s"$base/docs", s"$base/t", s"$base/ckpt", dict)
-    q2.awaitTermination()
-    val all = SynthCorpus.corpus(spark, 30)
-    assert(Pipeline.resumeFilter(all, spark, s"$base/t", reconcile = false).count() == 0)
-    assert(spark.read.parquet(s"$base/t").select("doc_id", "subj", "pred", "obj")
-      .distinct().count() == spark.read.parquet(s"$base/t").count())
-  }
-
-  test("compactTriples: a file appended mid-compaction survives (zero row loss)") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ctriples").toString
-    val dir = s"$base/t"
-    val dict = Pipeline.broadcastDict(spark)
-    def tripleSet() = spark.read.parquet(dir)
-      .select("doc_id", "subj", "pred", "obj").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-      .toVector.sorted
-    // several small appends -> many files per pred_bucket partition
-    for (b <- 0 until 4) {
-      val docs = SynthCorpus.corpus(spark, (b + 1) * 4)
-        .filter($"doc_id" >= SynthCorpus.docId(b * 4))
-      Pipeline.writeTriples(Pipeline.triples(docs, dict), dir,
-        org.apache.spark.sql.SaveMode.Append)
-    }
-    val before = tripleSet()
-    // the concurrent writer: a streaming foreachBatch appending INSIDE
-    // the window between the compactor's snapshot and its delete
-    val lateDocs = SynthCorpus.corpus(spark, 20)
-      .filter($"doc_id" >= SynthCorpus.docId(16))
-    val late = Pipeline.triples(lateDocs, dict).collect()
-      .map(t => (t.doc_id, t.subj, t.pred, t.obj)).toVector
-    val appended = new java.util.concurrent.atomic.AtomicBoolean(false)
-    Pipeline.compactTriples(spark, dir, minFilesToCompact = 2,
-      midCompactHook = _ =>
-        if (appended.compareAndSet(false, true))
-          Pipeline.writeTriples(spark.createDataset(late.map(TripleRow.tupled)),
-            dir, org.apache.spark.sql.SaveMode.Append))
-    assert(appended.get, "hook never fired — compaction skipped every partition")
-    assert(tripleSet() == (before ++ late).sorted, "rows lost or duplicated by compaction")
-    // idempotent re-run (also folds the late files in)
-    Pipeline.compactTriples(spark, dir, minFilesToCompact = 2)
-    assert(tripleSet() == (before ++ late).sorted)
-  }
-
-  test("compactTriples: crash before move-in rolls back; crash mid-delete finishes") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("ctcrash").toString
-    val dir = s"$base/t"
-    val dict = Pipeline.broadcastDict(spark)
-    def tripleSet() = spark.read.parquet(dir)
-      .select("doc_id", "subj", "pred", "obj").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-      .toVector.sorted
-    for (b <- 0 until 3) {
-      val docs = SynthCorpus.corpus(spark, (b + 1) * 4)
-        .filter($"doc_id" >= SynthCorpus.docId(b * 4))
-      Pipeline.writeTriples(Pipeline.triples(docs, dict), dir,
-        org.apache.spark.sql.SaveMode.Append)
-    }
-    val before = tripleSet()
-    // crash point 1: after the manifest is journaled, before any move-in
-    // (the hook throws) -> repair must ROLL BACK, originals intact
-    intercept[RuntimeException] {
-      Pipeline.compactTriples(spark, dir, minFilesToCompact = 2,
-        midCompactHook = _ => throw new RuntimeException("injected crash"))
-    }
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.listStatus(new Path(dir))
-      .exists(_.getPath.getName.startsWith(".compact_pending-")), "manifest must persist the crash")
-    Pipeline.compactTriples(spark, dir, minFilesToCompact = 2) // repair + compact
-    assert(fs.listStatus(new Path(dir))
-      .forall(s => !s.getPath.getName.startsWith(".compact_pending-")))
-    assert(tripleSet() == before, "crash rollback lost or duplicated rows")
-    // crash point 2: move-in complete, some originals deleted, manifest
-    // still present -> repair must FINISH (delete remaining originals)
-    val part = fs.listStatus(new Path(dir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("pred_bucket=")).head.getPath
-    val dataFiles = fs.listStatus(part).filter(f => f.isFile &&
-      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-    // fabricate: pretend the current files are stamp-moved compacted files'
-    // siblings — copy one data file to an "original" name, journal it as
-    // the only original of a completed move-in
-    val victim = dataFiles.head.getPath
-    val dupName = "leftover-original.parquet"
-    org.apache.hadoop.fs.FileUtil.copy(fs, victim, fs, new Path(part, dupName),
-      false, spark.sparkContext.hadoopConfiguration)
-    val stamp = "deadbeef"
-    fs.rename(victim, new Path(part, s"compact-$stamp-0.parquet"))
-    val manifest = new Path(dir, s".compact_pending-$stamp.txt")
-    val out = fs.create(manifest, true)
-    out.write(Seq(part.getName, stamp, "1", dupName).mkString("\n").getBytes("UTF-8"))
-    out.close()
-    Pipeline.compactTriples(spark, dir, minFilesToCompact = 1000) // repair only
-    assert(!fs.exists(new Path(part, dupName)), "finish path must delete the leftover original")
-    assert(!fs.exists(manifest))
-    assert(tripleSet() == before, "finish path lost or duplicated rows")
-  }
-
-  test("startBucketed: full checkpoint-loss replay re-appends nothing (sidecar filter + heal)") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("sreplay").toString
-    val dict = Pipeline.broadcastDict(spark)
-    val docs = SynthCorpus.corpus(spark, 12)
-    docs.write.parquet(s"$base/docs")
-    val q = StreamingPipeline.startBucketed(spark, s"$base/docs", s"$base/t", s"$base/ckpt", dict)
-    q.awaitTermination()
-    val once = spark.read.parquet(s"$base/t")
-      .select("doc_id", "subj", "pred", "obj").collect().map(_.toString).sorted.toVector
-    // crash window: a batch's triples commit but its doc-commit never runs
-    val orphanDocs = SynthCorpus.corpus(spark, 16).filter($"doc_id" >= SynthCorpus.docId(12))
-    Pipeline.writeTriples(Pipeline.triples(orphanDocs, dict), s"$base/t",
-      org.apache.spark.sql.SaveMode.Append) // no commitDocIds: crashed mid-batch
-    orphanDocs.write.mode("append").parquet(s"$base/docs")
-    // checkpoint wiped: EVERY batch replays, incl. the orphaned docs
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$base/ckpt"))
-    val q2 = StreamingPipeline.startBucketed(spark, s"$base/docs", s"$base/t", s"$base/ckpt2", dict)
-    q2.awaitTermination()
-    val after = spark.read.parquet(s"$base/t")
-    // each doc's triples exactly once: nothing re-appended by the replay
-    assert(after.count() == after.select("doc_id", "subj", "pred", "obj").distinct().count())
-    val expected = Pipeline.triples(SynthCorpus.corpus(spark, 16), dict).toDF()
-      .select("doc_id", "subj", "pred", "obj").collect().map(_.toString).sorted.toVector
-    assert(after.select("doc_id", "subj", "pred", "obj").collect()
-      .map(_.toString).sorted.toVector == expected)
-    assert(once.nonEmpty && expected.size > once.size)
   }
 
   test("watermarked windowed aggregation == batch over emitted windows") {

@@ -316,55 +316,6 @@ class ClaimStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("a pre-SnapTable batch-partitioned layout is imported once, claims honored") {
-    import spark.implicits._
-    val root = tmp("cs9")
-    // fabricate the OLD layout: batch=0 / batch=1 claim dirs plus a
-    // folded base at batch=-1, no SnapTable meta
-    hashes(0 until 10).write.parquet(s"$root/batch=-1") // folded (batches before 0)
-    hashes(10 until 20).write.parquet(s"$root/batch=0")
-    hashes(20 until 30).write.parquet(s"$root/batch=1")
-    // first touch migrates: watermark = max legacy batch, claims exact
-    assert(ClaimStore.lastBatch(spark, root).contains(1L))
-    assert(seenSet(root, 0 until 40, 2L) == hashSet(0 until 30))
-    // replay exclusion survives the import: batch 1 replayed must not
-    // see its own claims, but must see base + batch 0
-    assert(seenSet(root, 0 until 40, 1L) == hashSet(0 until 20))
-    // its replayed append is watermark-skipped, not duplicated
-    val head = SnapTable.snapshot(spark, root).get.id
-    ClaimStore.appendClaims(spark, root, hashes(20 until 30), "h", 1L)
-    assert(SnapTable.snapshot(spark, root).get.id == head)
-    val all = SnapTable.read(spark, root).select("h")
-    assert(all.count() == 30 && all.distinct().count() == 30)
-    // new batches append and fold normally on top
-    ClaimStore.appendClaims(spark, root, hashes(30 until 35), "h", 2L)
-    ClaimStore.fold(spark, root, "h", 2L)
-    assert(seenSet(root, 0 until 40, 3L) == hashSet(0 until 35))
-  }
-
-  test("a crash mid legacy import resumes; duplicate legacy claims import distinct") {
-    import spark.implicits._
-    val root = tmp("cs13")
-    hashes(0 until 10).write.parquet(s"$root/batch=-1")
-    hashes(10 until 20).write.parquet(s"$root/batch=0")
-    // legacy crash caveat: batch=1 overlaps earlier dirs (5..19) plus
-    // in-dir duplicates of its own
-    hashes((5 until 25) ++ (20 until 25)).write.parquet(s"$root/batch=1")
-    // simulate the interrupted first import: only batch=-1 landed
-    // before the crash (meta/ EXISTS — the resume gate must be the
-    // watermark, not meta existence)
-    SnapTable.append(spark, root, hashes(0 until 10),
-      watermark = Some("-1"), tag = Some("b:-1"), exactStats = false)
-    // first ClaimStore touch resumes the import for batches 0 and 1
-    assert(ClaimStore.lastBatch(spark, root).contains(1L))
-    assert(seenSet(root, 0 until 40, 2L) == hashSet(0 until 25))
-    // replay exclusion intact after resume
-    assert(seenSet(root, 0 until 40, 1L) == hashSet(0 until 20))
-    // the overlap imported exactly once: claims stay globally distinct
-    val all = SnapTable.read(spark, root).select("h")
-    assert(all.count() == 25 && all.distinct().count() == 25)
-  }
-
   test("a pre-r8 legacy bloom.bin keeps serving old runs and is retired after merges") {
     val root = tmp("cs14")
     ClaimStore.appendClaims(spark, root, hashes(0 until 300), "h", 0L)
