@@ -184,15 +184,15 @@ object DedupBench {
     * .StreamingCuration]] with maxFilesPerTrigger pacing — measures the
     * sustained micro-batch rate INCLUDING the sidecar reads/writes, and
     * checks the survivor count equals the batch funnel's.
+    *
+    *   runMain graft.DedupBench --curate-stream [nDocs] [cpus] [dupGroup] [batches] [compactEvery]
     */
   private final case class BatchStat(id: Long, sec: Double, seenBytes: Long,
                                      picked: Long, fallbacks: Long,
-                                     foldSidecarBytes: Long, fppPpm: Long,
-                                     maxRootSeenBytes: Long)
+                                     foldSidecarBytes: Long, fppPpm: Long)
 
   def runCurateStream(cpus: Int, nDocs: Long, dupGroup: Int,
-                      batches: Int, compactEvery: Int = 0,
-                      shards: Int = 1): (Double, Long, Long) = {
+                      batches: Int, compactEvery: Int = 0): (Double, Long, Long) = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-curate-stream-$cpus")
@@ -226,7 +226,6 @@ object DedupBench {
       // TRAJECTORY at constant batch size — late batches carry the full
       // claim history, so late/early per-batch time isolates the
       // history-growth term from the fixed micro-batch floor
-      val claimCfg = graft.streaming.ClaimStore.Config(shards = shards)
       val perBatch =
         new java.util.concurrent.ConcurrentLinkedQueue[BatchStat]()
       val q = spark.readStream.schema(schema)
@@ -240,17 +239,10 @@ object DedupBench {
           m.reset()
           graft.streaming.StreamingCuration.processBatch(
             b, id, s"$base/out", "doc_id", "text", cfg,
-            compactEvery = compactEvery, claimCfg = claimCfg)
-          val maxRoot = {
-            val it = m.perRootSeenBytes.values().iterator()
-            var mx = 0L
-            while (it.hasNext) mx = math.max(mx, it.next().longValue)
-            mx
-          }
+            compactEvery = compactEvery)
           perBatch.add(BatchStat(id, (System.nanoTime() - s0) / 1e9,
             m.plannedSeenBytes.get, m.baseFilesSelected.get,
-            m.fullFallbacks.get, m.foldSidecarBytes.get, m.probeFppPpm.get,
-            maxRoot))
+            m.fullFallbacks.get, m.foldSidecarBytes.get, m.probeFppPpm.get))
           ()
         }
         .start()
@@ -295,8 +287,7 @@ object DedupBench {
             (med(folds.take(half)), med(folds.drop(folds.length - half)))
           } else (0.0, 0.0)
         val fppMax = rows.map(_.fppPpm).max
-        val rootLate = med(rows.map(_.maxRootSeenBytes.toDouble).takeRight(k))
-        println(f"""{"metric":"curate_stream_per_batch","early$k%d_med_sec":$early%.2f,"late$k%d_med_sec":$late%.2f,"late_over_early":${late / early}%.2f,"batches":${times.length},"shards":$shards%d,"seen_bytes_early$k%d_med":${bEarly}%.0f,"seen_bytes_late$k%d_med":${bLate}%.0f,"picked_chunks_early$k%d_med":$pEarly%.0f,"picked_chunks_late$k%d_med":$pLate%.0f,"bloom_full_fallbacks":$fallbacks%d,"fold_sidecar_bytes_early_med":$fsEarly%.0f,"fold_sidecar_bytes_late_med":$fsLate%.0f,"folds":${folds.length}%d,"probe_fpp_ppm_max":$fppMax%d,"max_root_seen_bytes_late$k%d_med":$rootLate%.0f}""")
+        println(f"""{"metric":"curate_stream_per_batch","early$k%d_med_sec":$early%.2f,"late$k%d_med_sec":$late%.2f,"late_over_early":${late / early}%.2f,"batches":${times.length},"seen_bytes_early$k%d_med":${bEarly}%.0f,"seen_bytes_late$k%d_med":${bLate}%.0f,"picked_chunks_early$k%d_med":$pEarly%.0f,"picked_chunks_late$k%d_med":$pLate%.0f,"bloom_full_fallbacks":$fallbacks%d,"fold_sidecar_bytes_early_med":$fsEarly%.0f,"fold_sidecar_bytes_late_med":$fsLate%.0f,"folds":${folds.length}%d,"probe_fpp_ppm_max":$fppMax%d}""")
       }
       (t, kept, keptBatch)
     } finally {
@@ -313,11 +304,10 @@ object DedupBench {
       val dupGroup = if (args.length > 3) args(3).toInt else 5
       val batches = if (args.length > 4) args(4).toInt else 10
       val compactEvery = if (args.length > 5) args(5).toInt else 0
-      val shards = if (args.length > 6) args(6).toInt else 1
-      runCurateStream(cpus, 5000, dupGroup, 2, compactEvery, shards) // warmup
+      runCurateStream(cpus, 5000, dupGroup, 2, compactEvery) // warmup
       val (t, kept, keptBatch) =
-        runCurateStream(cpus, nDocs, dupGroup, batches, compactEvery, shards)
-      println(f"""{"metric":"curate_stream_docs_per_sec","value":${nDocs / t}%.1f,"unit":"docs/sec","docs":$nDocs,"cpus":$cpus,"batches":$batches,"compact_every":$compactEvery,"shards":$shards,"t_sec":$t%.1f,"kept":$kept,"kept_batch":$keptBatch,"parity":${kept == keptBatch}}""")
+        runCurateStream(cpus, nDocs, dupGroup, batches, compactEvery)
+      println(f"""{"metric":"curate_stream_docs_per_sec","value":${nDocs / t}%.1f,"unit":"docs/sec","docs":$nDocs,"cpus":$cpus,"batches":$batches,"compact_every":$compactEvery,"t_sec":$t%.1f,"kept":$kept,"kept_batch":$keptBatch,"parity":${kept == keptBatch}}""")
       return
     }
     if (args.headOption.exists(a => a == "--curate" || a == "--curate-full")) {

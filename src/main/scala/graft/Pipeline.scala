@@ -333,7 +333,10 @@ object Pipeline {
         s"$tableRoot holds a legacy flat parquet metrics dir — move its " +
           "part files aside (or point at a fresh dir); the snapshot-" +
           "committed metrics table would silently shadow them")
-    graft.table.SnapTable.append(spark, tableRoot, m,
+    // a replay of the last committed run/batch commits nothing
+    val head = graft.table.SnapTable.snapshot(spark, tableRoot)
+    if (watermark.isDefined && head.flatMap(_.watermark) == watermark) head.get
+    else graft.table.SnapTable.append(spark, tableRoot, m,
       watermark = watermark, exactStats = false)
   }
 

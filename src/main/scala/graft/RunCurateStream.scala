@@ -20,15 +20,6 @@ import org.apache.spark.sql.SparkSession
   * --max-files <N> to pace the backfill N files per micro-batch
   * (without it AvailableNow takes the whole backlog as one batch and
   * compaction never engages).
-  *
-  * Claim-store sizing (no code change to deploy at a different claim
-  * scale): --claim-fpp <p> total probe false-positive budget,
-  * --claim-chunk-fpp <p> per-chunk selection-filter fpp,
-  * --claim-positives-cap <n> driver-collected positives cap,
-  * --claim-fold-bytes <n> target sorted-chunk size, --claim-max-runs
-  * <n> size-tiered LSM run cap, --claim-expire-keep <n> snapshots
-  * retained, --claim-shards <n> hash-prefix shard roots (pick once per
-  * store — the shard count is part of the on-disk identity).
   */
 object RunCurateStream {
   private def strip(flags: List[String], name: String): (Option[String], List[String]) =
@@ -38,29 +29,6 @@ object RunCurateStream {
         require(i + 1 < flags.length, s"$name needs a value")
         (Some(flags(i + 1)), flags.take(i) ++ flags.drop(i + 2))
     }
-
-  /** Parse the `--claim-*` sizing flags into a [[graft.streaming
-    * .ClaimStore.Config]], returning it with the remaining flags.
-    */
-  private[graft] def parseClaimConfig(flags0: List[String])
-      : (graft.streaming.ClaimStore.Config, List[String]) = {
-    val (claimFpp, flags1) = strip(flags0, "--claim-fpp")
-    val (claimChunkFpp, flags2) = strip(flags1, "--claim-chunk-fpp")
-    val (claimPosCap, flags3) = strip(flags2, "--claim-positives-cap")
-    val (claimFoldBytes, flags4) = strip(flags3, "--claim-fold-bytes")
-    val (claimMaxRuns, flags5) = strip(flags4, "--claim-max-runs")
-    val (claimExpireKeep, flags6) = strip(flags5, "--claim-expire-keep")
-    val (claimShards, rest) = strip(flags6, "--claim-shards")
-    val d = graft.streaming.ClaimStore.Config()
-    (graft.streaming.ClaimStore.Config(
-      bloomFpp = claimFpp.map(_.toDouble).getOrElse(d.bloomFpp),
-      chunkFpp = claimChunkFpp.map(_.toDouble).getOrElse(d.chunkFpp),
-      positivesCap = claimPosCap.map(_.toInt).getOrElse(d.positivesCap),
-      foldTargetBytes = claimFoldBytes.map(_.toLong).getOrElse(d.foldTargetBytes),
-      maxRuns = claimMaxRuns.map(_.toInt).getOrElse(d.maxRuns),
-      expireKeep = claimExpireKeep.map(_.toInt).getOrElse(d.expireKeep),
-      shards = claimShards.map(_.toInt).getOrElse(d.shards)), rest)
-  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
@@ -76,8 +44,7 @@ object RunCurateStream {
     val (benchPath, flags1) = strip(flags0, "--decontam")
     val (intervalMs, flags2) = strip(flags1, "--continuous")
     val (compactEvery, flags3) = strip(flags2, "--compact-every")
-    val (maxFiles, flags4) = strip(flags3, "--max-files")
-    val (claimCfg, flags) = parseClaimConfig(flags4)
+    val (maxFiles, flags) = strip(flags3, "--max-files")
     val cfg = RunCurate.parseConfig(flags)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // readStream needs a DIRECTORY as its basePath; a single parquet
@@ -105,8 +72,7 @@ object RunCurateStream {
       val q = graft.streaming.StreamingCuration.start(
         spark, in, out, idCol, textCol, cfg, bench, trigger,
         compactEvery.map(_.toInt).getOrElse(0),
-        maxFiles.map(_.toInt).getOrElse(0),
-        claimCfg = claimCfg)
+        maxFiles.map(_.toInt).getOrElse(0))
       q.awaitTermination()
       val kept = spark.read.parquet(s"$out/curated").count()
       println(s"""{"metric":"curate_stream","n_kept":$kept,"out":"$out/curated"}""")

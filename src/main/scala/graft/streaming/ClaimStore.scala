@@ -50,28 +50,11 @@ import graft.table.SnapTable
   *    run(s) it just created — O(new claims) sidecar bytes, the same
   *    LSM bound as the data rewrite itself — and the probe is the
   *    union over the ≤ `maxRuns` live run filters (per-run fpp is
-  *    budgeted at `bloomFpp / maxRuns` so the union stays inside
-  *    `bloomFpp`). Immutable files cache forever: each run filter is
+  *    budgeted at `BloomFpp / maxRuns` so the union stays inside
+  *    `BloomFpp`). Immutable files cache forever: each run filter is
   *    broadcast once per driver lifetime and parsed once per executor
   *    (keyed by the broadcast value's identity), so steady-state
-  *    batches pay zero sidecar bytes. Nothing is ever rewritten whole;
-  *    the pre-r8 mutable `bloom.bin` (one global filter, rewritten and
-  *    re-broadcast O(corpus) per fold) survives only as a read-only
-  *    legacy: runs fully inside its covered set keep probing through
-  *    it until a merge gives them their own filter, after which the
-  *    file is deleted.
-  *
-  *  - **Hash sharding for the 10^12-claim shape.** `Config.shards > 1`
-  *    splits a domain into N independent shard roots
-  *    (`<root>/shard-<k>`, routed by `xxhash64(hash) mod N`): per-shard
-  *    runs, filters, folds and watermarks, with probes routed so each
-  *    shard reads only its own batch slice. Per-batch read and
-  *    per-fold write bounds are unchanged — each shard is simply a
-  *    claim store over 1/N of the key space — and shards can live on
-  *    separate stores/drivers at deployment scale. Shard routing is
-  *    part of the root's identity: mixing sharded and unsharded access
-  *    to one root is refused loudly (a silent mix would re-admit every
-  *    duplicate whose claims live in the other layout).
+  *    batches pay zero sidecar bytes. Nothing is ever rewritten whole.
   *
   * Correctness never depends on any filter: filters only PRUNE
   * definitely-absent probes. A missing/torn/corrupt filter file
@@ -107,36 +90,29 @@ object ClaimStore {
     val probeFilters = new java.util.concurrent.atomic.AtomicLong(0)
     val probeFppPpm = new java.util.concurrent.atomic.AtomicLong(0)
     val foldSidecarBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    /** plannedSeenBytes broken out per (shard) root — the per-shard
-      * batch-boundedness witness for sharded trajectories.
-      */
-    val perRootSeenBytes =
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    def reset(): Unit = {
+    def reset(): Unit =
       Seq(plannedSeenBytes, bloomProbeBytes, baseFilesSelected, baseFilesTotal,
         positives, fullFallbacks, probeFilters, probeFppPpm, foldSidecarBytes)
         .foreach(_.set(0))
-      perRootSeenBytes.clear()
-    }
-    private[ClaimStore] def planned(root: String, n: Long): Unit = {
-      plannedSeenBytes.addAndGet(n)
-      perRootSeenBytes.merge(root, java.lang.Long.valueOf(n),
-        (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
-    }
   }
 
-  /** `bloomFpp` is the TOTAL probe false-positive budget per store:
-    * each run filter is sized to its run's exact manifest rows at
-    * `bloomFpp / maxRuns`, so the union over ≤ maxRuns filters stays
+  /** The probe filters' TOTAL false-positive budget per store: each
+    * run filter is sized to its run's exact manifest rows at
+    * `BloomFpp / maxRuns`, so the union over ≤ maxRuns filters stays
     * inside the budget and there is no corpus-size knob to outgrow.
-    * `chunkFpp` sizes the PER-CHUNK filters (each to its own chunk's
+    * `ChunkFpp` sizes the PER-CHUNK filters (each to its own chunk's
     * row count): these drive chunk SELECTION, so their fpp bounds the
     * expected spurious chunk reads per batch (positives x chunks x
-    * chunkFpp), not just spurious probe rows. Both filter kinds are
-    * WRITE-ONCE — an fpp change applies only to filters created after
-    * it (existing files keep their sizing until their run/chunk is
-    * merged away); it never needs a rebuild because any fpp only
-    * trades read amplification, never correctness.
+    * ChunkFpp), not just spurious probe rows. Both filter kinds are
+    * WRITE-ONCE; any fpp only trades read amplification, never
+    * correctness.
+    */
+  private val BloomFpp = 0.01
+  private val ChunkFpp = 1e-4
+  /** Manifest snapshots each fold's expire keeps. */
+  private val ExpireKeep = 64
+
+  /** `foldTargetBytes` is the target size of a folded sorted chunk.
     *
     * `maxRuns` caps the number of sorted base RUNS (each fold appends
     * one): when exceeded, [[fold]] merges the smallest runs back to the
@@ -148,305 +124,24 @@ object ClaimStore {
     * linear-in-history write amplification of a fixed-period major
     * compaction.
     *
-    * `shards` > 1 splits the domain into that many independent shard
-    * roots routed by hash — the 10^12-claim deployment shape. The
-    * shard count is part of the store's on-disk identity: pick it at
-    * creation and keep passing the same value (re-sharding = stand up
-    * a new root and replay, exactly as for any hash-partitioned
-    * store).
-    *
-    * Sizing `foldTargetBytes` at deployment scale: commit metadata is
-    * amortized O(delta + files/checkpointEvery) (SnapTable delta
-    * manifests), but each CHECKPOINT manifest still lists the table's
-    * live files and each head resolution reads one — keep files ≈
-    * corpus/foldTargetBytes in the low thousands per shard (e.g. ~1 GB
-    * chunks per 10 TB shard, vs the sandbox-tuned 8 MB default).
-    * Sharding divides both the file count and the manifest term by N.
+    * `positivesCap` bounds the filter-positive hashes a probe collects
+    * to the driver; past it the probe reads the covered base in full.
     */
   final case class Config(
-      bloomFpp: Double = 0.01,
-      chunkFpp: Double = 1e-4,
       positivesCap: Int = 100000,
       foldTargetBytes: Long = 8L * 1024 * 1024,
-      expireKeep: Int = 64,
-      maxRuns: Int = 8,
-      shards: Int = 1)
+      maxRuns: Int = 8)
 
   private def perRunFpp(cfg: Config): Double =
-    cfg.bloomFpp / math.max(1, cfg.maxRuns)
+    BloomFpp / math.max(1, cfg.maxRuns)
 
   private def batchOf(e: SnapTable.FileEntry): Option[Long] =
     e.tag.collect { case t if t.startsWith("b:") => t.stripPrefix("b:").toLong }
   private def isBase(e: SnapTable.FileEntry): Boolean = e.tag.contains("base")
 
-  // ---- hash sharding ---------------------------------------------------
-
-  private def shardRoot(root: String, s: Int): String = s"$root/shard-$s"
-  private def shardExpr(hCol: String, n: Int) =
-    pmod(xxhash64(col(hCol).cast("string")), lit(n.toLong))
-
-  // Shard stores are fully independent (disjoint roots, disjoint key
-  // slices), so their per-batch actions run CONCURRENTLY from a small
-  // driver pool — N sequential probe/append/fold jobs per domain would
-  // otherwise serialize a deployment-scale shard count onto the batch
-  // critical path. Results keep shard order; the first failure
-  // propagates (a missed shard means missed claims — never best-effort).
-  // r9 (VERDICT/ADVICE item): not a fixed 8-thread pool — that silently
-  // serialized deployment-scale shard counts (3 domains x N shards) onto
-  // the batch critical path. Demand-sized up to a 64-thread cap (threads
-  // spend their time blocked on Spark jobs, not CPU), idle threads
-  // retire after 60 s, and past the cap the submitting thread runs the
-  // action itself (CallerRuns) — bounded, never rejected.
-  private lazy val shardPool: java.util.concurrent.ExecutorService =
-    new java.util.concurrent.ThreadPoolExecutor(
-      0, 64, 60L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.SynchronousQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-claim-shard")
-        t.setDaemon(true)
-        t
-      },
-      new java.util.concurrent.ThreadPoolExecutor.CallerRunsPolicy())
-
-  /** r9 (VERDICT "next round" #3, taken as a pure optimization): the
-    * sharded paths slice the caller's frame with `where(shard == s)` —
-    * on an unpinned frame each shard's job re-runs the whole upstream
-    * derivation, multiplying its cost by the shard count instead of
-    * splitting it. Materialize once (localCheckpoint) before the
-    * fan-out; already-pinned frames (LogicalRDD — the streaming
-    * callers' `pin`) pass through untouched.
-    */
-  private def pinOnce(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _ if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE =>
-        df // caller-persisted (the streaming funnel's `pin`): cache is shared
-      case _ => df.localCheckpoint()
-    }
-
-  private def perShard[T](n: Int)(body: Int => T): Vector[T] = {
-    val futs = (0 until n).map(s =>
-      shardPool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = body(s)
-      }))
-    try futs.map(_.get()).toVector
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        futs.foreach(_.cancel(false))
-        throw e.getCause
-    }
-  }
-
-  // One-time per-JVM layout guards: touching a root with the WRONG
-  // shard setting must fail loudly, not silently serve an empty seen
-  // set (which would re-admit every duplicate claimed under the other
-  // layout). The shard COUNT is persisted in a `<root>/shards` marker,
-  // written by the first WRITE-path touch — without it a 4-shard store
-  // opened with shards=8 routes probes to the wrong (often empty)
-  // shard roots and re-admits every duplicate with no error anywhere.
-  // The per-JVM cache holds a validation FUTURE, published before the
-  // validation runs and removed on failure: a concurrent same-count
-  // caller must BLOCK on the outcome, not sail past a marker check
-  // that is about to refuse (it would run mis-sharded probes with no
-  // error on its own path). Only a DECIDED count (marker present or
-  // written) is cached — a read on a still-empty root validates
-  // vacuously and leaves the decision to the first writer.
-  private val shardGuarded = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.FutureTask[Int]]()
-
-  private def shardMarkerPath(root: String) = new Path(root, "shards")
-
-  private def guardSharded(spark: SparkSession, root: String, shards: Int,
-                           persist: Boolean): Unit = {
-    while (true) {
-      val cached = shardGuarded.get(root)
-      if (cached != null) {
-        cached.run() // no-op if already running/finished elsewhere
-        val n = try cached.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            shardGuarded.remove(root, cached) // a later open may retry
-            throw e.getCause
-        }
-        if (n >= 0) {
-          if (n != shards) throw new IllegalStateException(
-            s"claim root $root is a $n-shard store but was opened with " +
-              s"shards=$shards — the shard count is part of the store's " +
-              "on-disk identity (re-sharding = new root)")
-          return
-        }
-        // n < 0: the cached task was another READER's vacuous validation
-        // of a still-empty root (no decision, the creator is about to
-        // uncache it) — not a real count; comparing it against `shards`
-        // would spuriously crash a concurrent reader. Uncache and retry.
-        shardGuarded.remove(root, cached)
-      } else {
-        val task = new java.util.concurrent.FutureTask[Int](() =>
-          decideShardCount(spark, root, shards, persist))
-        if (shardGuarded.putIfAbsent(root, task) == null) {
-          task.run()
-          val n = try task.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              shardGuarded.remove(root, task)
-              throw e.getCause
-          }
-          // undecided (read path on an empty root): validated vacuously —
-          // uncache so the first WRITER's count decides, not a reader's
-          if (n < 0) shardGuarded.remove(root, task)
-          return
-        }
-        // lost the publish race: loop and block on the winner's outcome
-      }
-    }
-  }
-
-  /** The store's shard count as decided by disk state, or -1 when
-    * nothing on disk decides it and `persist` is false. Throws on any
-    * mismatch with the requested `shards`.
-    */
-  private def decideShardCount(spark: SparkSession, root: String,
-                               shards: Int, persist: Boolean): Int = {
-    val rp = new Path(root)
-    val f = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (f.exists(new Path(rp, "meta")))
-      throw new IllegalStateException(
-        s"claim root $root holds an UNSHARDED store (meta/ present) but " +
-          "was opened with Config.shards > 1 — refusing: " +
-          "its claims would be invisible and duplicates re-admitted")
-    readShardMarker(f, shardMarkerPath(root)) match {
-      case Some(n) if n != shards =>
-        throw new IllegalStateException(
-          s"claim root $root is a $n-shard store (per its shards marker) " +
-            s"but was opened with shards=$shards — refusing: probes would " +
-            "route to the wrong shard roots and duplicates be re-admitted")
-      case Some(n) => n
-      case None =>
-        val present = (if (!f.exists(rp)) Seq.empty[Int]
-        else f.listStatus(rp).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("shard-"))
-          .flatMap(s => scala.util.Try(
-            s.getPath.getName.stripPrefix("shard-").toInt).toOption)).toSet
-        if (present.nonEmpty) {
-          // shard dirs without a marker = the marker was lost (the
-          // marker is written before the first shard dir ever is).
-          // Adopt ONLY on an exact match — dirs under a larger declared
-          // count would silently re-route half the key space (and then
-          // persist the wrong count); anything else needs the operator
-          // to restore the marker
-          if (present != (0 until shards).toSet)
-            throw new IllegalStateException(
-              s"claim root $root has shard dirs {${present.toSeq.sorted
-                .mkString(",")}} and no shards marker, which does not match " +
-                s"shards=$shards exactly — refusing to guess; restore the " +
-                "marker (a single positive int in <root>/shards)")
-          writeShardMarker(spark, f, root, shards)
-          shards
-        } else if (persist) {
-          writeShardMarker(spark, f, root, shards)
-          shards
-        } else -1 // nothing decides the count yet; don't let a read fix it
-    }
-  }
-
-  private def readShardMarker(f: org.apache.hadoop.fs.FileSystem,
-                              p: Path): Option[Int] =
-    if (!f.exists(p)) None
-    else {
-      // a torn/corrupt marker must REFUSE, not silently pass: the
-      // marker exists precisely because guessing the shard count wrong
-      // is a silent-duplicate bug. Read-until-full (a single read() may
-      // legally return a prefix — '16' truncated to '1' would refuse a
-      // correctly-configured open).
-      val in = f.open(p)
-      val s = try {
-        val buf = new Array[Byte](32)
-        var off = 0
-        var n = in.read(buf, off, buf.length - off)
-        while (n > 0 && off + n < buf.length) {
-          off += n
-          n = in.read(buf, off, buf.length - off)
-        }
-        if (n > 0) off = buf.length
-        new String(buf, 0, off, "UTF-8").trim
-      } finally in.close()
-      val v = scala.util.Try(s.toInt).toOption.filter(_ > 0)
-      if (v.isEmpty) throw new IllegalStateException(
-        s"claim-shard marker $p is unreadable ('$s') — refusing to guess the " +
-          "shard count; restore the marker (a single positive int) to proceed")
-      v
-    }
-
-  private def writeShardMarker(spark: SparkSession,
-                               f: org.apache.hadoop.fs.FileSystem, root: String,
-                               shards: Int): Unit = {
-    val tmp = new Path(root,
-      s".shards.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    f.mkdirs(new Path(root))
-    val out = f.create(tmp, true)
-    try out.write(s"$shards\n".getBytes("UTF-8")) finally out.close()
-    // true no-clobber CAS (hard link / Rename.NONE): a plain rename on
-    // the local filesystem silently OVERWRITES, so two first-openers
-    // declaring different counts could both "win" and proceed split-
-    // brained — the loser must instead re-validate against the winner
-    if (!SnapTable.publishNoClobber(f, spark, tmp, shardMarkerPath(root))) {
-      f.delete(tmp, false)
-      readShardMarker(f, shardMarkerPath(root)) match {
-        case Some(n) if n != shards => throw new IllegalStateException(
-          s"claim root $root concurrently marked as a $n-shard store; " +
-            s"this open asked for shards=$shards — refusing")
-        case _ => ()
-      }
-    }
-  }
-
-  /** The last batch id whose claims are COMMITTED (folds preserve it).
-    * Sharded: the minimum over shards — a batch counts only once EVERY
-    * shard has it (a crash between shard appends leaves the batch
-    * uncommitted; the replay re-append is per-shard idempotent).
-    */
-  def lastBatch(spark: SparkSession, root: String,
-                cfg: Config = Config()): Option[Long] =
-    if (cfg.shards <= 1) lastBatch1(spark, root)
-    else {
-      guardSharded(spark, root, cfg.shards, persist = false)
-      val per = perShard(cfg.shards)(s => lastBatch1(spark, shardRoot(root, s)))
-      if (per.exists(_.isEmpty)) None else Some(per.flatten.min)
-    }
-
-  private def lastBatch1(spark: SparkSession, root: String): Option[Long] = {
-    guardUnsharded(spark, root)
+  /** The last batch id whose claims are COMMITTED (folds preserve it). */
+  def lastBatch(spark: SparkSession, root: String): Option[Long] =
     SnapTable.lastWatermark(spark, root).map(_.toLong)
-  }
-
-  // Layout cross-guard for an UNSHARDED open: a root previously used
-  // sharded (`shard-0/meta` present) must be refused, or its claims
-  // would be invisible and every duplicate re-admitted. Checked once
-  // per root per JVM — the memo keeps the filesystem probe off every
-  // later lastBatch/seenFor/fold call — and concurrent first callers
-  // block on the one check (a failed check is uncached, so a later
-  // open re-checks).
-  private val unshardedChecked =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[Unit]]()
-
-  private def guardUnsharded(spark: SparkSession, root: String): Unit = {
-    val task = unshardedChecked.computeIfAbsent(root,
-      _ => new java.util.concurrent.FutureTask[Unit](() => {
-        val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (f.exists(new Path(shardRoot(root, 0), "meta")))
-          throw new IllegalStateException(
-            s"claim root $root holds a SHARDED store (shard-0/meta present) but " +
-              "was opened unsharded — refusing: pass the same Config.shards or " +
-              "its claims would be invisible and duplicates re-admitted")
-      }))
-    task.run() // first caller executes; concurrent callers no-op here...
-    try task.get() // ...and block on completion (or rethrow its failure)
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        unshardedChecked.remove(root, task)
-        throw e.getCause
-    }
-  }
 
   /** Commit this batch's new claims (single column `hCol`) atomically.
     * Idempotent under replay: if a previous attempt of `batchId` (or a
@@ -455,25 +150,10 @@ object ClaimStore {
     * deterministic function of the batch and the earlier claim state,
     * so the committed set is exactly what this attempt would write.
     * An empty claim set commits as a pure watermark bump (no files).
-    * Sharded: one append per shard (each independently replay-skipped,
-    * so a crash between shard appends resumes exactly).
     */
   def appendClaims(spark: SparkSession, root: String, claims: DataFrame,
-                   hCol: String, batchId: Long,
-                   cfg: Config = Config()): Unit =
-    if (cfg.shards <= 1) appendClaims1(spark, root, claims, hCol, batchId)
-    else {
-      guardSharded(spark, root, cfg.shards, persist = true)
-      val pinned = pinOnce(claims.select(col(hCol)))
-      perShard(cfg.shards)(s =>
-        appendClaims1(spark, shardRoot(root, s),
-          pinned.where(shardExpr(hCol, cfg.shards) === s), hCol, batchId))
-      ()
-    }
-
-  private def appendClaims1(spark: SparkSession, root: String, claims: DataFrame,
-                            hCol: String, batchId: Long): Unit = {
-    if (lastBatch1(spark, root).exists(_ >= batchId)) return
+                   hCol: String, batchId: Long): Unit = {
+    if (lastBatch(spark, root).exists(_ >= batchId)) return
     // exactStats off: the claim read path never uses manifest row
     // counts, and skipping the read-back stats job halves the per-batch
     // write cost of each domain
@@ -492,43 +172,24 @@ object ClaimStore {
     * check. `batchHashes` must be the batch's distinct claim hashes
     * (callers pin its lineage: it is collected through the probe here
     * and reused in their own joins). None = no earlier claims.
-    * Sharded: the union of per-shard reads, each probing only its own
-    * slice of the batch.
     */
   def seenFor(spark: SparkSession, root: String, batchHashes: DataFrame,
               hCol: String, batchId: Long,
-              cfg: Config = Config()): Option[DataFrame] =
-    if (cfg.shards <= 1) seenFor1(spark, root, batchHashes, hCol, batchId, cfg)
-    else {
-      guardSharded(spark, root, cfg.shards, persist = false)
-      val pinned = pinOnce(batchHashes)
-      val parts = perShard(cfg.shards)(s =>
-        seenFor1(spark, shardRoot(root, s),
-          pinned.where(shardExpr(hCol, cfg.shards) === s),
-          hCol, batchId, cfg)).flatten
-      if (parts.isEmpty) None else Some(parts.reduce(_ union _))
-    }
-
-  private def seenFor1(spark: SparkSession, root: String, batchHashes: DataFrame,
-                       hCol: String, batchId: Long,
-                       cfg: Config): Option[DataFrame] = {
-    guardUnsharded(spark, root)
+              cfg: Config = Config()): Option[DataFrame] = {
     val snap = SnapTable.snapshot(spark, root).getOrElse(return None)
     val recent = snap.files.filter(e => batchOf(e).exists(_ < batchId))
     val base = snap.files.filter(isBase)
     Metrics.baseFilesTotal.addAndGet(base.size.toLong)
     val reads = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     if (recent.nonEmpty) {
-      Metrics.planned(root, recent.map(_.bytes).sum)
+      Metrics.plannedSeenBytes.addAndGet(recent.map(_.bytes).sum)
       reads += spark.read.parquet(recent.map(_.path): _*)
     }
     if (base.nonEmpty) {
       // Partition the base at RUN granularity by probe-filter coverage:
       // a run with its own immutable filter probes through it; a run
-      // without one may still be covered by the read-only legacy
-      // bloom.bin (pre-r8 layout — every chunk inside its covered set);
-      // anything else is read in full (crashed filter write, healed by
-      // the next fold) — correctness first.
+      // without one (crashed filter write, healed by the next fold) is
+      // read in full — correctness first.
       val runs = base.groupBy(runOf)
       val covered = Vector.newBuilder[SnapTable.FileEntry]
       val uncovered = Vector.newBuilder[SnapTable.FileEntry]
@@ -536,8 +197,6 @@ object ClaimStore {
         .empty[org.apache.spark.broadcast.Broadcast[Array[Byte]]]
       var probeBytes = 0L
       var fppSum = 0.0
-      lazy val legacy = loadBloom(spark, root)
-      var legacyUsed = false
       for ((stamp, fsRun) <- runs) {
         runFilterFor(spark, root, stamp) match {
           case Some(rf) =>
@@ -545,24 +204,14 @@ object ClaimStore {
             probeBcasts += rf.bcast
             probeBytes += rf.bytes.length.toLong
             fppSum += rf.fpp
-          case None =>
-            if (legacy.exists(lb =>
-                fsRun.forall(e => lb.covered(new Path(e.path).getName)))) {
-              covered ++= fsRun
-              legacyUsed = true
-            } else uncovered ++= fsRun
+          case None => uncovered ++= fsRun
         }
-      }
-      if (legacyUsed) {
-        probeBcasts += legacy.get.bcast
-        probeBytes += legacy.get.bytes.length.toLong
-        fppSum += legacy.get.fpp // the one saturable (fixed-size) filter
       }
       val coveredV = covered.result()
       val uncoveredV = uncovered.result()
       if (uncoveredV.nonEmpty) {
         Metrics.fullFallbacks.incrementAndGet()
-        Metrics.planned(root, uncoveredV.map(_.bytes).sum)
+        Metrics.plannedSeenBytes.addAndGet(uncoveredV.map(_.bytes).sum)
         reads += spark.read.parquet(uncoveredV.map(_.path): _*)
       }
       if (coveredV.nonEmpty) {
@@ -577,7 +226,7 @@ object ClaimStore {
             // over the cap: a pathologically duplicate-heavy batch —
             // read the covered base in full (correct, recorded)
             Metrics.fullFallbacks.incrementAndGet()
-            Metrics.planned(root, coveredV.map(_.bytes).sum)
+            Metrics.plannedSeenBytes.addAndGet(coveredV.map(_.bytes).sum)
             reads += spark.read.parquet(coveredV.map(_.path): _*)
           case Some(sorted) if sorted.strs.nonEmpty =>
             Metrics.positives.addAndGet(sorted.strs.length.toLong)
@@ -589,7 +238,7 @@ object ClaimStore {
             // The per-chunk Bloom (an SSTable filter block) selects
             // only chunks that actually CONTAIN a positive: reads are
             // bounded by the batch's true duplicate spread plus
-            // positives x chunks x chunkFpp, independent of run count.
+            // positives x chunks x ChunkFpp, independent of run count.
             // Bounds first, then the chunk filter: within one run the
             // chunks are range-partitioned (disjoint bounds), so a
             // positive is bounds-candidate in <= 1 chunk per run —
@@ -605,7 +254,7 @@ object ClaimStore {
                   val hb = utf8(h)
                   val i = lowerBound(sorted.bytes, utf8(l))
                   i < sorted.strs.length && cmpUtf8(sorted.bytes(i), hb) <= 0 && {
-                    chunkBloomFor(spark, root, legacy, name) match {
+                    chunkBloomFor(spark, root, name) match {
                       case Some(cb) =>
                         var sel = false; var k = i
                         while (!sel && k < sorted.strs.length &&
@@ -621,7 +270,7 @@ object ClaimStore {
             }
             Metrics.baseFilesSelected.addAndGet(picked.size.toLong)
             if (picked.nonEmpty) {
-              Metrics.planned(root, picked.map(_.bytes).sum)
+              Metrics.plannedSeenBytes.addAndGet(picked.map(_.bytes).sum)
               reads += spark.read.parquet(picked.map(_.path): _*)
                 .where(col(hCol).isInCollection(sorted.strs))
             }
@@ -642,19 +291,8 @@ object ClaimStore {
     * engine's commit order, so no folded batch can replay.
     */
   def fold(spark: SparkSession, root: String, hCol: String, upToBatch: Long,
-           cfg: Config = Config()): Unit =
-    if (cfg.shards <= 1) fold1(spark, root, hCol, upToBatch, cfg)
-    else {
-      guardSharded(spark, root, cfg.shards, persist = true)
-      perShard(cfg.shards)(s =>
-        fold1(spark, shardRoot(root, s), hCol, upToBatch, cfg))
-      ()
-    }
-
-  private def fold1(spark: SparkSession, root: String, hCol: String,
-                    upToBatch: Long, cfg: Config): Unit = {
+           cfg: Config = Config()): Unit = {
     if (upToBatch < 0) return
-    guardUnsharded(spark, root)
     val snap = SnapTable.snapshot(spark, root).getOrElse(return)
     val victims = snap.files.filter(e => batchOf(e).exists(_ <= upToBatch))
     if (victims.nonEmpty) {
@@ -666,7 +304,7 @@ object ClaimStore {
     }
     mergeRunsOverCap(spark, root, hCol, cfg)
     refreshFilters(spark, root, hCol, cfg)
-    SnapTable.expire(spark, root, keepLast = cfg.expireKeep)
+    SnapTable.expire(spark, root, keepLast = ExpireKeep)
   }
 
   /** The staging stamp shared by the chunks of one sorted run
@@ -714,7 +352,7 @@ object ClaimStore {
   //   <root>/bloomruns/<runStamp>.gbf   one PROBE filter per sorted run
   //                                     (blob + CRC32 trailer), sized
   //                                     from the run's exact manifest
-  //                                     rows at bloomFpp/maxRuns; the
+  //                                     rows at BloomFpp/maxRuns; the
   //                                     probe is the union over live
   //                                     run filters. Written by the
   //                                     fold that created the run —
@@ -731,63 +369,6 @@ object ClaimStore {
   // CRC or its parse and is deleted + treated as absent — degrading
   // probes to full reads or selection to [lo,hi] bounds, never to a
   // wrong answer.
-  //
-  // Legacy (pre-r8): `<root>/bloom.bin` = one mutable GLOBAL filter
-  // (header line with covered chunk names + payload), rewritten and
-  // re-broadcast whole per fold — the O(corpus)-per-fold term this
-  // layout removes. It is now read-only: runs entirely inside its
-  // covered set probe through it until a merge gives them their own
-  // run filter; once no run needs it, the fold deletes it. First-r7
-  // sidecars additionally embedded per-chunk blobs in bloom.bin; those
-  // are still migrated out to chunk files by the next fold.
-
-  private final case class LoadedBloom(bytes: Array[Byte], covered: Set[String],
-                                       legacyChunks: Map[String, Array[Byte]],
-                                       fpp: Double,
-                                       bcast: org.apache.spark.broadcast.Broadcast[Array[Byte]])
-
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Option[LoadedBloom])]()
-
-  private def bloomPath(root: String) = new Path(root, "bloom.bin")
-
-  private def loadBloom(spark: SparkSession, root: String): Option[LoadedBloom] = {
-    val p = bloomPath(root)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = try { if (f.exists(p)) Some(f.getFileStatus(p)) else None }
-    catch { case scala.util.control.NonFatal(_) => None }
-    st match {
-      case None => None
-      case Some(s) =>
-        val key = new Path(root).toString
-        // the legacy file is read-only now, but (mtime, length) identity
-        // is kept: an older engine sharing the root could still fold it
-        val stamp = (s.getModificationTime, s.getLen)
-        // atomic check-and-load (compute), NOT get-then-put: two threads
-        // racing the same miss must converge on one broadcast. A
-        // replaced entry's broadcast (stamp change — rare, the file is
-        // read-only here) is NOT destroyed: a racing probe may still
-        // hold it, and a bounded leak beats a crashed job.
-        bloomCache.compute(key, (_, cur) => {
-          val curValid = cur != null && cur._1 == stamp &&
-            // a SparkContext restart kills the broadcast under a cached
-            // entry; serving it would force a fresh (leaked) broadcast
-            // on every probe — evict and reload instead
-            cur._2.forall(b => try { b.bcast.value; true }
-            catch { case scala.util.control.NonFatal(_) => false })
-          if (curValid) cur else (stamp, readBloomFile(spark, f, p))
-        })._2
-    }
-  }
-
-  /** Evict the retired legacy filter — unpersist, not destroy, for the
-    * same concurrent-holder reason as [[dropRunFilter]].
-    */
-  private def dropBloomCache(root: String): Unit = {
-    val old = bloomCache.remove(new Path(root).toString)
-    if (old != null) old._2.foreach(b => try b.bcast.unpersist(false)
-    catch { case scala.util.control.NonFatal(_) => })
-  }
 
   private def readFully(f: org.apache.hadoop.fs.FileSystem, p: Path): Array[Byte] = {
     val in = f.open(p)
@@ -799,50 +380,6 @@ object ClaimStore {
       buf.toByteArray
     } finally in.close()
   }
-
-  private def readBloomFile(spark: SparkSession, f: org.apache.hadoop.fs.FileSystem,
-                            p: Path): Option[LoadedBloom] =
-    try {
-      val all = readFully(f, p)
-      val nl = all.indexOf('\n'.toByte)
-      if (nl < 0) return None
-      val header = graft.json.Json.parse(new String(all, 0, nl, "UTF-8"))
-        .asInstanceOf[graft.json.JObj]
-      val payload = java.util.Arrays.copyOfRange(all, nl + 1, all.length)
-      val crc = new java.util.zip.CRC32
-      crc.update(payload)
-      def num(k: String) = header(k).asInstanceOf[graft.json.JNum].literal.toLong
-      if (crc.getValue != num("crc")) return None
-      val covered = header("covered").asInstanceOf[graft.json.JArr].items
-        .collect { case graft.json.JStr(s) => s }.toSet
-      // pre-chunk-filter files have no glen: the whole payload is the
-      // global filter and chunk selection falls back to [lo,hi] bounds
-      // until the next fold heals the chunk files
-      val glen = header("glen") match {
-        case graft.json.JNum(l) => l.toLong.toInt
-        case _ => payload.length
-      }
-      val global = java.util.Arrays.copyOfRange(payload, 0, glen)
-      // first-r7 embedded chunk blobs; migrated to files by the next fold
-      val legacyChunks: Map[String, Array[Byte]] = header.get("chunks") match {
-        case Some(graft.json.JArr(items)) => items.collect {
-          case o: graft.json.JObj =>
-            val n = o("n").asInstanceOf[graft.json.JStr].s
-            val off = o("off").asInstanceOf[graft.json.JNum].literal.toLong.toInt
-            val len = o("len").asInstanceOf[graft.json.JNum].literal.toLong.toInt
-            n -> java.util.Arrays.copyOfRange(payload, off, off + len)
-        }.toMap
-        case _ => Map.empty
-      }
-      // parsing here both VALIDATES the blob (CRC-valid garbage is as
-      // absent as a torn file) and yields the saturation estimate the
-      // probe metric needs: a legacy filter overflowed past its fixed
-      // sizing is exactly the case probeFppPpm exists to expose
-      val fpp = BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(global)).expectedFpp()
-      Some(LoadedBloom(global, covered, legacyChunks, fpp,
-        spark.sparkContext.broadcast(global)))
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   private def serializeBloom(bf: BloomFilter): Array[Byte] = {
     val buf = new java.io.ByteArrayOutputStream()
@@ -1003,9 +540,7 @@ object ClaimStore {
     * chunk size — 512 filters of 256 MB chunks at fpp 1e-4 is ~10 GB):
     * chunk filter files are immutable AND uniquely named (the 128-bit
     * staging stamp), so a cached parse is never stale — but an ABSENT
-    * file is never cached (it may be healed by the next fold). Legacy
-    * sidecars serve their embedded blobs through the same cache key
-    * space.
+    * file is never cached (it may be healed by the next fold).
     */
   private object chunkFilterCache {
     private val maxBytes = 64L * 1024 * 1024
@@ -1028,28 +563,25 @@ object ClaimStore {
   }
 
   private def chunkBloomFor(spark: SparkSession, root: String,
-                            legacy: => Option[LoadedBloom],
                             chunkName: String): Option[BloomFilter] = {
     val key = s"${new Path(root).toString}#$chunkName"
     val cached = chunkFilterCache.get(key)
     if (cached.isDefined) return cached
-    val f = bloomPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fromLegacy = legacy.flatMap(_.legacyChunks.get(chunkName))
-    val bytes = fromLegacy.orElse(readTrailedBlob(f, chunkFilePath(root, chunkName)))
-    bytes.flatMap { arr =>
-      // a CRC-valid but unparseable blob (corrupt legacy header offsets,
-      // a sketch-format change) must DEGRADE to bounds, not wedge the
-      // stream: the parse failure is as definitive as a CRC mismatch,
-      // so delete a file-backed filter for the next fold to rebuild
+    val p = chunkFilePath(root, chunkName)
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readTrailedBlob(f, p).flatMap { arr =>
+      // a CRC-valid but unparseable blob (a sketch-format change) must
+      // DEGRADE to bounds, not wedge the stream: the parse failure is
+      // as definitive as a CRC mismatch, so delete the filter for the
+      // next fold to rebuild
       try {
         val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(arr))
         chunkFilterCache.put(key, bf, arr.length.toLong)
         Some(bf)
       } catch {
         case scala.util.control.NonFatal(_) =>
-          if (fromLegacy.isEmpty)
-            try f.delete(chunkFilePath(root, chunkName), false)
-            catch { case scala.util.control.NonFatal(_) => }
+          try f.delete(p, false)
+          catch { case scala.util.control.NonFatal(_) => }
           None
       }
     }
@@ -1073,7 +605,6 @@ object ClaimStore {
           .foreach(s => try f.delete(s.getPath, false)
           catch { case scala.util.control.NonFatal(_) => })
       } catch { case scala.util.control.NonFatal(_) => }
-    sweep(new Path(root), _.startsWith(".bloom.tmp-")) // legacy writer's tmps
     sweep(chunkDir(root), n => n.startsWith(".") && n.contains(".tmp-"))
     sweep(runsDir(root), n => n.startsWith(".") && n.contains(".tmp-"))
   }
@@ -1089,10 +620,8 @@ object ClaimStore {
     * gets its selection filter FILE and every run its probe filter —
     * reading ONLY chunks that still lack one (in steady state exactly
     * the chunks the fold just wrote: the sidecar write is O(new
-    * claims)). Runs fully covered by the read-only legacy bloom.bin
-    * are left on it (no upgrade rebuild); once no run needs the legacy
-    * file it is deleted. Filter files of runs/chunks that left the
-    * base (merge victims) are deleted and their caches dropped.
+    * claims)). Filter files of runs/chunks that left the base (merge
+    * victims) are deleted and their caches dropped.
     */
   private def refreshFilters(spark: SparkSession, root: String, hCol: String,
                              cfg: Config): Unit = {
@@ -1103,22 +632,14 @@ object ClaimStore {
     val names = base.map(name).toSet
     val runs: Map[String, Vector[SnapTable.FileEntry]] =
       base.toVector.groupBy(runOf)
-    val f = bloomPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     sweepFilterTmps(f, root)
-    val legacy = loadBloom(spark, root)
     // ---- chunk selection filters: create missing, sweep departed
     val haveChunk = listFilterNames(f, chunkDir(root), ".bf")
-    val missingChunks = base.filter(e => !haveChunk(name(e)))
-    val (chunkFromLegacy, chunkBuild) = missingChunks.partition(e =>
-      legacy.exists(_.legacyChunks.contains(name(e))))
-    for (e <- chunkFromLegacy)
-      Metrics.foldSidecarBytes.addAndGet(writeTrailedBlob(f, chunkDir(root),
-        s"${name(e)}.bf", legacy.get.legacyChunks(name(e))))
-    // ---- run probe filters: create missing (unless legacy-covered)
+    val chunkBuild = base.filter(e => !haveChunk(name(e)))
+    // ---- run probe filters: create missing
     val haveRun = listFilterNames(f, runsDir(root), ".gbf")
-    val missingRuns = runs.keysIterator.filterNot(haveRun).toVector
-    val (legacyRuns, buildRuns) = missingRuns.partition(r =>
-      legacy.exists(lb => runs(r).forall(e => lb.covered(name(e)))))
+    val buildRuns = runs.keysIterator.filterNot(haveRun).toVector
     // resolve unknown row counts for everything to be read, in ONE job
     // (defensive: fold-written chunks always carry exact stats)
     val runChunks = buildRuns.flatMap(runs(_))
@@ -1141,13 +662,13 @@ object ClaimStore {
       r -> runs(r).map(e => rowsOf.getOrElse(name(e), math.max(e.rows, 16L))).sum)
       .toMap
     val (chunkBlobs, runBlobs) = buildFilters(spark, toRead, hCol,
-      chunkBuild.map(name).toSet, cfg.chunkFpp, runItems, perRunFpp(cfg))
+      chunkBuild.map(name).toSet, ChunkFpp, runItems, perRunFpp(cfg))
     for (e <- chunkBuild)
       Metrics.foldSidecarBytes.addAndGet(writeTrailedBlob(f, chunkDir(root),
         s"${name(e)}.bf", chunkBlobs.getOrElse(name(e),
           // a chunk whose read yielded no rows: an empty (all-negative)
           // filter is exactly right
-          serializeBloom(BloomFilter.create(16, cfg.chunkFpp)))))
+          serializeBloom(BloomFilter.create(16, ChunkFpp)))))
     for (r <- buildRuns)
       Metrics.foldSidecarBytes.addAndGet(writeTrailedBlob(f, runsDir(root),
         s"$r.gbf", runBlobs.getOrElse(r,
@@ -1157,11 +678,6 @@ object ClaimStore {
     haveRun.diff(runs.keySet).foreach { r =>
       f.delete(runFilePath(root, r), false)
       dropRunFilter(root, r)
-    }
-    // ---- retire the legacy global filter once nothing probes through it
-    if (legacy.isDefined && legacyRuns.isEmpty) {
-      f.delete(bloomPath(root), false)
-      dropBloomCache(root)
     }
   }
 
@@ -1289,25 +805,6 @@ object ClaimStore {
       i += 1
     }
     a.length - b.length
-  }
-
-  /** Test hook: drop the driver-side filter caches, as if this were a
-    * fresh driver resuming against the on-disk state (the caches are
-    * keyed by immutable file names, so production code never needs
-    * this — specs that hand-rewind the sidecar layout do).
-    */
-  private[streaming] def resetSidecarCachesForTest(): Unit = {
-    shardGuarded.clear() // a fresh driver re-validates the marker
-    runFilterCache.keySet().forEach { k =>
-      val old = runFilterCache.remove(k)
-      if (old != null) try old.bcast.destroy()
-      catch { case scala.util.control.NonFatal(_) => }
-    }
-    bloomCache.keySet().forEach { k =>
-      val old = bloomCache.remove(k)
-      if (old != null) old._2.foreach(b => try b.bcast.destroy()
-      catch { case scala.util.control.NonFatal(_) => })
-    }
   }
 
   /** First index i with xs(i) >= key (xs sorted in UTF-8 byte order). */

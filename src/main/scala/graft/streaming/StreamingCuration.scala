@@ -60,10 +60,9 @@ object StreamingCuration {
     * claims from batches it must ignore; rewinding the checkpoint that
     * far is out of contract, exactly as for the doc-commit sidecar).
     */
-  def compactSidecars(spark: SparkSession, outDir: String, upToBatch: Long,
-                      cfg: ClaimStore.Config = ClaimStore.Config()): Unit =
+  def compactSidecars(spark: SparkSession, outDir: String, upToBatch: Long): Unit =
     for ((name, hashCol) <- Sidecars)
-      ClaimStore.fold(spark, s"$outDir/$name", hashCol, upToBatch, cfg)
+      ClaimStore.fold(spark, s"$outDir/$name", hashCol, upToBatch)
 
   /** One micro-batch through the funnel with claim state under
     * `outDir`. Exposed (not private) so the idempotency property is
@@ -74,8 +73,7 @@ object StreamingCuration {
                    cfg: CurateConfig,
                    bench: Option[DataFrame] = None,
                    compactEvery: Int = 0,
-                   benchNg: Option[DataFrame] = None,
-                   claimCfg: ClaimStore.Config = ClaimStore.Config()): Unit = {
+                   benchNg: Option[DataFrame] = None): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     if (batch.isEmpty) return
@@ -93,9 +91,9 @@ object StreamingCuration {
     }
     try {
       processBatchImpl(batch, batchId, outDir, idCol, textCol, cfg, bench,
-        benchNg, pin, claimCfg)
+        benchNg, pin)
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        compactSidecars(spark, outDir, batchId - 1, claimCfg) // only committed batches
+        compactSidecars(spark, outDir, batchId - 1) // only committed batches
     } finally pinned.foreach(_.unpersist(false))
   }
 
@@ -104,8 +102,7 @@ object StreamingCuration {
                                cfg: CurateConfig,
                                bench: Option[DataFrame],
                                benchNg: Option[DataFrame],
-                               pin: DataFrame => DataFrame,
-                               claimCfg: ClaimStore.Config): Unit = {
+                               pin: DataFrame => DataFrame): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
 
@@ -139,7 +136,7 @@ object StreamingCuration {
         // side for free, so the extra shuffle would buy nothing
         val probe = marked.filter(col("elig")).select(col("_lh").as("lh"))
         val seenSet = ClaimStore.seenFor(spark, claimRoot("_lines_seen"),
-          probe, "lh", batchId, claimCfg).map(pin) // read once, used by keep join + claims anti-join
+          probe, "lh", batchId).map(pin) // read once, used by keep join + claims anti-join
         // NO broadcast hint on the seen side: recent claim files grow
         // with compactEvery and the pruned base read with the batch's
         // duplicate density (AQE picks the strategy)
@@ -157,7 +154,7 @@ object StreamingCuration {
           case Some(s) => newClaims.join(s, newClaims("lh") === s("lh"), "left_anti")
           case None => newClaims
         }
-        ClaimStore.appendClaims(spark, claimRoot("_lines_seen"), toWrite, "lh", batchId, claimCfg)
+        ClaimStore.appendClaims(spark, claimRoot("_lines_seen"), toWrite, "lh", batchId)
         keepDf.groupBy(col(idCol))
           .agg(concat_ws("\n", expr(
             "transform(array_sort(collect_list(case when keep then struct(idx, line) end)), x -> x.line)"))
@@ -189,7 +186,7 @@ object StreamingCuration {
           .select(col(idCol), col("i"))
         val newNg = first.select(md5(col("ng")).as("nh"))
         val seenNg = ClaimStore.seenFor(spark, claimRoot("_ngrams_seen"),
-          newNg, "nh", batchId, claimCfg).map(pin)
+          newNg, "nh", batchId).map(pin)
         val dupSeen = seenNg match {
           case Some(s) => occ.join(s.withColumnRenamed("nh", "_nh"), Seq("_nh"))
             .select(col(idCol), col("i"))
@@ -199,7 +196,7 @@ object StreamingCuration {
           case Some(s) => newNg.join(s, newNg("nh") === s("nh"), "left_anti")
           case None => newNg
         }
-        ClaimStore.appendClaims(spark, claimRoot("_ngrams_seen"), toWriteNg, "nh", batchId, claimCfg)
+        ClaimStore.appendClaims(spark, claimRoot("_ngrams_seen"), toWriteNg, "nh", batchId)
         val spans = graft.ops.Dedup.mergeSpans(
           dupIn.union(dupSeen.select(col(idCol), col("i"))), idCol, n)
         toks.join(spans, Seq(idCol), "left")
@@ -262,7 +259,7 @@ object StreamingCuration {
         val owners = survivors.groupBy("_h").agg(min(col(idCol)).as("_owner"))
         val newHashes = pin(survivors.select(col("_h").as("th")).distinct())
         val seen = ClaimStore.seenFor(spark, claimRoot("_texts_seen"),
-          newHashes, "th", batchId, claimCfg).map(pin)
+          newHashes, "th", batchId).map(pin)
         // seen side unbroadcast for the same growth reason as lines
         val ownersUnseen = seen match {
           case Some(s) => owners.join(s.withColumnRenamed("th", "_h")
@@ -276,7 +273,7 @@ object StreamingCuration {
           case Some(s) => newHashes.join(s, newHashes("th") === s("th"), "left_anti")
           case None => newHashes
         }
-        ClaimStore.appendClaims(spark, claimRoot("_texts_seen"), toWrite, "th", batchId, claimCfg)
+        ClaimStore.appendClaims(spark, claimRoot("_texts_seen"), toWrite, "th", batchId)
         withDecontam.withColumn("_h", md5(col("text_curated")))
           .join(ownersUnseen, Seq("_h"), "left")
           .withColumn("keep_exact",
@@ -306,12 +303,7 @@ object StreamingCuration {
             bench: Option[DataFrame] = None,
             trigger: Trigger = Trigger.AvailableNow(),
             compactEvery: Int = 0,
-            maxFilesPerTrigger: Int = 0,
-            // size claim-store filters for the EXPECTED DISTINCT CLAIM
-            // corpus, not the default: at 10^9+ claims the 4M-item
-            // default global filter saturates and pruning degrades to
-            // exact-check reads of most of the base
-            claimCfg: ClaimStore.Config = ClaimStore.Config()): StreamingQuery = {
+            maxFilesPerTrigger: Int = 0): StreamingQuery = {
     val schema = spark.read.parquet(docsDir).schema
     // static bench -> its n-gram set is computed and persisted ONCE for
     // the stream's lifetime instead of per micro-batch
@@ -330,7 +322,7 @@ object StreamingCuration {
       .trigger(trigger)
       .foreachBatch { (b: DataFrame, id: Long) =>
         processBatch(b, id, outDir, idCol, textCol, cfg, bench, compactEvery,
-          benchNg, claimCfg)
+          benchNg)
       }
       .start()
   }

@@ -50,24 +50,4 @@ class EntrySpec extends AnyFunSuite {
       RunCurate.main(Array("/tmp/in", "/tmp/out", "id", "text", "no-gopher"))
     }
   }
-
-  test("--claim-* flags size the claim store without code changes") {
-    val (cfg, rest) = RunCurateStream.parseClaimConfig(List(
-      "--claim-fpp", "0.02", "--claim-chunk-fpp", "1e-5",
-      "--claim-positives-cap", "5000", "--claim-fold-bytes", "1048576",
-      "--claim-max-runs", "4", "--claim-expire-keep", "16",
-      "--claim-shards", "8", "--min-words", "7"))
-    assert(cfg.bloomFpp == 0.02 && cfg.chunkFpp == 1e-5)
-    assert(cfg.positivesCap == 5000 && cfg.foldTargetBytes == 1048576L)
-    assert(cfg.maxRuns == 4 && cfg.expireKeep == 16 && cfg.shards == 8)
-    // non-claim flags pass through untouched for the curation parser
-    assert(rest == List("--min-words", "7"))
-    // no flags -> exact defaults
-    val (dflt, _) = RunCurateStream.parseClaimConfig(Nil)
-    assert(dflt == graft.streaming.ClaimStore.Config())
-    // a flag missing its value fails fast
-    intercept[IllegalArgumentException] {
-      RunCurateStream.parseClaimConfig(List("--claim-shards"))
-    }
-  }
 }

@@ -121,6 +121,17 @@ class PipelineSpec extends AnyFunSuite {
       ds.collect().map(t => (t.doc_id, t.subj, t.pred, t.obj)).sorted.toVector
     assert(rows(Pipeline.readTriplesSnap(spark, s"$out/triples")
       .select("doc_id", "subj", "pred", "obj").as[TripleRow]) == rows(Pipeline.triples(docs, dict)))
+    // a replayed run commits no second set of metrics rows: exactly one
+    // metrics commit carries run2's watermark, and its triple counts sum
+    // to the triples table once
+    RunPipeline.materialize(docs, _ => "utf-8", dict, out, "run2", resume = true, compact = false)
+    val mRoot = s"$out/metrics"
+    val run2Commits = graft.table.SnapTable.snapshotIds(spark, mRoot)
+      .count(v => graft.table.SnapTable.snapshot(spark, mRoot, Some(v)).get.watermark.contains("run2"))
+    assert(run2Commits == 1, s"$run2Commits metrics commits watermarked run2")
+    val run2Triples = graft.table.SnapTable.read(spark, mRoot).where($"run_id" === "run2")
+      .agg(org.apache.spark.sql.functions.sum("triple_count")).head.getLong(0)
+    assert(run2Triples == Pipeline.readTriplesSnap(spark, s"$out/triples").count())
   }
 
   test("Snap-backed triples: byte-identical N-Triples, bucket-pruned reads, snapshot compaction") {

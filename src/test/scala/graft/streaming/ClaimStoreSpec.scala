@@ -164,11 +164,10 @@ class ClaimStoreSpec extends AnyFunSuite {
     // bigger than the 100-claim run's (no global knob to saturate)
     assert(byName.last.length() > 2 * byName.head.length(),
       s"sizes ${byName.map(_.length()).mkString(",")}")
-    // an fpp change applies only to FUTURE filters: existing immutable
-    // files are not rewritten by the next fold
+    // existing immutable filter files are not rewritten by the next fold
     val before = byName.map(f => f.getName -> f.lastModified()).toMap
     ClaimStore.appendClaims(spark, root, hashes(3100 until 3150), "h", 2L)
-    ClaimStore.fold(spark, root, "h", 2L, ClaimStore.Config(bloomFpp = 0.10))
+    ClaimStore.fold(spark, root, "h", 2L)
     for (f <- byName)
       assert(f.lastModified() == before(f.getName), s"${f.getName} was rewritten")
     assert(seenSet(root, 0 until 3200, 3L) == hashSet(0 until 3150))
@@ -316,174 +315,11 @@ class ClaimStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("a pre-r8 legacy bloom.bin keeps serving old runs and is retired after merges") {
-    val root = tmp("cs14")
-    ClaimStore.appendClaims(spark, root, hashes(0 until 300), "h", 0L)
-    ClaimStore.fold(spark, root, "h", 0L)
-    ClaimStore.appendClaims(spark, root, hashes(300 until 600), "h", 1L)
-    ClaimStore.fold(spark, root, "h", 1L)
-    // rewind the sidecars to the pre-r8 layout: no run filters, one
-    // mutable global bloom.bin covering every base chunk (per-chunk
-    // files existed in r7 too, so they stay); cold driver caches
-    val runDir = new java.io.File(s"$root/bloomruns")
-    runDir.listFiles().foreach(_.delete())
-    ClaimStore.resetSidecarCachesForTest()
-    val covered = SnapTable.snapshot(spark, root).get.files
-      .filter(_.tag.contains("base"))
-      .map(e => new org.apache.hadoop.fs.Path(e.path).getName)
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(10000, 0.001)
-    (0 until 600).foreach(i => bf.putString(StreamingUtil.md5hex(s"claim-$i")))
-    val buf = new java.io.ByteArrayOutputStream()
-    bf.writeTo(buf)
-    val global = buf.toByteArray
-    val crc = new java.util.zip.CRC32
-    crc.update(global)
-    val header = s"""{"glen":${global.length},"crc":${crc.getValue},""" +
-      s""""covered":[${covered.map(c => s""""$c"""").mkString(",")}]}"""
-    locally {
-      val out = new java.io.FileOutputStream(s"$root/bloom.bin")
-      try { out.write(header.getBytes("UTF-8")); out.write('\n'); out.write(global) }
-      finally out.close()
-    }
-    // old runs probe through the legacy filter: exact, zero fallbacks,
-    // fresh batches still read zero base bytes
-    ClaimStore.Metrics.reset()
-    assert(seenSet(root, 0 until 700, 2L) == hashSet(0 until 600))
-    assert(ClaimStore.Metrics.fullFallbacks.get == 0L)
-    ClaimStore.Metrics.reset()
-    assert(seenSet(root, 1000 until 1050, 2L).isEmpty)
-    assert(ClaimStore.Metrics.plannedSeenBytes.get == 0L)
-    // the next fold filters only the NEW run — no O(corpus) upgrade
-    // rebuild — and must keep bloom.bin for the legacy-covered runs
-    ClaimStore.appendClaims(spark, root, hashes(600 until 650), "h", 2L)
-    ClaimStore.fold(spark, root, "h", 2L)
-    assert(runDir.listFiles().count(_.getName.endsWith(".gbf")) == 1,
-      "only the fold's own run gets a filter on upgrade")
-    assert(new java.io.File(s"$root/bloom.bin").exists(),
-      "legacy filter must survive while runs probe through it")
-    ClaimStore.Metrics.reset()
-    assert(seenSet(root, 0 until 700, 3L) == hashSet(0 until 650))
-    assert(ClaimStore.Metrics.fullFallbacks.get == 0L)
-    // a full merge rehomes every claim into filtered runs -> retired
-    ClaimStore.appendClaims(spark, root, hashes(650 until 660), "h", 3L)
-    ClaimStore.fold(spark, root, "h", 3L, ClaimStore.Config(maxRuns = 1))
-    assert(!new java.io.File(s"$root/bloom.bin").exists(),
-      "legacy filter must be deleted once no run needs it")
-    ClaimStore.Metrics.reset()
-    assert(seenSet(root, 0 until 700, 4L) == hashSet(0 until 660))
-    assert(ClaimStore.Metrics.fullFallbacks.get == 0L)
-    ClaimStore.Metrics.reset()
-    assert(seenSet(root, 1000 until 1050, 4L).isEmpty)
-    assert(ClaimStore.Metrics.plannedSeenBytes.get == 0L)
-  }
-
-  test("sharded store matches the unsharded one over a randomized trace; layout guarded") {
-    import scala.jdk.CollectionConverters._
-    val rnd = new scala.util.Random(8142)
-    val rootU = tmp("cs15u")
-    val rootS = tmp("cs15s")
-    val cfgU = ClaimStore.Config(foldTargetBytes = 4096, maxRuns = 3)
-    val cfgS = cfgU.copy(shards = 4)
-    var claimed = Set.empty[Int]
-    for (step <- 0 until 8) {
-      val b = step.toLong
-      val probe = Seq.fill(60)(rnd.nextInt(2000)).distinct
-      val su = seenSet(rootU, probe, b, cfgU)
-      assert(su == seenSet(rootS, probe, b, cfgS),
-        s"step $step: sharded and unsharded stores diverge")
-      assert(su == hashSet(probe.filter(claimed)), s"step $step vs model")
-      val newIds = Seq.fill(rnd.nextInt(60))(rnd.nextInt(2000))
-        .distinct.filterNot(claimed)
-      ClaimStore.appendClaims(spark, rootU, hashes(newIds), "h", b, cfgU)
-      ClaimStore.appendClaims(spark, rootS, hashes(newIds), "h", b, cfgS)
-      claimed ++= newIds
-      assert(ClaimStore.lastBatch(spark, rootU, cfgU) ==
-        ClaimStore.lastBatch(spark, rootS, cfgS))
-      if (rnd.nextInt(3) == 0) {
-        ClaimStore.fold(spark, rootU, "h", b, cfgU)
-        ClaimStore.fold(spark, rootS, "h", b, cfgS)
-      }
-      if (rnd.nextInt(4) == 0) { // replay of a committed batch, both stores
-        ClaimStore.appendClaims(spark, rootU, hashes(newIds), "h", b, cfgU)
-        ClaimStore.appendClaims(spark, rootS, hashes(newIds), "h", b, cfgS)
-      }
-    }
-    // shards PARTITION the claim set (disjoint, union = whole)
-    val counts = (0 until 4).map(s =>
-      try SnapTable.read(spark, s"$rootS/shard-$s").count()
-      catch { case _: IllegalArgumentException => 0L })
-    assert(counts.sum == claimed.size, s"shard counts $counts")
-    // per-shard read accounting: every planned byte is attributed to a
-    // shard root, so a sharded trajectory can pin per-shard bounds
-    ClaimStore.Metrics.reset()
-    assert(seenSet(rootS, 0 until 2000, 8L, cfgS) == hashSet(claimed.toSeq))
-    val perRoot = ClaimStore.Metrics.perRootSeenBytes.keySet().asScala
-    assert(perRoot.nonEmpty && perRoot.forall(_.contains("/shard-")), perRoot.toString)
-    // wrong shard setting is refused loudly, both directions — a silent
-    // mix would serve an empty seen set and re-admit duplicates
-    intercept[IllegalStateException](ClaimStore.lastBatch(spark, rootS))
-    intercept[IllegalStateException](
-      ClaimStore.seenFor(spark, rootU, hashes(0 until 5), "h", 9L, cfgS))
-    // wrong shard COUNT too: a 4-shard store opened as 8 shards routes
-    // probes to the wrong (mostly empty) roots — silent re-admission.
-    // Same-JVM opens hit the in-memory guard; a fresh driver must hit
-    // the persisted marker instead
-    intercept[IllegalStateException](
-      ClaimStore.lastBatch(spark, rootS, cfgS.copy(shards = 8)))
-    ClaimStore.resetSidecarCachesForTest() // "fresh driver"
-    val exMarker = intercept[IllegalStateException](
-      ClaimStore.lastBatch(spark, rootS, cfgS.copy(shards = 8)))
-    assert(exMarker.getMessage.contains("marker"), exMarker.getMessage)
-    // the right count keeps working after the failed opens
-    assert(ClaimStore.lastBatch(spark, rootS, cfgS).contains(7L))
-    // an unreadable marker refuses rather than guesses
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$rootS/shards"), "garbage")
-    new java.io.File(s"$rootS/.shards.crc").delete()
-    ClaimStore.resetSidecarCachesForTest()
-    intercept[IllegalStateException](ClaimStore.lastBatch(spark, rootS, cfgS))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$rootS/shards"), "4\n")
-    new java.io.File(s"$rootS/.shards.crc").delete()
-    ClaimStore.resetSidecarCachesForTest()
-    assert(ClaimStore.lastBatch(spark, rootS, cfgS).contains(7L))
-    // a marker-less store (lost marker) with shard dirs adopts ONLY on
-    // an exact dir/count match — a larger declared count would silently
-    // re-route half the key space (and persist the wrong count), a
-    // smaller one would hide claims; both refuse
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$rootS/shards"))
-    new java.io.File(s"$rootS/.shards.crc").delete()
-    ClaimStore.resetSidecarCachesForTest()
-    intercept[IllegalStateException](
-      ClaimStore.lastBatch(spark, rootS, cfgS.copy(shards = 2)))
-    ClaimStore.resetSidecarCachesForTest()
-    intercept[IllegalStateException](
-      ClaimStore.lastBatch(spark, rootS, cfgS.copy(shards = 8)))
-    assert(!java.nio.file.Files.exists( // and no wrong marker persisted
-      java.nio.file.Paths.get(s"$rootS/shards")))
-    ClaimStore.resetSidecarCachesForTest()
-    assert(ClaimStore.lastBatch(spark, rootS, cfgS).contains(7L))
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$rootS/shards")).trim == "4")
-    // READ paths never fix an undecided store's identity: a monitoring
-    // read with the wrong count on a fresh root writes nothing, and the
-    // first WRITER's count then decides (same JVM, no cache reset)
-    val rootFresh = tmp("cs15f")
-    assert(ClaimStore.lastBatch(spark, rootFresh, cfgS.copy(shards = 8)).isEmpty)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$rootFresh/shards")))
-    ClaimStore.appendClaims(spark, rootFresh, hashes(0 until 5), "h", 0L, cfgS)
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$rootFresh/shards")).trim == "4")
-    assert(seenSet(rootFresh, 0 until 10, 1L, cfgS) == hashSet(0 until 5))
-  }
-
   test("concurrent monitoring reads during appends and folds stay exact and crash-free") {
     // lastBatch/seenFor are public and callable from monitoring threads
     // (the migration scaladoc promises this); this leg hammers them
-    // against live appends + folds (run merges, filter drops, legacy
-    // retirement) — pinning the cache races fixed in r8: putIfAbsent
-    // convergence, compute-based legacy load, unpersist-not-destroy
+    // against live appends + folds (run merges, filter drops) — pinning
+    // the cache races: putIfAbsent convergence, unpersist-not-destroy
     // eviction (a destroyed broadcast would throw in a monitor's task)
     val root = tmp("cs16")
     val cfg = ClaimStore.Config(foldTargetBytes = 4096, maxRuns = 2)
@@ -492,7 +328,7 @@ class ClaimStoreSpec extends AnyFunSuite {
     val monitors = (0 until 3).map(i => new Thread(() => {
       while (!stop) {
         try {
-          ClaimStore.lastBatch(spark, root, cfg)
+          ClaimStore.lastBatch(spark, root)
           ClaimStore.seenFor(spark, root, hashes(i * 30 until i * 30 + 60),
             "h", 1000L, cfg).foreach(_.count())
         } catch { case t: Throwable => errs.add(t); stop = true }
@@ -502,7 +338,7 @@ class ClaimStoreSpec extends AnyFunSuite {
     try {
       for (b <- 0 until 10) {
         ClaimStore.appendClaims(spark, root,
-          hashes(b * 20 until b * 20 + 20), "h", b.toLong, cfg)
+          hashes(b * 20 until b * 20 + 20), "h", b.toLong)
         if (b % 3 == 2) ClaimStore.fold(spark, root, "h", b.toLong, cfg)
       }
     } finally {
