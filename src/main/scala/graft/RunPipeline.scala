@@ -16,8 +16,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * bucket) and <outDir>/metrics (watermarked by run) — plus
   * <outDir>/ntriples (sorted text). Every table commit is atomic.
   * `--resume` appends only the docs each table has not committed yet
-  * ([[Pipeline.resumeFilter]]); `--compact` folds buckets that appends
-  * split into several files ([[Pipeline.compactTriplesSnap]]).
+  * ([[Pipeline.resumeFilter]]) and commits nothing to a table with
+  * nothing left; the sorted text is rewritten only when the triples
+  * head differs from the one it was sorted from. `--compact` folds
+  * buckets that appends split into several files
+  * ([[Pipeline.compactTriplesSnap]]).
   */
 object RunPipeline {
 
@@ -61,6 +64,9 @@ object RunPipeline {
     // metadata and the triples commit re-runs only the triples
     def todo(table: String) =
       if (resume) Pipeline.resumeFilter(docs0, s"$outDir/$table") else docs0
+    // a resume with nothing left for a table commits nothing to it, so
+    // its head id stays put
+    def commits(ds: Dataset[Doc]) = !resume || !ds.isEmpty
     val docs = todo("triples")
 
     val bad = Pipeline.spanInvariantViolations(docs)
@@ -72,18 +78,23 @@ object RunPipeline {
       now
     }
     var tl = t0
-    val meta = Pipeline.metadata(todo("metadata"), dict, encodingOf).toDF()
-    if (resume) SnapTable.append(spark, s"$outDir/metadata", meta)
-    else SnapTable.overwrite(spark, s"$outDir/metadata", meta)
+    val metaDocs = todo("metadata")
+    if (commits(metaDocs)) {
+      val meta = Pipeline.metadata(metaDocs, dict, encodingOf).toDF()
+      if (resume) SnapTable.append(spark, s"$outDir/metadata", meta)
+      else SnapTable.overwrite(spark, s"$outDir/metadata", meta)
+    }
     tl = lap("metadata", tl)
-    Pipeline.writeTriplesSnap(Pipeline.triples(docs, dict, encodingOf),
-      s"$outDir/triples", append = resume)
+    if (commits(docs))
+      Pipeline.writeTriplesSnap(Pipeline.triples(docs, dict, encodingOf),
+        s"$outDir/triples", append = resume)
     tl = lap("triples-table", tl)
     if (compact) { // fold small append files
       Pipeline.compactTriplesSnap(spark, s"$outDir/triples")
       tl = lap("compact", tl)
     }
-    val tsOut = Pipeline.readTriplesSnap(spark, s"$outDir/triples")
+    val head = SnapTable.snapshot(spark, s"$outDir/triples").get
+    val tsOut = Pipeline.readTriplesSnap(spark, s"$outDir/triples", asOf = Some(head.id))
       .select($"doc_id", $"subj", $"pred", $"obj").as[TripleRow]
     // metrics commit through the snapshot layer: atomic, watermarked by
     // run id, snapshot-readable (SnapTable.read(outDir + "/metrics"))
@@ -91,12 +102,42 @@ object RunPipeline {
       Pipeline.metrics(tsOut, runId = runId, stage = "materialize"),
       s"$outDir/metrics", watermark = Some(runId))
     tl = lap("metrics", tl)
-    Pipeline.writeSortedNTriples(tsOut, s"$outDir/ntriples")
+    // the marker goes in after the sort, so a crash between the triples
+    // commit and the end of the sort leaves a stale or no marker and the
+    // next resume sorts again
+    val marker = new org.apache.hadoop.fs.Path(s"$outDir/ntriples/$NTriplesMarker")
+    val mfs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val source = ntriplesSource(head)
+    val sorted = mfs.exists(marker) && {
+      val in = mfs.open(marker)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString == source
+      finally in.close()
+    }
+    if (!sorted) {
+      Pipeline.writeSortedNTriples(tsOut, s"$outDir/ntriples")
+      val out = mfs.create(marker, true)
+      try out.write(source.getBytes("UTF-8")) finally out.close()
+    }
     tl = lap("ntriples-sorted", tl)
     val secs = (System.nanoTime() - t0) / 1e9
     val nDocs = SnapTable.read(spark, s"$outDir/metadata").count()
     val nTriples = tsOut.count()
     println(f"[pipeline] docs=$nDocs triples=$nTriples in $secs%.1f s " +
       f"(${nDocs / secs}%.1f docs/s)")
+  }
+
+  /** The file in `<outDir>/ntriples` that names the triples snapshot the
+    * sorted text came from (Spark readers skip `_`-prefixed files).
+    */
+  val NTriplesMarker = "_TRIPLES_SNAPSHOT"
+
+  /** The marker's content for snapshot `s`: its id plus a digest of its
+    * data file paths, since ids restart at 1 if the table dir is
+    * recreated while uuid-named files never recur.
+    */
+  def ntriplesSource(s: SnapTable.Snapshot): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    s.files.map(_.path).sorted.foreach(p => md.update(s"$p\n".getBytes("UTF-8")))
+    s"snapshot ${s.id} files ${md.digest().map(b => f"$b%02x").mkString}\n"
   }
 }

@@ -26,10 +26,8 @@ object RunRdf {
 
     val pairs = what match {
       case "fixtures" =>
-        val base = "/root/reference/examples"
         val rows = Seq("example", "example2", "example5").map { n =>
-          val metaJson = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(s"$base/$n-metadata.json")), "UTF-8")
+          val metaJson = graft.ingest.Fixtures.read(s"examples/$n-metadata.json")
           val csv = graft.ingest.Fixtures.text(s"$n.csv")
           (metaJson, csv)
         }

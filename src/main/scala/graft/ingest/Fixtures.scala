@@ -1,7 +1,7 @@
 package graft.ingest
 
 import java.nio.charset.Charset
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
 
 /** Loads the reference's example CSVs (read-only) as documents, decoded
   * with the encodings the reference's chardet detection reported
@@ -26,9 +26,23 @@ object Fixtures {
     "example3.csv", "example4.csv", "example5.csv", "example6.csv",
     "example7.csv", "example8.csv")
 
+  /** `rel` under [[Root]]. Every fixture read goes through here, so an
+    * absent reference tree fails each read with one message naming the
+    * missing path.
+    */
+  def file(rel: String): Path = {
+    val p = Paths.get(Root, rel)
+    if (!Files.exists(p))
+      throw new NoSuchFileException(p.toString, null, s"reference fixture missing under $Root")
+    p
+  }
+
+  /** A fixture file's UTF-8 text. */
+  def read(rel: String): String = new String(Files.readAllBytes(file(rel)), "UTF-8")
+
   def path(name: String): String = {
     val p1 = Paths.get(Root, name)
-    if (Files.exists(p1)) p1.toString else Paths.get(Root, "examples", name).toString
+    if (Files.exists(p1)) p1.toString else file(s"examples/$name").toString
   }
 
   def text(name: String): String = {

@@ -118,7 +118,7 @@ object UnitDict {
 
   def fromTtl(path: String): UnitDict = fromRows(parseTtl(path))
 
-  val DefaultTtlPath = "/root/reference/ontologies/qudt_unit.ttl"
+  val DefaultTtlPath = s"${graft.ingest.Fixtures.Root}/ontologies/qudt_unit.ttl"
 
   @transient lazy val default: UnitDict = fromRows(defaultRows)
 }

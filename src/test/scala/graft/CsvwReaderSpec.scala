@@ -41,9 +41,7 @@ class CsvwReaderSpec extends AnyFunSuite {
 
   for (name <- Seq("example.csv", "example2.csv", "example5.csv")) {
     test(s"$name: shipped golden metadata JSON parses to the annotate-time DocMeta") {
-      val goldenJson = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(
-          s"/root/reference/examples/${name.stripSuffix(".csv")}-metadata.json")), "UTF-8")
+      val goldenJson = Fixtures.read(s"examples/${name.stripSuffix(".csv")}-metadata.json")
       val fromGolden = CsvwReader.read(goldenJson)
       val text = Fixtures.text(name)
       val lines = SpanCodec.lines(SpanCodec.encode(Base + name, text).spans)
@@ -54,16 +52,12 @@ class CsvwReaderSpec extends AnyFunSuite {
 
   for (name <- Seq("example2.csv", "example5.csv")) {
     test(s"$name: golden metadata -> reader -> expand == golden TTL (P=R>=0.95)") {
-      val goldenJson = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(
-          s"/root/reference/examples/${name.stripSuffix(".csv")}-metadata.json")), "UTF-8")
+      val goldenJson = Fixtures.read(s"examples/${name.stripSuffix(".csv")}-metadata.json")
       val meta = CsvwReader.read(goldenJson)
       val lines = SpanCodec.lines(
         SpanCodec.encode(Base + name, Fixtures.text(name)).spans)
       val mine = TripleExpand.expandDoc(meta, lines)
-      val golden = Turtle.parse(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(
-          s"/root/reference/examples/${name.stripSuffix(".csv")}.ttl")), "UTF-8"))
+      val golden = Turtle.parse(Fixtures.read(s"examples/${name.stripSuffix(".csv")}.ttl"))
       val pr = Canon.compare(mine, golden)
       info(f"precision=${pr.precision}%.4f recall=${pr.recall}%.4f")
       assert(pr.precision >= 0.95 && pr.recall >= 0.95)

@@ -19,8 +19,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("detection kernel reproduces the reference's chardet verdicts on all fixtures") {
     for (name <- Fixtures.Names) {
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/examples", name))
+      val bytes = java.nio.file.Files.readAllBytes(Fixtures.file(s"examples/$name"))
       assert(EncodingSniff.detect(bytes) == Fixtures.Encodings(name), name)
     }
   }
@@ -162,7 +161,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("binaryFile + auto-detection reproduces every fixture doc and label") {
     val got = Ingest.fromCsvFilesDetected(spark,
-        "/root/reference/examples/example*.csv").collect()
+        s"${Fixtures.file("examples")}/example*.csv").collect()
       .map { case (d, enc) => d.doc_id -> (d, enc) }.toMap
     assert(got.keySet == Fixtures.Names.toSet)
     for (name <- Fixtures.Names) {
@@ -206,7 +205,7 @@ class IngestSpec extends AnyFunSuite {
   test("triplesDetected over raw-bytes ingest == annotate path with pinned encodings") {
     val dict = Pipeline.broadcastDict(spark)
     val docs = Ingest.fromCsvFilesDetected(spark,
-      "/root/reference/examples/example*.csv")
+      s"${Fixtures.file("examples")}/example*.csv")
     val mine = Pipeline.triplesDetected(docs, dict).collect().toSet
     import spark.implicits._
     val want = Fixtures.Names.flatMap { name =>

@@ -52,10 +52,11 @@ class MetadataSpec extends AnyFunSuite {
       val mine = JsonLd.render(meta)
       val oracle = Json.parse(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"src/test/resources/oracle/meta/$base.json")), "UTF-8"))
-      // oracle ran with file:// urls: @id = bare name, ns = file domain + name + "/"
+      // oracle ran with file:// urls under the fixture root: @id = bare
+      // name, ns = file domain + name + "/"
       val repl = Seq(
-        s"file:///root/reference/examples/$name" -> name,
-        s"file:///root/reference/$name" -> name)
+        s"file://${Fixtures.Root}/examples/$name" -> name,
+        s"file://${Fixtures.Root}/$name" -> name)
       val d = firstDiff(norm(oracle, repl), norm(mine, Nil), "$")
       assert(d.isEmpty, d.getOrElse(""))
     }

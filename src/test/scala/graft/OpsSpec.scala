@@ -1165,7 +1165,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("binaryFile ingest reproduces the fixture docs exactly") {
     val docs = graft.ingest.Ingest.fromCsvFiles(spark,
-      "/root/reference/example5.csv", charset = "latin-1").collect()
+      graft.ingest.Fixtures.path("example5.csv"), charset = "latin-1").collect()
     assert(docs.length == 1)
     val want = graft.ingest.Fixtures.doc("example5.csv")
     assert(docs(0).doc_id == "example5.csv")

@@ -134,6 +134,46 @@ class PipelineSpec extends AnyFunSuite {
     assert(run2Triples == Pipeline.readTriplesSnap(spark, s"$out/triples").count())
   }
 
+  test("RunPipeline --resume with nothing left is a no-op; a lost marker re-sorts") {
+    val dict = Pipeline.broadcastDict(spark)
+    val out = java.nio.file.Files.createTempDirectory("rpnoop").toString
+    val docs = SynthCorpus.corpus(spark, 6)
+    def run(): Unit =
+      RunPipeline.materialize(docs, _ => "utf-8", dict, out, "run1", resume = true, compact = false)
+    def heads() = Seq("metadata", "triples", "metrics")
+      .map(t => graft.table.SnapTable.snapshot(spark, s"$out/$t").get.id)
+    val ntDir = new java.io.File(out, "ntriples")
+    val marker = new java.io.File(ntDir, RunPipeline.NTriplesMarker)
+    // (name, mtime, bytes) of every sorted part: a re-sort writes new
+    // uuid-named parts
+    def ntFiles() = ntDir.listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).map(f => (f.getName, f.lastModified,
+        java.nio.file.Files.readAllBytes(f.toPath).toVector)).toVector
+    RunPipeline.materialize(docs, _ => "utf-8", dict, out, "run1", resume = false, compact = false)
+    val head = graft.table.SnapTable.snapshot(spark, s"$out/triples").get
+    assert(java.nio.file.Files.readString(marker.toPath) == RunPipeline.ntriplesSource(head))
+    val (heads0, nt0) = (heads(), ntFiles())
+    assert(nt0.nonEmpty)
+    for (_ <- 0 until 2) { // two --resume runs with nothing left
+      run()
+      assert(heads() == heads0)
+      assert(ntFiles() == nt0)
+    }
+    // the crash window: the triples commit landed, the sort never
+    // finished, so no marker names it — the next resume sorts again
+    assert(marker.delete())
+    run()
+    assert(heads() == heads0)
+    val nt1 = ntFiles()
+    assert(nt1.map(_._1) != nt0.map(_._1), "the sorted text was not rewritten")
+    def lines(parts: Vector[(String, Long, Vector[Byte])]) = parts.flatMap { case (_, _, b) =>
+      scala.io.Source.fromInputStream(new java.util.zip.GZIPInputStream(
+        new java.io.ByteArrayInputStream(b.toArray)), "UTF-8").getLines().toVector
+    }
+    assert(lines(nt1) == lines(nt0) && lines(nt0).nonEmpty)
+    assert(java.nio.file.Files.readString(marker.toPath) == RunPipeline.ntriplesSource(head))
+  }
+
   test("Snap-backed triples: byte-identical N-Triples, bucket-pruned reads, snapshot compaction") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, count, expr, lit, pmod, xxhash64}

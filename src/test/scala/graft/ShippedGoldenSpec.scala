@@ -33,8 +33,7 @@ class ShippedGoldenSpec extends AnyFunSuite {
       val meta = Annotator.annotate(docId, SpanCodec.lines(doc.spans),
         Fixtures.Encodings(name), dict)
       val mine = JsonLd.render(meta)
-      val golden = Json.parse(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/reference/examples/$base-metadata.json")), "UTF-8"))
+      val golden = Json.parse(Fixtures.read(s"examples/$base-metadata.json"))
       assert(norm(golden, Nil) == norm(mine, Nil))
     }
   }

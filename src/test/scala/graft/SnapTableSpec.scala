@@ -17,21 +17,20 @@ class SnapTableSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/tbl"
 
-  import TestSnapKnobs.withCheckpointEvery
-
   test("append/read roundtrip, lineage, and watermark resume") {
     import spark.implicits._
     val root = tmp("snap1")
     val s1 = SnapTable.append(spark, root,
       (1 to 100).map(i => (i.toLong, s"row$i")).toDF("id", "v"),
       watermark = Some("batch-0"))
-    assert(s1.id == 1L && s1.op == "append" && s1.removed.isEmpty)
+    assert(s1.id == 1L && s1.op == "append")
     assert(s1.files.map(_.rows).sum == 100)
     val s2 = SnapTable.append(spark, root,
       (101 to 150).map(i => (i.toLong, s"row$i")).toDF("id", "v"),
       watermark = Some("batch-1"))
     assert(s2.id == 2L && s2.files.map(_.rows).sum == 150)
-    assert(s2.added.nonEmpty && s2.added.toSet.intersect(s1.added.toSet).isEmpty)
+    // an append keeps every parent file and adds its own
+    assert(s1.files.toSet.subsetOf(s2.files.toSet) && s2.files.size > s1.files.size)
     // the resume point is the last COMMITTED watermark
     assert(SnapTable.lastWatermark(spark, root).contains("batch-1"))
     val got = SnapTable.read(spark, root).select("id").as[Long].collect().toSet
@@ -73,7 +72,8 @@ class SnapTableSpec extends AnyFunSuite {
       rewriteAs = _.repartition(1).sortWithinPartitions("id"),
       statsCol = Some("id")).get
     assert(compacted.op == "rewrite" && compacted.files.length == 1)
-    assert(compacted.removed.length == nFilesBefore)
+    assert(compacted.files.map(_.path).toSet.intersect(before.files.map(_.path).toSet).isEmpty,
+      s"rewrite kept some of the $nFilesBefore picked files")
     // ...still sees its full consistent state (old files live until expire)
     assert(oldView.count() == 300)
     assert(SnapTable.read(spark, root, Some(before.id)).count() == 300)
@@ -147,7 +147,6 @@ class SnapTableSpec extends AnyFunSuite {
   }
 
   test("torn state is invisible: tmp manifests and stage orphans are ignored") {
-    withCheckpointEvery(1) { // pins EXACT keepLast retention boundaries
     import spark.implicits._
     val root = tmp("snap7")
     SnapTable.append(spark, root, Seq((1L, "a")).toDF("id", "v"))
@@ -171,8 +170,7 @@ class SnapTableSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$root/meta/snap-00000003.json"), "{\"id\":3,TRUNC")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/meta/snap-00000004.json"),
-      "{\"id\":4,\"op\":\"append\",\"watermark\":null,\"added\":[]," +
-        "\"removed\":[],\"files\":[]}\ncrc:1\n")
+      "{\"id\":4,\"op\":\"append\",\"watermark\":null,\"files\":[]}\ncrc:1\n")
     assert(SnapTable.snapshot(spark, root).get.id == 2L)
     assert(SnapTable.read(spark, root).count() == 2)
     intercept[IllegalArgumentException] { SnapTable.read(spark, root, Some(3L)) }
@@ -183,102 +181,31 @@ class SnapTableSpec extends AnyFunSuite {
     SnapTable.expire(spark, root, keepLast = 1)
     assert(SnapTable.snapshotIds(spark, root) == Seq(5L))
     assert(SnapTable.read(spark, root).count() == 3)
-    }
   }
 
-  test("HEAD hint is an optimization only: absent/corrupt/stale/forged hints never misplace a commit") {
+  test("torn ids sweep without drops; a stray snap-*.bak.json never bricks the table") {
     import spark.implicits._
-    val root = tmp("snap12")
-    for (i <- 1 to 3)
-      SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
-    val hint = java.nio.file.Paths.get(s"$root/meta/HEAD")
-    // hand-edits bypass Hadoop's local-FS .crc sidecar; drop it so the
-    // hint READ path (not a ChecksumException fallback) is what runs
-    def setHint(s: String): Unit = {
-      java.nio.file.Files.writeString(hint, s)
-      new java.io.File(s"$root/meta/.HEAD.crc").delete()
-    }
-    assert(java.nio.file.Files.readString(hint).trim == "v:3",
-      "a successful commit must refresh the hint")
-    // READER head resolution under a bad hint (snapshot(None) is also
-    // hint-served now): each shape must still see the true head
-    def readerHead: Long = SnapTable.snapshot(spark, root).get.id
-    // corrupt hint -> full-listing fallback, commit lands at 4, hint heals
-    setHint("garbage")
-    assert(readerHead == 3L, "corrupt hint must not blind a reader")
-    assert(SnapTable.append(spark, root, Seq((4L, "x")).toDF("id", "v")).id == 4L)
-    assert(java.nio.file.Files.readString(hint).trim == "v:4")
-    // stale-LOW hint (crash between publish and hint write): the
-    // forward probe must find the true head
-    setHint("v:1")
-    assert(readerHead == 4L, "stale-low hint must forward-probe to the head")
-    setHint("v:1")
-    assert(SnapTable.append(spark, root, Seq((5L, "x")).toDF("id", "v")).id == 5L)
-    // forged hint past the head (or pointing at an expired id): the
-    // parse scan declines it
-    setHint("v:99")
-    assert(readerHead == 5L, "forged-high hint must fall back to the listing")
-    setHint("v:99")
-    assert(SnapTable.append(spark, root, Seq((6L, "x")).toDF("id", "v")).id == 6L)
-    // absent hint
-    java.nio.file.Files.delete(hint)
-    assert(readerHead == 6L)
-    java.nio.file.Files.deleteIfExists(hint) // readerHead does not write it
-    assert(SnapTable.append(spark, root, Seq((7L, "x")).toDF("id", "v")).id == 7L)
-    // state is intact through all of it
-    assert(SnapTable.snapshotIds(spark, root) == (1L to 7L))
-    assert(SnapTable.read(spark, root).select("id").as[Long].collect().toSet ==
-      (1L to 7L).toSet)
-    // expire then a hint below the retained window: fallback again
-    SnapTable.expire(spark, root, keepLast = 2)
-    setHint("v:1")
-    assert(SnapTable.append(spark, root, Seq((8L, "x")).toDF("id", "v")).id == 8L)
-    assert(SnapTable.read(spark, root).count() == 8)
-  }
-
-  test("an expired cursor with intact lineage recovers; torn ids sweep even without drops") {
-    import spark.implicits._
-    val root = tmp("snap13")
-    withCheckpointEvery(3) {
-    for (i <- 1 to 6)
-      SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
-    // checkpoints at 1 and 4 (K=3): the keepLast=2 cut extends down to
-    // the nearest checkpoint, retaining {4, 5, 6}
-    SnapTable.expire(spark, root, keepLast = 2)
-    assert(SnapTable.snapshotIds(spark, root) == Seq(4L, 5L, 6L))
-    // cursor 4 retained: exact incremental recovery
-    val ch = SnapTable.changesBetween(spark, root, 4L)
-    assert(ch.coveredThrough == 6L)
-    assert(ch.rows.get.select("id").as[Long].collect().toSet == Set(5L, 6L))
-    // cursor 3 was just expired, but (3, 6] lineage is fully retained:
-    // the consumer one keep-window behind is exactly recoverable
-    assert(SnapTable.changesBetween(spark, root, 3L).rows.get
-      .select("id").as[Long].collect().toSet == Set(4L, 5L, 6L))
-    // cursor 2 needs snapshot 3's lineage, which is gone: loud
-    intercept[IllegalArgumentException] { SnapTable.changesBetween(spark, root, 2L) }
-    }
-    // torn-id sweep no longer depends on a drop happening: a burned
-    // slot below the parseable head goes even at keepLast > count
-    val root2 = tmp("snap14")
-    SnapTable.append(spark, root2, Seq((1L, "a")).toDF("id", "v"))
+    // a burned slot below the parseable head goes even at keepLast >
+    // count
+    val root = tmp("snap14")
+    SnapTable.append(spark, root, Seq((1L, "a")).toDF("id", "v"))
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root2/meta/snap-00000002.json"), "{\"id\":2,TORN")
-    SnapTable.append(spark, root2, Seq((2L, "b")).toDF("id", "v")) // lands at 3
-    SnapTable.expire(spark, root2, keepLast = 10)
-    assert(SnapTable.snapshotIds(spark, root2) == Seq(1L, 3L),
+      java.nio.file.Paths.get(s"$root/meta/snap-00000002.json"), "{\"id\":2,TORN")
+    SnapTable.append(spark, root, Seq((2L, "b")).toDF("id", "v")) // lands at 3
+    SnapTable.expire(spark, root, keepLast = 10)
+    assert(SnapTable.snapshotIds(spark, root) == Seq(1L, 3L),
       "burned torn slot below the head must be swept")
-    // with the poison gone, the full-genesis replay works again
-    val all = SnapTable.changesBetween(spark, root2, 0L)
-    assert(all.rows.get.select("id").as[Long].collect().toSet == Set(1L, 2L))
+    assert(SnapTable.read(spark, root).select("id").as[Long].collect().toSet == Set(1L, 2L))
     // a stray non-numeric snap file must not brick the table
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root2/meta/snap-00000003.bak.json"), "junk")
-    assert(SnapTable.snapshotIds(spark, root2) == Seq(1L, 3L))
-    assert(SnapTable.append(spark, root2, Seq((9L, "c")).toDF("id", "v")).id == 4L)
+      java.nio.file.Paths.get(s"$root/meta/snap-00000003.bak.json"), "junk")
+    assert(SnapTable.snapshotIds(spark, root) == Seq(1L, 3L))
+    assert(SnapTable.append(spark, root, Seq((9L, "c")).toDF("id", "v")).id == 4L)
   }
 
-  test("a swept burned slot cannot make a stale HEAD hint resolve a stale head") {
+  test("swept burned slots, adjacent ones too, never move the head") {
     import spark.implicits._
+    def ids(root: String) = SnapTable.read(spark, root).select("id").as[Long].collect().toSet
     val root = tmp("snap15")
     for (i <- 1 to 3)
       SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
@@ -288,33 +215,14 @@ class SnapTableSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$root/meta/snap-00000004.json"), "{\"id\":4,TORN")
     for (_ <- 0 until 2)
       SnapTable.append(spark, root, Seq((9L, "y")).toDF("id", "v")) // -> 5, 6
-    def setHint(v: Long): Unit = {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/meta/HEAD"), s"v:$v\n")
-      new java.io.File(s"$root/meta/.HEAD.crc").delete() // hadoop local-fs checksum
-    }
-    def hint(): String = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/meta/HEAD")).trim
-    // the exact crash shape: hint never advanced past an old publish
-    setHint(2L)
-    // expire sweeps burned slot 4 (punching a hole at an id a stale
-    // probe could stop at) — it must lift the hint to the head FIRST
     SnapTable.expire(spark, root, keepLast = 10)
     assert(!new java.io.File(s"$root/meta/snap-00000004.json").exists(),
       "burned slot must still sweep")
-    assert(hint() == "v:6", s"hint not refreshed before the sweep: ${hint()}")
     assert(SnapTable.snapshot(spark, root).get.id == 6L)
-    // second line of defense: a hint that went stale-low AFTER the
-    // sweep (another writer's crash) must not stop its forward probe
-    // at the hole — hole detection bails to the full listing
-    setHint(2L)
-    assert(SnapTable.snapshot(spark, root).get.id == 6L,
-      "stale hint + swept hole resolved a stale head")
+    assert(ids(root) == Set(1L, 2L, 3L, 9L))
     // ADJACENT burned slots (repeated crashed publishes between two
-    // successful ones) punch a hole wider than the probe's one-slot
-    // look-ahead — which is exactly why the sweep is gated on a
-    // verified hint at/above the head: any hint written after the
-    // sweep is above the hole by id monotonicity
+    // successful ones) leave a two-id hole; the listing resolves the
+    // head across it and the next commit lands above it
     val root2 = tmp("snap16")
     for (i <- 1 to 3)
       SnapTable.append(spark, root2, Seq((i.toLong, "x")).toDF("id", "v"))
@@ -322,58 +230,35 @@ class SnapTableSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(
         f"$root2/meta/snap-$b%08d.json"), s"""{"id":$b,TORN""")
     SnapTable.append(spark, root2, Seq((9L, "y")).toDF("id", "v")) // -> 6
-    // the crash shape again: hint stuck at an old publish
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root2/meta/HEAD"), "v:2\n")
-    new java.io.File(s"$root2/meta/.HEAD.crc").delete()
     SnapTable.expire(spark, root2, keepLast = 10)
     assert(!new java.io.File(f"$root2/meta/snap-${4}%08d.json").exists())
     assert(!new java.io.File(f"$root2/meta/snap-${5}%08d.json").exists())
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root2/meta/HEAD")).trim == "v:6")
+    assert(SnapTable.snapshotIds(spark, root2) == Seq(1L, 2L, 3L, 6L))
     assert(SnapTable.snapshot(spark, root2).get.id == 6L,
-      "adjacent burned slots + stale hint resolved a stale head")
+      "adjacent burned slots resolved a stale head")
+    assert(SnapTable.append(spark, root2, Seq((10L, "z")).toDF("id", "v")).id == 7L)
+    assert(ids(root2) == Set(1L, 2L, 3L, 9L, 10L))
   }
 
-  test("damage BELOW the cut never bricks expire; first-cut delta key shape still reads") {
+  test("damage BELOW the cut never bricks expire") {
     import spark.implicits._
-    import TestSnapKnobs.withCheckpointEvery
     val root = tmp("snap19")
-    withCheckpointEvery(3) {
-      for (i <- 1 to 8) // checkpoints 1,4,7; deltas 2,3,5,6,8
-        SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
-      // rot a delta deep in history: head reads are unaffected (its
-      // chain is above), and expire must STILL work — the kept chains
-      // don't depend on it, and "expire the table past it" is exactly
-      // the recovery the error message advertises for kept-range damage
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/meta/snap-00000002.json"), "{\"id\":2,ROT")
-      new java.io.File(s"$root/meta/.snap-00000002.json.crc").delete()
-      assert(SnapTable.read(spark, root).count() == 8)
-      SnapTable.expire(spark, root, keepLast = 2) // cut at checkpoint 7
-      assert(SnapTable.snapshotIds(spark, root) == Seq(7L, 8L))
-      assert(SnapTable.read(spark, root).count() == 8) // data intact
-      // first-cut r8 deltas carried their files under "files" (+ an
-      // explicit "added"); the parser keeps reading that shape
-      val m8 = java.nio.file.Paths.get(s"$root/meta/snap-00000008.json")
-      val lines = java.nio.file.Files.readString(m8).split("\n")
-      val oldShape = lines(0).replace("\"adds\":", "\"files\":")
-      assert(oldShape != lines(0))
-      val crc = new java.util.zip.CRC32
-      crc.update(oldShape.getBytes("UTF-8"))
-      java.nio.file.Files.writeString(m8, s"$oldShape\ncrc:${crc.getValue}\n")
-      new java.io.File(s"$root/meta/.snap-00000008.json.crc").delete()
-      assert(SnapTable.snapshot(spark, root).get.id == 8L)
-      assert(SnapTable.read(spark, root).count() == 8)
-    }
+    for (i <- 1 to 8)
+      SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
+    // rot a manifest deep in history: head reads are unaffected, and
+    // expire must STILL work — "expire the table past it" is the
+    // recovery for a damaged old manifest
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$root/meta/snap-00000002.json"), "{\"id\":2,ROT")
+    new java.io.File(s"$root/meta/.snap-00000002.json.crc").delete()
+    assert(SnapTable.read(spark, root).count() == 8)
+    SnapTable.expire(spark, root, keepLast = 2)
+    assert(SnapTable.snapshotIds(spark, root) == Seq(7L, 8L))
+    assert(SnapTable.read(spark, root).count() == 8) // data intact
   }
 
   test("model check: random append/overwrite/rewrite/expire sequences match a reference model") {
     import spark.implicits._
-    // checkpointEvery=2 forces the delta/checkpoint boundary on nearly
-    // every commit, so every structural path (delta resolution, cut
-    // alignment, overwrite reset) is crossed repeatedly
-    withCheckpointEvery(2) {
     for (trial <- 0 until 3) {
       val rnd = new scala.util.Random(4242 + trial)
       val root = tmp(s"snapm$trial")
@@ -413,133 +298,108 @@ class SnapTableSpec extends AnyFunSuite {
         }
       }
     }
-    }
   }
 
-  test("delta manifests: O(commit) deltas, checkpoint cadence, resolution, aligned expire") {
+  test("each manifest lists the full file set; old damage never alters newer reads") {
     import spark.implicits._
+    import graft.json.{JArr, JObj, JStr, Json}
     val root = tmp("snap17")
-    def manifest(v: Long): String = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(f"$root/meta/snap-$v%08d.json"))
-    withCheckpointEvery(3) {
-      for (i <- 1 to 7)
-        SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
-      // cadence: 1 full, 2-3 deltas, 4 full, 5-6 deltas, 7 full
-      for (v <- Seq(1L, 4L, 7L))
-        assert(!manifest(v).contains("\"depth\""), s"snap $v should be full")
-      for (v <- Seq(2L, 3L, 5L, 6L))
-        assert(manifest(v).contains("\"depth\""), s"snap $v should be a delta")
-      // the O(commit-delta) witness: a delta manifest lists ONE file
-      // (this commit's), a checkpoint lists the table's seven
-      assert(manifest(6).length < manifest(7).length,
-        s"${manifest(6).length} !< ${manifest(7).length}")
-      assert("\"path\"".r.findAllIn(manifest(6)).size == 1)
-      assert("\"path\"".r.findAllIn(manifest(7)).size == 7)
-      // resolution: the head and a mid-chain time travel are complete
-      def ids(asOf: Option[Long]) = SnapTable.read(spark, root, asOf)
-        .select("id").as[Long].collect().toSet
-      assert(ids(None) == (1L to 7L).toSet)
-      assert(ids(Some(3L)) == (1L to 3L).toSet) // resolved via 1 <- 2 <- 3
-      assert(SnapTable.snapshot(spark, root).get.depth == 0)
-      assert(SnapTable.snapshot(spark, root, Some(6L)).get.depth == 2)
-      // expire cuts at a checkpoint so retained deltas keep resolving:
-      // keepLast=2 extends down to full snap 4 (wait... 7 is full, so
-      // the cut lands exactly at keepLast here) — use keepLast=3 to
-      // force the walk: cut index at snap 5 (delta) walks down to 4
-      SnapTable.expire(spark, root, keepLast = 3)
-      assert(SnapTable.snapshotIds(spark, root) == Seq(4L, 5L, 6L, 7L))
-      assert(ids(None) == (1L to 7L).toSet)
-      assert(ids(Some(5L)) == (1L to 5L).toSet)
-      assert(SnapTable.changesBetween(spark, root, 5L).rows.get
-        .select("id").as[Long].collect().toSet == Set(6L, 7L))
-      // delta shape: a pre-delta reader must fail its parse (torn) on a
-      // delta rather than serve its partial file list as the table —
-      // the files live under a DIFFERENT key, and "added" (derivable)
-      // is not written twice
-      assert(manifest(6).contains("\"adds\""))
-      assert(!manifest(6).contains("\"files\"") && !manifest(6).contains("\"added\""))
-      assert(manifest(7).contains("\"files\"") && !manifest(7).contains("\"adds\""))
-      // an overwrite resets the chain with a full checkpoint
-      val ow = SnapTable.overwrite(spark, root, Seq((99L, "y")).toDF("id", "v"))
-      assert(ow.depth == 0 && !manifest(ow.id).contains("\"depth\""))
-      assert(ids(None) == Set(99L))
+    val mPath = (v: Long) => java.nio.file.Paths.get(f"$root/meta/snap-$v%08d.json")
+    def manifest(v: Long): JObj =
+      Json.parse(java.nio.file.Files.readString(mPath(v)).split("\n")(0)).asInstanceOf[JObj]
+    def listed(v: Long): Vector[String] = manifest(v)("files").asInstanceOf[JArr].items
+      .map(_.asInstanceOf[JObj]("path").asInstanceOf[JStr].s)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("id").as[Long].collect().toSet
+    // appends, a compaction, an overwrite and an append after it
+    var model = Vector.empty[Set[Long]] // index v-1: content of snapshot v
+    for (i <- 1 to 4) {
+      SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
+      model :+= (1L to i.toLong).toSet
     }
+    SnapTable.rewrite(spark, root, _ => true, _.repartition(1)); model :+= model.last
+    SnapTable.append(spark, root, Seq((5L, "x")).toDF("id", "v")); model :+= model.last + 5L
+    SnapTable.overwrite(spark, root, Seq((99L, "y")).toDF("id", "v")); model :+= Set(99L)
+    SnapTable.append(spark, root, Seq((100L, "y")).toDF("id", "v")); model :+= Set(99L, 100L)
+    val head = model.length.toLong
+    assert(SnapTable.snapshotIds(spark, root) == (1L to head))
+    for (v <- 1L to head) {
+      // one format: the four keys, no delta or lineage fields
+      assert(manifest(v).fields.map(_._1).toSet == Set("id", "op", "watermark", "files"),
+        manifest(v).fields.map(_._1))
+      // the manifest ALONE is the whole table: its files read back to
+      // exactly the snapshot's content, and it agrees with the reader
+      assert(ids(spark.read.parquet(listed(v): _*)) == model((v - 1).toInt), s"snap $v")
+      assert(listed(v).toSet == SnapTable.snapshot(spark, root, Some(v)).get.files.map(_.path).toSet)
+    }
+    def readsIntact(): Unit = {
+      assert(ids(SnapTable.read(spark, root)) == model.last)
+      for (v <- Seq(2L, 4L, 6L, 7L))
+        assert(ids(SnapTable.read(spark, root, Some(v))) == model((v - 1).toInt), s"snap $v")
+    }
+    // rot an older manifest: every newer read is unchanged, only the
+    // damaged id itself refuses to time-travel
+    val original = java.nio.file.Files.readAllBytes(mPath(3))
+    java.nio.file.Files.writeString(mPath(3), "{\"id\":3,ROT")
+    new java.io.File(s"$root/meta/.snap-00000003.json.crc").delete()
+    readsIntact()
+    intercept[IllegalArgumentException] { SnapTable.read(spark, root, Some(3L)) }
+    // restoring the damaged file fully recovers it
+    java.nio.file.Files.write(mPath(3), original)
+    new java.io.File(s"$root/meta/.snap-00000003.json.crc").delete()
+    assert(ids(SnapTable.read(spark, root, Some(3L))) == model(2))
+    // a CRC-valid manifest without a "files" list (e.g. a retired
+    // delta shape) is torn: stepped over, never served as the table
+    val forged = """{"id":9,"op":"append","watermark":null,"adds":[]}"""
+    val crc = new java.util.zip.CRC32
+    crc.update(forged.getBytes("UTF-8"))
+    java.nio.file.Files.writeString(mPath(9), s"$forged\ncrc:${crc.getValue}\n")
+    assert(SnapTable.snapshot(spark, root).get.id == head)
+    readsIntact()
+    // a CRC-less manifest is torn too
+    java.nio.file.Files.writeString(mPath(10),
+      """{"id":10,"op":"append","watermark":null,"files":[]}""" + "\n")
+    assert(SnapTable.snapshot(spark, root).get.id == head)
+    readsIntact()
+    assert(SnapTable.append(spark, root, Seq((101L, "z")).toDF("id", "v")).id == 11L)
+    // the next commit builds on the last parseable head, not the torn ids
+    assert(listed(head).toSet.subsetOf(listed(11).toSet) && listed(11).size == listed(head).size + 1)
+    assert(ids(SnapTable.read(spark, root)) == model.last + 101L)
   }
 
-  test("a damaged checkpoint is LOUD, never a silent head rewind or sweep") {
+  test("expire(keepLast = k) leaves exactly k parseable snapshots") {
     import spark.implicits._
-    import TestSnapKnobs.withCheckpointEvery
     val root = tmp("snap18")
-    withCheckpointEvery(3) {
-      for (i <- 1 to 6) // checkpoints at 1 and 4; 5-6 are deltas on 4
-        SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
-      val cp = java.nio.file.Paths.get(s"$root/meta/snap-00000004.json")
-      val original = java.nio.file.Files.readAllBytes(cp)
-      java.nio.file.Files.writeString(cp, "{\"id\":4,ROT") // bit rot / partial loss
-      new java.io.File(s"$root/meta/.snap-00000004.json.crc").delete()
-      // head resolution must NOT silently serve snapshot 3 (a rewound
-      // watermark would re-admit replayed batches as new), and expire
-      // must NOT sweep 5-6 as "torn" (one damaged file would become
-      // permanent loss of every commit above it) — both fail loudly,
-      // naming the file to restore
-      val e1 = intercept[IllegalStateException] { SnapTable.snapshot(spark, root) }
-      assert(e1.getMessage.contains("snap-00000004"), e1.getMessage)
-      val e2 = intercept[IllegalStateException] {
-        SnapTable.expire(spark, root, keepLast = 2)
-      }
-      assert(e2.getMessage.contains("chain broken"), e2.getMessage)
-      // restoring the damaged file fully recovers
-      java.nio.file.Files.write(cp, original)
-      new java.io.File(s"$root/meta/.snap-00000004.json.crc").delete()
-      assert(SnapTable.snapshot(spark, root).get.id == 6L)
-      assert(SnapTable.read(spark, root).count() == 6)
-      // forged structure (negative depth) is TORN — stepped over, never
-      // a partial view served as complete
-      val forged = """{"id": 7, "op": "append", "watermark": null, """ +
-        """"removed": [], "depth": -1, "parent": 6, "adds": []}"""
-      val crc = new java.util.zip.CRC32
-      crc.update(forged.getBytes("UTF-8"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/meta/snap-00000007.json"),
-        s"$forged\ncrc:${crc.getValue}\n")
-      assert(SnapTable.snapshot(spark, root).get.id == 6L)
-      assert(SnapTable.read(spark, root).count() == 6)
+    for (i <- 1 to 3)
+      SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
+    // a burned slot never occupies a keep slot
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$root/meta/snap-00000004.json"), "{\"id\":4,TORN")
+    for (i <- 5 to 7)
+      SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
+    SnapTable.rewrite(spark, root, _ => true, _.repartition(1)) // -> 8
+    val content = Set(1L, 2L, 3L, 5L, 6L, 7L)
+    val parseable = Seq(1L, 2L, 3L, 5L, 6L, 7L, 8L)
+    SnapTable.expire(spark, root, keepLast = 10)
+    assert(SnapTable.snapshotIds(spark, root) == parseable)
+    for (k <- Seq(6, 4, 3, 1)) {
+      SnapTable.expire(spark, root, keepLast = k)
+      val kept = SnapTable.snapshotIds(spark, root)
+      assert(kept == parseable.takeRight(k), s"keepLast=$k kept $kept")
+      for (v <- kept)
+        assert(SnapTable.read(spark, root, Some(v)).count() ==
+          content.count(_ <= v), s"keepLast=$k snap $v")
     }
-  }
-
-  test("changesSince: incremental capture, compaction invisible, expired cursor rejected") {
-    withCheckpointEvery(1) { // pins EXACT keepLast retention boundaries
-    import spark.implicits._
-    val root = tmp("snap9")
-    def ids(df: Option[org.apache.spark.sql.DataFrame]): Set[Long] =
-      df.map(_.select("id").as[Long].collect().toSet).getOrElse(Set.empty)
-    SnapTable.append(spark, root, (0L until 10L).toDF("id"))
-    val s2 = SnapTable.append(spark, root, (10L until 20L).toDF("id"))
-    assert(ids(SnapTable.changesSince(spark, root, 0)) == (0L until 20L).toSet)
-    val cursor = s2.id
-    assert(SnapTable.changesSince(spark, root, cursor).isEmpty)
-    // compaction rewrites every file but adds NO rows — invisible to
-    // the incremental consumer (no double-count of compacted data)
-    SnapTable.rewrite(spark, root, _ => true, _.repartition(1))
-    assert(SnapTable.changesSince(spark, root, cursor).isEmpty)
-    SnapTable.append(spark, root, (20L until 25L).toDF("id"))
-    assert(ids(SnapTable.changesSince(spark, root, cursor)) == (20L until 25L).toSet)
-    // expiry retains {3,4}: cursor 2's own manifest is gone but its
-    // LINEAGE (3,4] is intact, so it recovers exactly (3 is the
-    // row-less rewrite, 4 added 20..25)...
-    SnapTable.expire(spark, root, keepLast = 2)
-    assert(ids(SnapTable.changesSince(spark, root, cursor)) == (20L until 25L).toSet)
-    // ...while a cursor whose lineage is truly expired fails loudly
-    intercept[IllegalArgumentException] {
-      SnapTable.changesSince(spark, root, cursor - 1)
-    }
-    // full-read re-sync still consistent
-    assert(SnapTable.read(spark, root).count() == 25)
-    }
+    // with one snapshot left, data/ holds exactly the head's files
+    val live = SnapTable.snapshot(spark, root).get.files
+      .map(e => new org.apache.hadoop.fs.Path(e.path).getName).toSet
+    val data = new java.io.File(s"$root/data").listFiles().map(_.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
+    assert(data == live && live.size == 1)
+    assert(SnapTable.read(spark, root).select("id").as[Long].collect().toSet == content)
   }
 
   test("expire: drops old manifests, GCs orphan data, keeps live files") {
-    withCheckpointEvery(1) { // pins EXACT keepLast retention boundaries
     import spark.implicits._
     val root = tmp("snap8")
     SnapTable.append(spark, root, (0 until 20).map(i => (i.toLong, "a")).toDF("id", "v"))
@@ -555,36 +415,6 @@ class SnapTableSpec extends AnyFunSuite {
     assert(dataFiles == liveFiles.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath))
     assert(SnapTable.read(spark, root).count() == 40)
     intercept[IllegalArgumentException] { SnapTable.read(spark, root, Some(1L)) }
-    }
-  }
-
-  test("changesBetween: covered head advances the cursor safely across a racing writer") {
-    import spark.implicits._
-    val root = tmp("snap10")
-    def ids(df: Option[org.apache.spark.sql.DataFrame]): Set[Long] =
-      df.map(_.select("id").as[Long].collect().toSet).getOrElse(Set.empty)
-    SnapTable.append(spark, root, (0L until 10L).toDF("id"))
-    SnapTable.append(spark, root, (10L until 20L).toDF("id"))
-    val c1 = SnapTable.changesBetween(spark, root, 0)
-    assert(ids(c1.rows) == (0L until 20L).toSet && c1.coveredThrough == 2L)
-    // a writer commits BETWEEN the consumer's read and its next cycle:
-    // advancing to coveredThrough neither duplicates nor skips it
-    SnapTable.append(spark, root, (20L until 30L).toDF("id"))
-    val c2 = SnapTable.changesBetween(spark, root, c1.coveredThrough)
-    assert(ids(c2.rows) == (20L until 30L).toSet && c2.coveredThrough == 3L)
-    val c3 = SnapTable.changesBetween(spark, root, c2.coveredThrough)
-    assert(c3.rows.isEmpty && c3.coveredThrough == 3L)
-    // explicit upper bound pins a historical range exactly
-    val pinned = SnapTable.changesBetween(spark, root, 1L, Some(2L))
-    assert(ids(pinned.rows) == (10L until 20L).toSet && pinned.coveredThrough == 2L)
-    val empty = SnapTable.changesBetween(spark, root, 2L, Some(2L))
-    assert(empty.rows.isEmpty && empty.coveredThrough == 2L)
-    intercept[IllegalArgumentException] {
-      SnapTable.changesBetween(spark, root, 1L, Some(99L))
-    }
-    intercept[IllegalArgumentException] {
-      SnapTable.changesBetween(spark, root, 2L, Some(1L))
-    }
   }
 
   test("commit CAS never clobbers: the lost publisher leaves the winner's manifest intact") {

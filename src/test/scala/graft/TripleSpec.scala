@@ -22,8 +22,7 @@ class TripleSpec extends AnyFunSuite {
     val lines = SpanCodec.lines(doc.spans)
     val meta = Annotator.annotate(docId, lines, Fixtures.Encodings(name), dict)
     val mine = TripleExpand.expandDoc(meta, lines)
-    val goldenText = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/reference/examples/${name.stripSuffix(".csv")}.ttl")), "UTF-8")
+    val goldenText = Fixtures.read(s"examples/${name.stripSuffix(".csv")}.ttl")
     val golden = Turtle.parse(goldenText)
     Canon.compare(mine, golden)
   }
