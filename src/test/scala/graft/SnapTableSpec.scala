@@ -300,19 +300,32 @@ class SnapTableSpec extends AnyFunSuite {
     }
   }
 
-  test("each manifest lists the full file set; old damage never alters newer reads") {
-    import spark.implicits._
-    import graft.json.{JArr, JObj, JStr, Json}
-    val root = tmp("snap17")
-    val mPath = (v: Long) => java.nio.file.Paths.get(f"$root/meta/snap-$v%08d.json")
-    def manifest(v: Long): JObj =
-      Json.parse(java.nio.file.Files.readString(mPath(v)).split("\n")(0)).asInstanceOf[JObj]
-    def listed(v: Long): Vector[String] = manifest(v)("files").asInstanceOf[JArr].items
+  private def manifestPath(root: String, v: Long): java.nio.file.Path =
+    java.nio.file.Paths.get(f"$root/meta/snap-$v%08d.json")
+
+  private def manifestJson(root: String, v: Long): graft.json.JObj = {
+    import graft.json.{JObj, Json}
+    Json.parse(java.nio.file.Files.readString(manifestPath(root, v)).split("\n")(0))
+      .asInstanceOf[JObj]
+  }
+
+  private def listedFiles(root: String, v: Long): Vector[String] = {
+    import graft.json.{JArr, JObj, JStr}
+    manifestJson(root, v)("files").asInstanceOf[JArr].items
       .map(_.asInstanceOf[JObj]("path").asInstanceOf[JStr].s)
-    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.select("id").as[Long].collect().toSet
-    // appends, a compaction, an overwrite and an append after it
-    var model = Vector.empty[Set[Long]] // index v-1: content of snapshot v
+  }
+
+  private def idSet(df: org.apache.spark.sql.DataFrame): Set[Long] = {
+    import spark.implicits._
+    df.select("id").as[Long].collect().toSet
+  }
+
+  /** Appends, a compaction, an overwrite and an append after it; returns
+   *  the table root and the expected content of each snapshot (index v-1). */
+  private def mixedHistory(prefix: String): (String, Vector[Set[Long]]) = {
+    import spark.implicits._
+    val root = tmp(prefix)
+    var model = Vector.empty[Set[Long]]
     for (i <- 1 to 4) {
       SnapTable.append(spark, root, Seq((i.toLong, "x")).toDF("id", "v"))
       model :+= (1L to i.toLong).toSet
@@ -321,50 +334,64 @@ class SnapTableSpec extends AnyFunSuite {
     SnapTable.append(spark, root, Seq((5L, "x")).toDF("id", "v")); model :+= model.last + 5L
     SnapTable.overwrite(spark, root, Seq((99L, "y")).toDF("id", "v")); model :+= Set(99L)
     SnapTable.append(spark, root, Seq((100L, "y")).toDF("id", "v")); model :+= Set(99L, 100L)
+    (root, model)
+  }
+
+  test("each manifest lists the full file set and alone reads back its snapshot") {
+    val (root, model) = mixedHistory("snap17")
     val head = model.length.toLong
     assert(SnapTable.snapshotIds(spark, root) == (1L to head))
     for (v <- 1L to head) {
       // one format: the four keys, no delta or lineage fields
-      assert(manifest(v).fields.map(_._1).toSet == Set("id", "op", "watermark", "files"),
-        manifest(v).fields.map(_._1))
+      val keys = manifestJson(root, v).fields.map(_._1)
+      assert(keys.toSet == Set("id", "op", "watermark", "files"), keys)
       // the manifest ALONE is the whole table: its files read back to
       // exactly the snapshot's content, and it agrees with the reader
-      assert(ids(spark.read.parquet(listed(v): _*)) == model((v - 1).toInt), s"snap $v")
-      assert(listed(v).toSet == SnapTable.snapshot(spark, root, Some(v)).get.files.map(_.path).toSet)
+      assert(idSet(spark.read.parquet(listedFiles(root, v): _*)) == model((v - 1).toInt),
+        s"snap $v")
+      assert(listedFiles(root, v).toSet ==
+        SnapTable.snapshot(spark, root, Some(v)).get.files.map(_.path).toSet)
     }
+  }
+
+  test("a damaged older manifest never alters newer reads; restoring it recovers") {
+    import spark.implicits._
+    val (root, model) = mixedHistory("snap20")
+    val head = model.length.toLong
     def readsIntact(): Unit = {
-      assert(ids(SnapTable.read(spark, root)) == model.last)
+      assert(idSet(SnapTable.read(spark, root)) == model.last)
       for (v <- Seq(2L, 4L, 6L, 7L))
-        assert(ids(SnapTable.read(spark, root, Some(v))) == model((v - 1).toInt), s"snap $v")
+        assert(idSet(SnapTable.read(spark, root, Some(v))) == model((v - 1).toInt), s"snap $v")
     }
     // rot an older manifest: every newer read is unchanged, only the
     // damaged id itself refuses to time-travel
-    val original = java.nio.file.Files.readAllBytes(mPath(3))
-    java.nio.file.Files.writeString(mPath(3), "{\"id\":3,ROT")
+    val original = java.nio.file.Files.readAllBytes(manifestPath(root, 3))
+    java.nio.file.Files.writeString(manifestPath(root, 3), "{\"id\":3,ROT")
     new java.io.File(s"$root/meta/.snap-00000003.json.crc").delete()
     readsIntact()
     intercept[IllegalArgumentException] { SnapTable.read(spark, root, Some(3L)) }
     // restoring the damaged file fully recovers it
-    java.nio.file.Files.write(mPath(3), original)
+    java.nio.file.Files.write(manifestPath(root, 3), original)
     new java.io.File(s"$root/meta/.snap-00000003.json.crc").delete()
-    assert(ids(SnapTable.read(spark, root, Some(3L))) == model(2))
+    assert(idSet(SnapTable.read(spark, root, Some(3L))) == model(2))
     // a CRC-valid manifest without a "files" list (e.g. a retired
     // delta shape) is torn: stepped over, never served as the table
     val forged = """{"id":9,"op":"append","watermark":null,"adds":[]}"""
     val crc = new java.util.zip.CRC32
     crc.update(forged.getBytes("UTF-8"))
-    java.nio.file.Files.writeString(mPath(9), s"$forged\ncrc:${crc.getValue}\n")
+    java.nio.file.Files.writeString(manifestPath(root, 9), s"$forged\ncrc:${crc.getValue}\n")
     assert(SnapTable.snapshot(spark, root).get.id == head)
     readsIntact()
     // a CRC-less manifest is torn too
-    java.nio.file.Files.writeString(mPath(10),
+    java.nio.file.Files.writeString(manifestPath(root, 10),
       """{"id":10,"op":"append","watermark":null,"files":[]}""" + "\n")
     assert(SnapTable.snapshot(spark, root).get.id == head)
     readsIntact()
     assert(SnapTable.append(spark, root, Seq((101L, "z")).toDF("id", "v")).id == 11L)
     // the next commit builds on the last parseable head, not the torn ids
-    assert(listed(head).toSet.subsetOf(listed(11).toSet) && listed(11).size == listed(head).size + 1)
-    assert(ids(SnapTable.read(spark, root)) == model.last + 101L)
+    assert(listedFiles(root, head).toSet.subsetOf(listedFiles(root, 11).toSet) &&
+      listedFiles(root, 11).size == listedFiles(root, head).size + 1)
+    assert(idSet(SnapTable.read(spark, root)) == model.last + 101L)
   }
 
   test("expire(keepLast = k) leaves exactly k parseable snapshots") {
