@@ -1,6 +1,7 @@
 package graft
 
 import graft.annotate.{Annotator, CsvwReader, DocMeta, JsonLd}
+import graft.expr.TextLinesOf
 import graft.ingest.{Doc, SpanCodec}
 import graft.link.UnitDict
 import graft.rdf.{Term, TripleExpand}
@@ -40,20 +41,17 @@ object Pipeline {
     spark.sparkContext.broadcast(
       if (ttlPath.isEmpty) UnitDict.default else UnitDict.fromTtl(ttlPath))
 
-  /** Only the text lines reach the JVM objects: when docs come from a
-    * file scan this prunes the nested schema to spans.kind/text/offset
-    * (media_ref payloads never leave parquet). Narrow.
+  /** Only the text lines reach the JVM objects: one codegen kernel
+    * ([[graft.expr.TextLinesOf]]) over the direct field projections
+    * `spans.kind/text/offset` yields each doc's text-span lines in
+    * stable offset order. Field extraction (GetArrayStructFields) is
+    * the pattern nested-schema pruning supports, so a file scan reads
+    * only those three fields and media_ref payloads never leave
+    * parquet. Narrow.
     */
   private def docLines(docs: Dataset[Doc]): Dataset[(String, Seq[String])] = {
     import docs.sparkSession.implicits._
-    // direct field extraction (GetArrayStructFields) is the pattern the
-    // nested-schema-pruning rule supports; HOF lambdas over the full
-    // struct would force a whole-spans read
-    docs.select(col("doc_id"), expr(
-      """transform(array_sort(
-        |  filter(arrays_zip(spans.kind, spans.text, spans.offset),
-        |         s -> s.kind = 'text'),
-        |  (a, b) -> a.offset - b.offset), s -> s.text)""".stripMargin).as("lines"))
+    docs.select(col("doc_id"), TextLinesOf("spans").as("lines"))
       .as[(String, Seq[String])]
   }
 
@@ -113,12 +111,15 @@ object Pipeline {
                       failFast: Boolean = true,
                       errorCounter: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[TripleRow] = {
     import docs.sparkSession.implicits._
-    docs.flatMap { case (d, enc) =>
-      expandRows(includeProv, failFast, errorCounter) {
-        val lines = SpanCodec.lines(d.spans)
-        (Annotator.annotate(d.doc_id, lines, enc, dict.value), lines)
+    // the same pruned line path as docLines, over the pair's doc struct
+    docs.select(col("_1.doc_id"), TextLinesOf("_1.spans"), col("_2"))
+      .as[(String, Seq[String], String)]
+      .flatMap { case (id, ls, enc) =>
+        expandRows(includeProv, failFast, errorCounter) {
+          val lines = ls.toIndexedSeq
+          (Annotator.annotate(id, lines, enc, dict.value), lines)
+        }
       }
-    }
   }
 
   /** The reference's `/api/rdf` entry point, distributed: expand

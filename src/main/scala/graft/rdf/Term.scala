@@ -38,7 +38,16 @@ object Term {
     sb.toString
   }
 
-  def lit(s: String): String = "\"" + escape(s) + "\""
+  def lit(s: String): String = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\\' || c == '"' || c == '\n' || c == '\r' || c == '\t')
+        return "\"" + escape(s) + "\""
+      i += 1
+    }
+    "\"" + s + "\"" // nothing to escape
+  }
 
   def unescape(s: String): String = {
     if (s.indexOf('\\') < 0) return s

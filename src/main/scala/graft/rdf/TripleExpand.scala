@@ -40,16 +40,54 @@ object TripleExpand {
   private def pandasLine(l: String): String =
     l.stripSuffix("\n").stripSuffix("\r")
 
+  // constant terms of the per-cell loop, built once
+  private val CsvwRow = iri(CsvwNs + "row")
+  private val CsvwRowType = iri(CsvwNs + "Row")
+  private val CsvwDescribes = iri(CsvwNs + "describes")
+  private val CsvwUrl = iri(CsvwNs + "url")
+  private val QudtQuantityValue = iri(QudtNs + "QuantityValue")
+  private val QudtValue = iri(QudtNs + "value")
+  private val QudtUnit = iri(QudtNs + "unit")
+  private val OaAnnotation = iri(OaNs + "Annotation")
+  private val OaHasBody = iri(OaNs + "hasBody")
+  private val OaTextualBody = iri(OaNs + "TextualBody")
+  private val DcFormat = iri(DcNs + "format")
+  private val TextPlain = lit("text/plain")
+  private val XsdString = XsdNs + "string"
+  private val XsdDouble = XsdNs + "double"
+  private val XsdAnyUri = XsdNs + "anyURI"
   private val XsdNumeric = Set(
-    XsdNs + "float", XsdNs + "decimal", XsdNs + "integer", XsdNs + "double")
+    XsdNs + "float", XsdNs + "decimal", XsdNs + "integer", XsdDouble)
+  private def dtSuffix(dtIri: String): String = "^^<" + dtIri + ">"
+  private val IntegerSuffix = dtSuffix(XsdNs + "integer")
+  private val DoubleSuffix = dtSuffix(XsdDouble)
+  private val BooleanSuffix = dtSuffix(XsdNs + "boolean")
 
   /** rdflib Literal(python value) typing for qudt:value cells. */
   private def cellLiteral(v: PVal): String = v match {
-    case PInt(x) => typed(x.toString, XsdNs + "integer")
-    case PFloat(x) => typed(PyFloat.repr(x), XsdNs + "double")
-    case PBool(b) => typed(if (b) "true" else "false", XsdNs + "boolean")
-    case PNaN => typed("nan", XsdNs + "double")
+    case PInt(x) => lit(x.toString) + IntegerSuffix
+    case PFloat(x) => lit(PyFloat.repr(x)) + DoubleSuffix
+    case PBool(b) => lit(if (b) "true" else "false") + BooleanSuffix
+    case PNaN => lit("nan") + DoubleSuffix
     case PStr(s) => lit(s)
+  }
+
+  /** What every cell of one data column shares: its predicate, how its
+    * value is expanded (by the column's format) and the skolem path
+    * tails of its nodes (`|<col>|qv` and so on).
+    */
+  private final class CellColumn(c: ColumnDesc, col: Int) {
+    val pred: String = iri(c.id)
+    val format: String = c.formatIri.getOrElse(XsdString)
+    val numeric: Boolean = XsdNumeric.contains(format)
+    val anyUri: Boolean = format == XsdAnyUri
+    val german: Boolean = format == XsdDouble // German float re-parse
+    val unit: String = c.unit.map(u => iri(u.iri)).orNull
+    val valueSuffix: String = dtSuffix(format)
+    val qv: String = s"$col|qv"
+    val list: String = s"$col|list|"
+    val anno: String = s"$col|anno"
+    val body: String = s"$col|body"
   }
 
   def expand(m: DocMeta, tableRows: Map[String, Vector[Vector[PVal]]],
@@ -81,31 +119,31 @@ object TripleExpand {
     m.notes.foreach { n =>
       val note = iri(n.id)
       add(doc, iri(CsvwNs + "note"), note)
-      add(note, RdfType, iri(OaNs + "Annotation"))
+      add(note, RdfType, OaAnnotation)
       add(note, RdfsLabel, lit(n.label))
       add(note, iri(CsvwNs + "rownum"), integer(n.rownum))
       n.bodies.zipWithIndex.foreach { case (b, bi) =>
         b match {
           case QuantityBody(vj, xsdT, unit) =>
             val bn = skolem(s"${m.id}|note|${n.id}|body|$bi")
-            add(note, iri(OaNs + "hasBody"), bn)
-            add(bn, RdfType, iri(QudtNs + "QuantityValue"))
+            add(note, OaHasBody, bn)
+            add(bn, RdfType, QudtQuantityValue)
             val lex =
               if (vj.startsWith("\"")) vj.substring(1, vj.length - 1) else vj
-            add(bn, iri(QudtNs + "value"), typed(lex, xsdT))
+            add(bn, QudtValue, typed(lex, xsdT))
             unit.foreach { u =>
-              add(bn, iri(QudtNs + "unit"), iri(u.iri))
+              add(bn, QudtUnit, iri(u.iri))
               add(iri(u.iri), RdfType, iri(u.rdfType))
             }
           case TextBody(v) =>
             val bn = skolem(s"${m.id}|note|${n.id}|body|$bi")
-            add(note, iri(OaNs + "hasBody"), bn)
-            add(bn, RdfType, iri(OaNs + "TextualBody"))
+            add(note, OaHasBody, bn)
+            add(bn, RdfType, OaTextualBody)
             add(bn, iri(OaNs + "purpose"), lit("oa:tagging"))
             add(bn, iri(OaNs + "format"), lit("text/plain"))
             add(bn, iri(OaNs + "value"), lit(v))
           case UriBody(url) =>
-            add(note, iri(OaNs + "hasBody"), lit(url))
+            add(note, OaHasBody, lit(url))
         }
       }
     }
@@ -116,7 +154,7 @@ object TripleExpand {
       val table = iri(t.id)
       add(doc, iri(CsvwNs + "table"), table)
       add(table, RdfType, iri(CsvwNs + "Table"))
-      add(table, iri(CsvwNs + "url"), typed(t.url, XsdNs + "anyURI"))
+      add(table, CsvwUrl, typed(t.url, XsdNs + "anyURI"))
       val dialect = skolem(s"${m.id}|table|${t.id}|dialect")
       add(table, iri(CsvwNs + "dialect"), dialect)
       add(dialect, iri(CsvwNs + "delimiter"), lit(t.delimiter))
@@ -148,7 +186,7 @@ object TripleExpand {
         } else {
           c.formatIri.foreach(f => add(col, iri(CsvwNs + "format"), iri(f)))
           c.unit.foreach { u =>
-            add(col, iri(QudtNs + "unit"), iri(u.iri))
+            add(col, QudtUnit, iri(u.iri))
             add(iri(u.iri), RdfType, iri(u.rdfType))
           }
         }
@@ -157,60 +195,66 @@ object TripleExpand {
       // ---- table data (csvw_parser.add_table_data) ----------------
       dedup = false // unique by construction (skolem ids embed row/col)
       val rows = tableRows.getOrElse(t.id, Vector.empty)
-      val colMeta = t.columns // includes GID at 0
-      rows.zipWithIndex.foreach { case (row, index) =>
-        val rowNode = skolem(s"${m.id}|table|${t.id}|row|$index")
+      // columns include GID at 0; row cell j belongs to column j + 1
+      val cellCols = t.columns.indices.drop(1).map(j => new CellColumn(t.columns(j), j)).toArray
+      val rowPath = s"${m.id}|table|${t.id}|row|"
+      val cellPath0 = s"${m.id}|table|${t.id}|cell|"
+      val rowUrl = "<" + t.url + "/row="
+      var index = 0
+      rows.foreach { row =>
+        val rowNode = skolem(rowPath + index)
         val gidIri = iri(t.aboutUrl.replace("{GID}", index.toString))
-        add(table, iri(CsvwNs + "row"), rowNode)
-        add(rowNode, RdfType, iri(CsvwNs + "Row"))
-        add(rowNode, iri(CsvwNs + "describes"), gidIri)
+        add(table, CsvwRow, rowNode)
+        add(rowNode, RdfType, CsvwRowType)
+        add(rowNode, CsvwDescribes, gidIri)
         val rowNum = index + t.skipRows + t.headerRowCount
-        add(rowNode, iri(CsvwNs + "url"), iri(s"${t.url}/row=$rowNum"))
+        add(rowNode, CsvwUrl, rowUrl + rowNum + ">")
         // cells: reference iterates [gid] + cells against columns[cellIndex]
-        row.zipWithIndex.foreach { case (cell0, j) =>
-          val c = colMeta(j + 1) // shift: row has no GID column
-          val format = c.formatIri.getOrElse(XsdNs + "string")
-          val pred = iri(c.id)
-          val cellPath = s"${m.id}|table|${t.id}|cell|$index|${j + 1}"
+        val cellPath = cellPath0 + index + "|"
+        var j = 0
+        row.foreach { cell0 =>
+          val c = cellCols(j)
           // German float re-parse (csvw_parser.py:294-296)
           val cell = cell0 match {
-            case PStr(s) if format == XsdNs + "double" =>
+            case PStr(s) if c.german =>
               val noDots = s.replace(".", "")
               val li = noDots.lastIndexOf(',')
               PStr(if (li < 0) noDots
                    else noDots.substring(0, li) + "." + noDots.substring(li + 1))
             case other => other
           }
-          if (XsdNumeric.contains(format)) {
-            val vn = skolem(s"$cellPath|qv")
-            add(vn, RdfType, iri(QudtNs + "QuantityValue"))
-            add(vn, iri(QudtNs + "value"), cellLiteral(cell))
-            c.unit.foreach(u => add(vn, iri(QudtNs + "unit"), iri(u.iri)))
-            add(gidIri, pred, vn)
-          } else if (format == XsdNs + "anyURI") {
+          if (c.numeric) {
+            val vn = skolem(cellPath + c.qv)
+            add(vn, RdfType, QudtQuantityValue)
+            add(vn, QudtValue, cellLiteral(cell))
+            if (c.unit != null) add(vn, QudtUnit, c.unit)
+            add(gidIri, c.pred, vn)
+          } else if (c.anyUri) {
             cell match {
               case PStr(s) =>
-                val uris = s.split(" ").toVector
-                val nodes = uris.indices.map(k => skolem(s"$cellPath|list|$k"))
-                uris.zipWithIndex.foreach { case (u, k) =>
-                  add(nodes(k), RdfFirst, iri(u))
+                val uris = s.split(" ")
+                val nodes = uris.indices.map(k => skolem(cellPath + c.list + k))
+                uris.indices.foreach { k =>
+                  add(nodes(k), RdfFirst, iri(uris(k)))
                   add(nodes(k), RdfRest,
                     if (k == uris.length - 1) RdfNil else nodes(k + 1))
                 }
-                add(gidIri, pred, nodes.head)
+                add(gidIri, c.pred, nodes.head)
               case _ => // reference crashes on non-str anyURI cells; skip
             }
           } else {
-            val vn = skolem(s"$cellPath|anno")
-            val bn = skolem(s"$cellPath|body")
-            add(vn, RdfType, iri(OaNs + "Annotation"))
-            add(vn, iri(OaNs + "hasBody"), bn)
-            add(bn, RdfType, iri(OaNs + "TextualBody"))
-            add(bn, iri(DcNs + "format"), lit("text/plain"))
-            add(bn, RdfValue, typed(cell.render, format))
-            add(gidIri, pred, vn)
+            val vn = skolem(cellPath + c.anno)
+            val bn = skolem(cellPath + c.body)
+            add(vn, RdfType, OaAnnotation)
+            add(vn, OaHasBody, bn)
+            add(bn, RdfType, OaTextualBody)
+            add(bn, DcFormat, TextPlain)
+            add(bn, RdfValue, lit(cell.render) + c.valueSuffix)
+            add(gidIri, c.pred, vn)
           }
+          j += 1
         }
+        index += 1
       }
     }
 

@@ -10,4 +10,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** The error `array_sort` raises when its comparator returns NULL. */
+  def comparatorReturnsNull(first: String, second: String): Throwable =
+    org.apache.spark.sql.errors.QueryExecutionErrors.comparatorReturnsNull(first, second)
 }

@@ -45,6 +45,145 @@ class PipelineSpec extends AnyFunSuite {
     assert(dist == core)
   }
 
+  test("stage B-E parity on synthetic docs: triples, triplesDetected, triplesFromMetadata == per-doc core") {
+    import spark.implicits._
+    import graft.annotate.{Annotator, JsonLd}
+    import graft.ingest.{Doc, Span}
+    // all 8 archetypes, the 1-in-1024 large doc, a doc whose spans arrive
+    // shuffled, and a doc labelled with a non-utf-8 encoding
+    val base = ((0L until 16L) :+ 1024L).map(SynthCorpus.doc)
+    val shuffled = {
+      val d = SynthCorpus.doc(22) // archetype 6: media spans interleaved
+      Doc("doc-shuffled", new scala.util.Random(7).shuffle(d.spans))
+    }
+    val docs = base :+ shuffled
+    val latin = SynthCorpus.docId(7)
+    val encodingOf = (id: String) => if (id == latin) "latin-1" else "utf-8"
+    assert(shuffled.spans.map(_.offset) != shuffled.spans.map(_.offset).sorted)
+    assert(docs.exists(_.spans.exists(_.kind == "media")))
+    def rows(ts: org.apache.spark.sql.Dataset[TripleRow]) =
+      ts.collect().map(t => (t.doc_id, t.subj, t.pred, t.obj)).sorted.toVector
+    val dict = Pipeline.broadcastDict(spark)
+    val core = docs.flatMap { d =>
+      val lines = SpanCodec.lines(d.spans)
+      val meta = Annotator.annotate(d.doc_id, lines, encodingOf(d.doc_id), dict.value)
+      graft.rdf.TripleExpand.expandDoc(meta, lines).map(t => (d.doc_id, t.subj, t.pred, t.obj))
+    }.sorted.toVector
+    val dist = rows(Pipeline.triples(spark.createDataset(docs), dict, encodingOf))
+    assert(dist.size == core.size && dist == core)
+    assert(dist.map(_._1).distinct.size == docs.size)
+    val detected = rows(Pipeline.triplesDetected(
+      spark.createDataset(docs.map(d => (d, encodingOf(d.doc_id)))), dict))
+    assert(detected == dist)
+    val fromMeta = rows(Pipeline.triplesFromMetadata(spark.createDataset(docs.map { d =>
+      val lines = SpanCodec.lines(d.spans)
+      (JsonLd.render(Annotator.annotate(d.doc_id, lines, encodingOf(d.doc_id), dict.value)).render,
+        SpanCodec.reconstruct(d.spans))
+    })))
+    assert(fromMeta == dist)
+  }
+
+  /** Edge docs for the lines kernel, as parquet rows (a null offset has
+    * no [[graft.ingest.Span]] form).
+    */
+  private val edgeDocs: Seq[(String, Seq[(String, String, String, Integer)])] = {
+    def t(text: String, off: Integer) = ("text", text, null: String, off)
+    def m(ref: String, off: Integer) = ("media", ref, ref, off)
+    Seq(
+      "empty" -> Seq(),
+      "media-only" -> Seq(m("https://a.example/1", 0), m("https://a.example/2", 1)),
+      "out-of-order" -> Seq(t("c\n", 3), m("https://a.example/x", 1), t("a\n", 0), t("b\n", 2)),
+      "equal-offsets" -> Seq(t("b1\n", 1), t("a\n", 0), t("b2\n", 1), t("b3\n", 1)),
+      "null-kind" -> Seq(t("a\n", 0), (null, "dropped\n", null, 1), t("c\n", 2)),
+      "null-text" -> Seq(t("a\n", 0), t(null, 1), t("c\n", 2)),
+      "extreme-offsets" -> Seq(t("max", Int.MaxValue), t("min", Int.MinValue), t("neg", -5)),
+      "one-text-null-offset" -> Seq(t("only\n", null), m("https://a.example/y", 1)),
+      "null-spans" -> null,
+      "null-offset" -> Seq(t("a\n", 0), t("b\n", null)))
+  }
+
+  /** The former `docLines` SQL chain: the null semantics reference. */
+  private val ChainLines =
+    """transform(array_sort(
+      |  filter(arrays_zip(spans.kind, spans.text, spans.offset),
+      |         s -> s.kind = 'text'),
+      |  (a, b) -> a.offset - b.offset), s -> s.text)""".stripMargin
+
+  private def edgeFrame(names: Set[String]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("doc_id", StringType),
+      StructField("spans", ArrayType(StructType(Seq(
+        StructField("kind", StringType), StructField("text", StringType),
+        StructField("media_ref", StringType), StructField("offset", IntegerType)))))))
+    val rows = edgeDocs.filter(e => names(e._1)).map { case (id, spans) =>
+      Row(id, if (spans == null) null else spans.map { case (k, t, r, o) => Row(k, t, r, o) })
+    }
+    val dir = java.nio.file.Files.createTempDirectory("edges").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** (interpreted eval, codegen) of `e` over `df`. */
+  private def bothModes[T](body: => T): (T, T) = (
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body),
+    withConf("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(body))
+
+  test("graft_text_lines kernel == SpanCodec.lines and the former lambda chain on edge docs") {
+    import org.apache.spark.sql.functions.{col, expr}
+    def lines(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+      df.select(col("doc_id"), c).collect()
+        .map(r => r.getString(0) -> Option(r.getSeq[String](1)).map(_.toVector)).toMap
+    val ok = edgeDocs.map(_._1).toSet - "null-offset"
+    val df = edgeFrame(ok)
+    val (interp, codegen) = bothModes(lines(df, graft.expr.TextLinesOf("spans")))
+    assert(interp == codegen)
+    assert(interp.size == ok.size)
+    // the reference form, wherever a doc has a Span form
+    edgeDocs.filter(e => ok(e._1) && e._2 != null && e._2.forall(_._4 != null)).foreach {
+      case (id, spans) =>
+        val ref = SpanCodec.lines(spans.map { case (k, t, r, o) => graft.ingest.Span(k, t, r, o) })
+        assert(interp(id).contains(ref.toVector), id)
+    }
+    assert(interp("equal-offsets").contains(Vector("a\n", "b1\n", "b2\n", "b3\n")))
+    assert(interp("null-text").contains(Vector("a\n", null, "c\n")))
+    assert(interp("one-text-null-offset").contains(Vector("only\n")))
+    assert(interp("null-spans").isEmpty)
+    // the former chain agrees on null semantics; only its `a - b`
+    // comparator overflows on extreme offsets (an ANSI arithmetic error)
+    val chain = lines(edgeFrame(ok - "extreme-offsets"), expr(ChainLines))
+    assert(chain == interp - "extreme-offsets")
+    // a null offset among two or more text spans fails as the chain's
+    // comparator does — never read as 0
+    val bad = edgeFrame(Set("null-offset"))
+    def failure(c: org.apache.spark.sql.Column): Throwable =
+      intercept[Throwable](bad.select(c).collect())
+    def comparatorNull(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("COMPARATOR_RETURNS_NULL"))
+    assert(comparatorNull(failure(expr(ChainLines))))
+    val (fi, fc) = bothModes(failure(graft.expr.TextLinesOf("spans")))
+    assert(comparatorNull(fi) && comparatorNull(fc), s"$fi / $fc")
+    // null spans: a null line array, so the doc is counted, not expanded
+    val dict = Pipeline.broadcastDict(spark)
+    val errors = spark.sparkContext.longAccumulator("null-spans")
+    val nullSpans = edgeFrame(Set("null-spans", "out-of-order"))
+      .as[graft.ingest.Doc](org.apache.spark.sql.Encoders.product[graft.ingest.Doc])
+    Pipeline.triples(nullSpans, dict, failFast = false, errorCounter = Some(errors)).count()
+    assert(errors.value == 1L)
+  }
+
   test("synthetic corpus output is identical across partitionings") {
     import spark.implicits._
     val dict = Pipeline.broadcastDict(spark)

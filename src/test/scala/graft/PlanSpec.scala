@@ -87,6 +87,25 @@ class PlanSpec extends AnyFunSuite {
     assert(scan.contains("text"), scan)
   }
 
+  test("pipeline prunes media_ref out of the parquet scan (synthetic corpus, lines kernel)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("prune-synth").toString
+    // archetype 6 carries media spans with a media_ref
+    val docs = (0L until 16L).map(graft.ingest.SynthCorpus.doc)
+    assert(docs.exists(_.spans.exists(_.media_ref != null)))
+    spark.createDataset(docs).write.mode("overwrite").parquet(dir)
+    val dict = Pipeline.broadcastDict(spark)
+    val p = Pipeline.triples(spark.read.parquet(dir).as[graft.ingest.Doc], dict)
+      .queryExecution.executedPlan.toString
+    val scan = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+    assert(!scan.contains("media_ref"), scan)
+    assert(scan.contains("text") && scan.contains("offset"), scan)
+    // one codegen kernel, no interpreted lambda chain, no shuffle
+    assert(p.contains("graft_text_lines"), p)
+    assert(!p.contains("lambdafunction") && !p.contains("array_sort"), p)
+    assert(!p.contains("Exchange"), p)
+  }
+
   test("q13: unit dictionary join is broadcast") {
     val p = plan("q13_unit_link")
     assert(p.contains("BroadcastHashJoin"), p.take(1200))

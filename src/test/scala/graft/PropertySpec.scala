@@ -168,6 +168,68 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** The string-slicing form PyFloat.repr had before its index-arithmetic
+    * rewrite, kept as the reference it must equal.
+    */
+  private def reprReference(d: Double): String = {
+    if (d.isNaN) return "nan"
+    if (d.isPosInfinity) return "inf"
+    if (d.isNegInfinity) return "-inf"
+    if (d == 0.0) return if (1.0 / d < 0) "-0.0" else "0.0"
+    val neg = d < 0
+    val s = java.lang.Double.toString(math.abs(d))
+    val (mant, exp10) = s.indexOf('E') match {
+      case -1 => (s, 0)
+      case i => (s.substring(0, i), s.substring(i + 1).toInt)
+    }
+    val dot = mant.indexOf('.')
+    val digitsRaw = (mant.substring(0, dot) + mant.substring(dot + 1))
+    val intLen = dot
+    var digits = digitsRaw.dropWhile(_ == '0')
+    val leadZeros = digitsRaw.length - digits.length
+    digits = digits.reverse.dropWhile(_ == '0').reverse
+    if (digits.isEmpty) digits = "0"
+    val e = intLen - 1 - leadZeros + exp10
+    val sign = if (neg) "-" else ""
+    if (e >= -4 && e < 16) {
+      if (e >= 0) {
+        val intPart =
+          if (digits.length > e + 1) digits.substring(0, e + 1)
+          else digits + "0" * (e + 1 - digits.length)
+        val frac = if (digits.length > e + 1) digits.substring(e + 1) else ""
+        sign + intPart + "." + (if (frac.isEmpty) "0" else frac)
+      } else {
+        sign + "0." + "0" * (-e - 1) + digits
+      }
+    } else {
+      val mantStr =
+        if (digits.length == 1) digits
+        else digits.substring(0, 1) + "." + digits.substring(1)
+      val es = if (e < 0) "-" else "+"
+      sign + mantStr + "e" + es + f"${math.abs(e)}%02d"
+    }
+  }
+
+  test("PyFloat.repr == its string-slicing reference form (random bits, ranges, boundaries)") {
+    val rnd = new scala.util.Random(20261020L)
+    val random = Iterator.fill(100000)(java.lang.Double.longBitsToDouble(rnd.nextLong())) ++
+      Iterator.fill(100000)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(44) - 22)) ++
+      Iterator.fill(20000)(math.rint(rnd.nextDouble() * 1e6) / math.pow(10, rnd.nextInt(8)))
+    val edges = Seq(0.0, -0.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.MinPositiveValue, -Double.MinPositiveValue, java.lang.Double.MIN_NORMAL,
+      java.lang.Double.MIN_NORMAL / 2, java.lang.Double.MIN_NORMAL / 3, 4.9e-322, 2.2e-308,
+      Double.MaxValue, -Double.MaxValue, 1.0, -1.0, 0.1, 0.5, 100.0, 1e22, 1e23, 123456789.0,
+      // fixed <-> scientific boundaries (Python: 1e-4 and 1e16; Java: 1e-3 and 1e7)
+      1e-5, 9.99999e-5, 1e-4, 1.00001e-4, 0.00012345, 1e-3, 9.999e-4, 1e7, 9999999.0, 1.0000001e7,
+      1e15, 1e16, -1e16, 9999999999999998.0, 1.0000000000000002e16, 1e17, 12345678901234567.0)
+    var n = 0
+    (random ++ edges.iterator ++ edges.iterator.map(_ * 3.0)).foreach { d =>
+      assert(PyFloat.repr(d) == reprReference(d), java.lang.Double.toString(d))
+      n += 1
+    }
+    assert(n > 100000)
+  }
+
   // not idempotent by design: removing a separator can re-expose a title
   // boundary — mirrors Python make_id exactly
   test("makeId stays in its alphabet") {
