@@ -23,13 +23,7 @@ object DedupBench {
   }
 
   def run(cpus: Int, nDocs: Long, dupGroup: Int): (Double, Long) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-dedup-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val docs = corpus(spark, nDocs, dupGroup)
@@ -54,13 +48,7 @@ object DedupBench {
     */
   def runChain(cpus: Int, nDocs: Long, maxIterPlain: Int,
                maxIterPD: Int): (Double, Boolean, Double, Boolean, Boolean) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-dedup-chain-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     try {
       import spark.implicits._
@@ -93,13 +81,7 @@ object DedupBench {
     * expected drop count exactly.
     */
   def runLines(cpus: Int, nDocs: Long, boiler: Int): (Double, Double, Boolean) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-lines-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     try {
       import spark.implicits._
@@ -133,13 +115,7 @@ object DedupBench {
     */
   def runCurate(cpus: Int, nDocs: Long, dupGroup: Int,
                 full: Boolean = false): (Double, Long) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-curate-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     try {
       import spark.implicits._
@@ -187,19 +163,11 @@ object DedupBench {
     *
     *   runMain graft.DedupBench --curate-stream [nDocs] [cpus] [dupGroup] [batches] [compactEvery]
     */
-  private final case class BatchStat(id: Long, sec: Double, seenBytes: Long,
-                                     picked: Long, fallbacks: Long,
-                                     foldSidecarBytes: Long, fppPpm: Long)
+  private final case class BatchStat(id: Long, sec: Double, seenBytes: Long)
 
   def runCurateStream(cpus: Int, nDocs: Long, dupGroup: Int,
                       batches: Int, compactEvery: Int = 0): (Double, Long, Long) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-curate-stream-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     try {
       import spark.implicits._
@@ -241,8 +209,7 @@ object DedupBench {
             b, id, s"$base/out", "doc_id", "text", cfg,
             compactEvery = compactEvery)
           perBatch.add(BatchStat(id, (System.nanoTime() - s0) / 1e9,
-            m.plannedSeenBytes.get, m.baseFilesSelected.get,
-            m.fullFallbacks.get, m.foldSidecarBytes.get, m.probeFppPpm.get))
+            m.plannedSeenBytes.get))
           ()
         }
         .start()
@@ -260,34 +227,12 @@ object DedupBench {
         }
         val early = med(times.slice(1, 1 + k)) // skip batch 0 (JIT/warm)
         val late = med(times.takeRight(k))
-        // the scale evidence alongside flat wall time: seen-side bytes
-        // SELECTED for read per batch (claim-store read plan) must be
-        // bounded by the batch, not grow with the claim corpus — and
-        // the picked CHUNK COUNT is the noise-free witness that
-        // selection tracks the batch's duplicate spread, not the fold
-        // history (seen bytes also move with chunk granularity: merges
-        // grow chunks toward foldTargetBytes)
+        // seen-side bytes read per batch: the claim history each
+        // batch's lookup scans
         val bytes = rows.map(_.seenBytes.toDouble)
         val bEarly = med(bytes.slice(1, 1 + k))
         val bLate = med(bytes.takeRight(k))
-        val picked = rows.map(_.picked.toDouble)
-        val pEarly = med(picked.slice(1, 1 + k))
-        val pLate = med(picked.takeRight(k))
-        val fallbacks = rows.map(_.fallbacks).sum
-        // fold-cost witness: sidecar (filter) bytes WRITTEN per fold
-        // batch must track the fold's NEW claims, not the claim corpus
-        // — early-half vs late-half medians over the fold batches only
-        // (medians absorb the occasional size-tiered merge, which
-        // rewrites bigger runs but amortizes to O(log batches)/claim)
-        val folds = rows.filter(_.foldSidecarBytes > 0L)
-          .map(_.foldSidecarBytes.toDouble)
-        val (fsEarly, fsLate) =
-          if (folds.length >= 2) {
-            val half = folds.length / 2
-            (med(folds.take(half)), med(folds.drop(folds.length - half)))
-          } else (0.0, 0.0)
-        val fppMax = rows.map(_.fppPpm).max
-        println(f"""{"metric":"curate_stream_per_batch","early$k%d_med_sec":$early%.2f,"late$k%d_med_sec":$late%.2f,"late_over_early":${late / early}%.2f,"batches":${times.length},"seen_bytes_early$k%d_med":${bEarly}%.0f,"seen_bytes_late$k%d_med":${bLate}%.0f,"picked_chunks_early$k%d_med":$pEarly%.0f,"picked_chunks_late$k%d_med":$pLate%.0f,"bloom_full_fallbacks":$fallbacks%d,"fold_sidecar_bytes_early_med":$fsEarly%.0f,"fold_sidecar_bytes_late_med":$fsLate%.0f,"folds":${folds.length}%d,"probe_fpp_ppm_max":$fppMax%d}""")
+        println(f"""{"metric":"curate_stream_per_batch","early$k%d_med_sec":$early%.2f,"late$k%d_med_sec":$late%.2f,"late_over_early":${late / early}%.2f,"batches":${times.length},"seen_bytes_early$k%d_med":${bEarly}%.0f,"seen_bytes_late$k%d_med":${bLate}%.0f}""")
       }
       (t, kept, keptBatch)
     } finally {

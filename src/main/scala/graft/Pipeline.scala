@@ -138,7 +138,7 @@ object Pipeline {
     rows.flatMap { case (metaJson, csvText) =>
       expandRows(includeProv, failFast, errorCounter) {
         val meta = CsvwReader.read(metaJson)
-        (meta, SpanCodec.lines(SpanCodec.encode(meta.id, csvText).spans))
+        (meta, SpanCodec.splitKeepNewlines(csvText))
       }
     }
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tooling (guide §1): dump `.explain("formatted")`
   * for the named queries (or all) to plans/<tag>/<query>_<suffix>.txt.
   * Separate main — Bench.scala is frozen for measurement.
@@ -17,13 +15,7 @@ object PlanDump {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r09")
     val suffix = if (args.nonEmpty) args(0) else "before"
     val names = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     graft.queries.Queries.registry.foreach { case (name, fn, _) =>

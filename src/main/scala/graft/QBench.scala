@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused per-query re-measure: runs the named registry queries
   * INTERLEAVED for `reps` rounds (the BENCH.md protocol — interleaving
   * spreads host-contention windows across all queries instead of
@@ -16,13 +14,7 @@ object QBench {
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val qs = graft.queries.Queries.registry

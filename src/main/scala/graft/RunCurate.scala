@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** spark-submit entry for the composite curation pass
   * ([[graft.ops.Curation]]): read a documents parquet table
   * (idCol, textCol), write the survivors table + the per-stage funnel,
@@ -67,14 +65,7 @@ object RunCurate {
     }
     val cfg = parseConfig(flags)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val docs = spark.read.parquet(in)

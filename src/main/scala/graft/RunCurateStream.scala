@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** spark-submit entry for the CONTINUOUS curation funnel
   * ([[graft.streaming.StreamingCuration]]): watch a parquet docs
   * directory, run every arriving micro-batch through the full pass
@@ -53,14 +51,7 @@ object RunCurateStream {
     require(!java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(in)),
       s"docsDir must be a directory of parquet files, got a single file: $in — " +
         "pass its parent directory (readStream watches a basePath)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-curate-stream")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val bench = benchPath.map(spark.read.parquet(_))

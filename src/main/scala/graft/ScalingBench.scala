@@ -16,14 +16,7 @@ import org.apache.spark.sql.SparkSession
 object ScalingBench {
 
   def run(cpus: Int, nDocs: Long): (Double, Long, Long) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scale-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RunPipeline.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
     try {

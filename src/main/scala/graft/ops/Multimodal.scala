@@ -170,14 +170,26 @@ object Multimodal {
     out
   }
 
-  /** REAL pixel decode via the JDK's ImageIO (PNG/GIF/JPEG/BMP; pure
-    * JVM, headless-safe). None when no registered reader accepts the
-    * bytes.
+  /** Largest width × height [[decodeImage]] hands to ImageIO (4096 ×
+    * 4096): the decoder allocates the whole raster from the header's
+    * dimensions before reading any pixel, so a few KB of untrusted
+    * payload could otherwise demand gigabytes of executor heap.
+    */
+  private val MaxDecodePixels = 1L << 24
+
+  /** REAL pixel decode via the JDK's ImageIO (PNG/GIF/JPEG/BMP/TIFF;
+    * pure JVM, headless-safe). None when the header does not parse,
+    * declares more than `MaxDecodePixels` pixels, or no registered
+    * reader accepts the bytes.
     */
   def decodeImage(payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
-    try Option(javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(payload)))
-    catch { case _: Throwable => None }
+    headerDecode(payload) match {
+      case Some((_, w, h, _)) if w > 0 && h > 0 && w.toLong * h <= MaxDecodePixels =>
+        try Option(javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(payload)))
+        catch { case scala.util.control.NonFatal(_) => None }
+      case _ => None
+    }
 
   /** 8-dim REAL pixel statistics: [w, h, meanR, meanG, meanB, meanLum,
     * stdLum, dominant-luminance-octant]. Deterministic integer pixel

@@ -32,27 +32,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[StreamingLineDedup]], pinned).
   *
   * Scale: per batch the plan is the batch funnel's (narrow flags, one
-  * line-hash shuffle, one ownership shuffle) plus claim lookups whose
-  * seen-side read is bounded by the BATCH, not the corpus: unfolded
-  * recent claim files (at most `compactEvery` batches) are read fully,
-  * and the folded base is probed through the store's Bloom + manifest
-  * min/max pruning — a new hash costs zero base bytes, a duplicate
-  * costs one pruned chunk read. [[compactSidecars]] folds committed
-  * batch claims into range-clustered sorted base chunks every
-  * `compactEvery` batches (atomic snapshot rewrite; the base is never
-  * re-read). Without it the recent-file list grows O(batches) — wire
-  * `compactEvery` on [[start]]/[[processBatch]].
+  * line-hash shuffle, one ownership shuffle) plus one claim lookup per
+  * domain: a scan of every claim file of the domain (its bytes grow
+  * with the claim history) semi-joined with the batch's hashes, so the
+  * seen frame each later join uses is bounded by the batch.
+  * [[compactSidecars]] folds committed batch claims into base files
+  * every `compactEvery` batches (atomic snapshot rewrite; the existing
+  * base is rewritten only by size-tiered merges). Without it the
+  * claim-file list grows O(batches) — wire `compactEvery` on
+  * [[start]]/[[processBatch]].
   */
 object StreamingCuration {
 
   import graft.ops.Curation.CurateConfig
 
-  /** (claim-table dir name, its hash column) for the three domains. */
-  private val Sidecars =
-    Seq("_lines_seen" -> "lh", "_ngrams_seen" -> "nh", "_texts_seen" -> "th")
+  /** The claim-table dir names of the three domains. */
+  private val Sidecars = Seq("_lines_seen", "_ngrams_seen", "_texts_seen")
 
-  /** Fold the claim files of batches `0..upToBatch` into the sorted
-    * base chunks of each domain's [[ClaimStore]] and extend its Bloom.
+  /** Fold the claim files of batches `0..upToBatch` into the base
+    * files of each domain's [[ClaimStore]].
     * ONLY COMMITTED batches may be folded: callers pass
     * `upToBatch = currentBatchId - 1` — the engine has committed every
     * batch below the one being processed, so no folded batch can ever
@@ -61,8 +59,8 @@ object StreamingCuration {
     * far is out of contract, exactly as for the doc-commit sidecar).
     */
   def compactSidecars(spark: SparkSession, outDir: String, upToBatch: Long): Unit =
-    for ((name, hashCol) <- Sidecars)
-      ClaimStore.fold(spark, s"$outDir/$name", hashCol, upToBatch)
+    for (name <- Sidecars)
+      ClaimStore.fold(spark, s"$outDir/$name", upToBatch)
 
   /** One micro-batch through the funnel with claim state under
     * `outDir`. Exposed (not private) so the idempotency property is
@@ -127,18 +125,17 @@ object StreamingCuration {
       else {
         // markDupLines already carries `elig`; keep = in-batch keep
         // AND (ineligible OR line hash not claimed by an earlier batch).
-        // Pinned: it feeds the Bloom probe, the keep join, and (via
+        // Pinned: it feeds the claim lookup, the keep join, and (via
         // keepDf) the claims write and the rebuild.
         val marked = pin(graft.ops.Dedup
           .markDupLines(normed, idCol, "_t0", cfg.lineMinLen)
           .withColumn("_lh", md5(col("line"))))
-        // probe WITHOUT a distinct: the Bloom dedupes positives driver-
-        // side for free, so the extra shuffle would buy nothing
+        // probe WITHOUT a distinct: the lookup is a semi-join, which
+        // ignores repeated hashes, so the extra shuffle would buy nothing
         val probe = marked.filter(col("elig")).select(col("_lh").as("lh"))
         val seenSet = ClaimStore.seenFor(spark, claimRoot("_lines_seen"),
           probe, "lh", batchId).map(pin) // read once, used by keep join + claims anti-join
-        // NO broadcast hint on the seen side: recent claim files grow
-        // with compactEvery and the pruned base read with the batch's
+        // NO broadcast hint on the seen side: it grows with the batch's
         // duplicate density (AQE picks the strategy)
         val keepDf = pin(seenSet match {
           case Some(s) => marked.join(s.withColumnRenamed("lh", "_lh")
@@ -178,7 +175,7 @@ object StreamingCuration {
           .withColumn("_nh", md5(col("ng")))
         // the ownership groupBy materializes exactly the distinct
         // n-gram set; pinned because it feeds the in-batch dup join,
-        // the Bloom probe, and the claims write
+        // the claim lookup, and the claims write
         val first = pin(occ.groupBy("ng")
           .agg(min(struct(col(idCol), col("i"))).as("_f")))
         val dupIn = occ.join(first, "ng")

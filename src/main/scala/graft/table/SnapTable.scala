@@ -494,9 +494,8 @@ object SnapTable {
     f.mkdirs(dataDir(root))
     // full 128-bit stamp (no '-' so the run prefix is the segment before
     // the first dash): data file names are relied on to NEVER recur —
-    // caches key on them (ClaimStore's chunk filters) and the orphan
-    // sweep above compares by name — and a truncated stamp makes reuse
-    // a birthday problem, not an impossibility
+    // the orphan sweep above compares by name — and a truncated stamp
+    // makes reuse a birthday problem, not an impossibility
     val stamp = java.util.UUID.randomUUID().toString.replace("-", "")
     val stage = new Path(root, s".stage-$stamp")
     // clusterFiles > 0 pins the output file count (an explicit

@@ -324,6 +324,38 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("hostile image payload: an oversized header is refused before any raster allocation") {
+    // a 32x32 noise PNG (~3 KB), then the same bytes with an IHDR that
+    // declares 20000x20000 (CRC fixed, so the header is well formed)
+    val rnd = new scala.util.Random(4242)
+    val img = new java.awt.image.BufferedImage(32, 32, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 32; x <- 0 until 32) img.setRGB(x, y, rnd.nextInt(1 << 24))
+    val o = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", o)
+    val small = o.toByteArray
+    val huge = small.clone()
+    val bb = java.nio.ByteBuffer.wrap(huge)
+    bb.putInt(16, 20000).putInt(20, 20000)
+    val crc = new java.util.zip.CRC32
+    crc.update(huge, 12, 17) // "IHDR" + its 13 data bytes
+    bb.putInt(29, crc.getValue.toInt)
+    assert(huge.length > 2000 && huge.length < 4000, huge.length.toString)
+    assert(Multimodal.headerDecode(huge).contains(("png", 20000, 20000, 8)))
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = threads.getThreadAllocatedBytes(tid)
+    assert(Multimodal.decodeImage(huge).isEmpty)
+    val allocated = threads.getThreadAllocatedBytes(tid) - before
+    // the raster alone would be 400M pixels
+    assert(allocated < (16L << 20), s"allocated $allocated bytes")
+    // the untouched payload still decodes to the same pixels
+    val back = Multimodal.decodeImage(small).get
+    assert(back.getWidth == 32 && back.getHeight == 32)
+    for (y <- 0 until 32; x <- 0 until 32)
+      assert(back.getRGB(x, y) == img.getRGB(x, y), s"($x,$y)")
+  }
+
   test("similarity: annTopK returns bucket-restricted neighbors") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val topk = Similarity.annTopK(e, "vec_id", "embedding", queryId = 0, k = 5)

@@ -580,10 +580,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(tags.contains("base"), s"$name: $tags")
       assert(!tags.exists(t => t.startsWith("b:") &&
         t.stripPrefix("b:").toLong < 3), s"$name not folded: $tags")
-      // the fold left an immutable probe filter per run (and never the
+      // the fold writes claim files only: no filter sidecars (nor the
       // legacy mutable bloom.bin)
-      assert(new java.io.File(s"$base/out/$name/bloomruns").listFiles()
-        .exists(_.getName.endsWith(".gbf")), s"$name run filter missing")
+      for (sidecar <- Seq("bloomruns", "bloomchunks"))
+        assert(!new java.io.File(s"$base/out/$name/$sidecar").exists(), s"$name wrote $sidecar/")
       assert(!new java.io.File(s"$base/out/$name/bloom.bin").exists(), s"$name wrote bloom.bin")
     }
     // replaying the newest (possibly-uncommitted) batch AFTER compaction
