@@ -292,12 +292,13 @@ object TextAnalysis {
     // r9 (guide §2.3): countDistinct mixed with count(*) makes the
     // planner Expand every row into two aggregation streams; the manual
     // two-level form shuffles each occurrence once as an (ng, id)
-    // partial count, then folds (n_docs = group count, n_total = count
-    // sum) — same results, half the pre-shuffle rows.
+    // partial count, then folds (n_docs = non-null id groups, as
+    // countDistinct counted them; n_total = count sum) — same results,
+    // half the pre-shuffle rows.
     exploded.groupBy(col("ng"), col(idCol))
       .agg(count(lit(1)).as("_c"))
       .groupBy("ng")
-      .agg(count(lit(1)).cast("long").as("n_docs"),
+      .agg(count(col(idCol)).cast("long").as("n_docs"),
         sum(col("_c")).cast("long").as("n_total"))
       .filter(col("n_docs") >= minDocs && col("ng").isNotNull)
   }

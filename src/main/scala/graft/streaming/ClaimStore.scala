@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.table.SnapTable
 
 /** Cross-batch first-seen claim state for the streaming curation
@@ -16,10 +17,10 @@ import graft.table.SnapTable
   *    re-append — claims are deterministic given the same inputs, so
   *    the previous attempt's commit is exactly right. Every state
   *    transition is a snapshot commit, so claim sets are globally
-  *    DISTINCT by construction — the write path anti-joins against all
-  *    earlier claims, appends are replay-skipped, and [[fold]] is a
-  *    snapshot-isolated rewrite — and readers never need a defensive
-  *    `.distinct()`.
+  *    DISTINCT by construction — a batch appends one row per new hash
+  *    and only hashes its [[seenFor]] lookup did not find, appends are
+  *    replay-skipped, and [[fold]] is a snapshot-isolated rewrite —
+  *    and readers never need a defensive `.distinct()`.
   *
   *  - **One read path.** [[seenFor]] reads every claim file of an
   *    earlier batch plus every folded `base` file in one parquet scan
@@ -116,7 +117,11 @@ object ClaimStore {
     Metrics.baseFilesSelected.addAndGet(base.size.toLong)
     if (files.isEmpty) return None
     Metrics.plannedSeenBytes.addAndGet(files.map(_.bytes).sum)
-    Some(spark.read.parquet(files.map(_.path): _*).select(col(hCol))
+    // the claim files hold the one hash column, typed as the batch's:
+    // a given schema spares the parquet schema-inference job, so
+    // building the seen frame starts no Spark job
+    Some(spark.read.schema(StructType(Seq(batchHashes.schema(hCol))))
+      .parquet(files.map(_.path): _*)
       .join(batchHashes.select(col(hCol)), Seq(hCol), "left_semi"))
   }
 

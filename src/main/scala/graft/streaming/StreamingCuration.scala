@@ -34,8 +34,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Scale: per batch the plan is the batch funnel's (narrow flags, one
   * line-hash shuffle, one ownership shuffle) plus one claim lookup per
   * domain: a scan of every claim file of the domain (its bytes grow
-  * with the claim history) semi-joined with the batch's hashes, so the
-  * seen frame each later join uses is bounded by the batch.
+  * with the claim history, its schema is given, so building it runs
+  * nothing) semi-joined with the batch's hashes, so the seen frame is
+  * bounded by the batch. Each domain's claim decision is made ONCE and
+  * pinned: the lines' seen-flagged frame feeds both the claims write
+  * (kept, eligible, unseen rows are already one per new hash) and the
+  * rebuild; the unseen text owners are both the new text claims and
+  * the rows the batch writes, so no distinct, anti-join or join back
+  * to the owners repeats a decision. A steady 500-doc batch of the
+  * curate-stream benchmark (4 cores) runs 14 Spark jobs.
   * [[compactSidecars]] folds committed batch claims into base files
   * every `compactEvery` batches (atomic snapshot rewrite; the existing
   * base is rewritten only by size-tiered merges). Without it the
@@ -77,7 +84,7 @@ object StreamingCuration {
     if (batch.isEmpty) return
     // Each claim commit plus the final curated write is its own action;
     // pin the frames shared between them so the heavy shuffles (line
-    // dedup, n-gram excision, decontam join) execute once per batch, not
+    // dedup, n-gram excision, text ownership) execute once per batch, not
     // once per action (RunCurate's localCheckpoint pattern, with an
     // explicit unpersist so a long-running stream holds no cache across
     // batches).
@@ -123,35 +130,33 @@ object StreamingCuration {
     val curated =
       if (!cfg.lineDedup) normed.withColumn("text_curated", col("_t0"))
       else {
-        // markDupLines already carries `elig`; keep = in-batch keep
-        // AND (ineligible OR line hash not claimed by an earlier batch).
-        // Pinned: it feeds the claim lookup, the keep join, and (via
-        // keepDf) the claims write and the rebuild.
-        val marked = pin(graft.ops.Dedup
+        // markDupLines already carries `elig` and the in-batch `keep`
+        // (row_number() === 1 per eligible line hash)
+        val marked = graft.ops.Dedup
           .markDupLines(normed, idCol, "_t0", cfg.lineMinLen)
-          .withColumn("_lh", md5(col("line"))))
+          .withColumn("_lh", md5(col("line")))
         // probe WITHOUT a distinct: the lookup is a semi-join, which
         // ignores repeated hashes, so the extra shuffle would buy nothing
         val probe = marked.filter(col("elig")).select(col("_lh").as("lh"))
         val seenSet = ClaimStore.seenFor(spark, claimRoot("_lines_seen"),
-          probe, "lh", batchId).map(pin) // read once, used by keep join + claims anti-join
-        // NO broadcast hint on the seen side: it grows with the batch's
-        // duplicate density (AQE picks the strategy)
-        val keepDf = pin(seenSet match {
+          probe, "lh", batchId)
+        // every line's claim decision, made once. NO broadcast hint on
+        // the seen side: it grows with the batch's duplicate density
+        // (AQE picks the strategy). Pinned: it feeds the claims write
+        // and the rebuild.
+        val flagged = pin(seenSet match {
           case Some(s) => marked.join(s.withColumnRenamed("lh", "_lh")
               .withColumn("_seen", lit(true)), Seq("_lh"), "left")
-            .withColumn("keep",
-              col("keep") && !(col("elig") && coalesce(col("_seen"), lit(false))))
-            .drop("_seen")
-          case None => marked
+            .withColumn("_seen", coalesce(col("_seen"), lit(false)))
+          case None => marked.withColumn("_seen", lit(false))
         })
-        // commit this batch's newly-claimed eligible line hashes
-        val newClaims = keepDf.filter(col("elig")).select(col("_lh").as("lh")).distinct()
-        val toWrite = seenSet match {
-          case Some(s) => newClaims.join(s, newClaims("lh") === s("lh"), "left_anti")
-          case None => newClaims
-        }
-        ClaimStore.appendClaims(spark, claimRoot("_lines_seen"), toWrite, "lh", batchId)
+        // the kept eligible rows are one row per distinct line hash, so
+        // the unseen ones are exactly this batch's new claims
+        ClaimStore.appendClaims(spark, claimRoot("_lines_seen"),
+          flagged.filter(col("elig") && col("keep") && !col("_seen"))
+            .select(col("_lh").as("lh")), "lh", batchId)
+        val keepDf = flagged.withColumn("keep",
+          col("keep") && !(col("elig") && col("_seen")))
         keepDf.groupBy(col(idCol))
           .agg(concat_ws("\n", expr(
             "transform(array_sort(collect_list(case when keep then struct(idx, line) end)), x -> x.line)"))
@@ -233,7 +238,7 @@ object StreamingCuration {
       graft.ops.TextAnalysis.benchNgramSet(
         b.select(col(textCol).as("text_curated")), "text_curated",
         cfg.decontamNgram)))
-    val withDecontam = pin(ngSet match {
+    val withDecontam = ngSet match {
       case None => withGopher.withColumn("keep_decontam", lit(true))
       case Some(ngs) =>
         val hits = graft.ops.TextAnalysis.decontaminateNg(
@@ -243,50 +248,44 @@ object StreamingCuration {
         withGopher.join(hits, Seq(idCol), "left")
           .withColumn("keep_decontam", col("_nh").isNull)
           .drop("_nh")
-    })
+    }
+    val survivors = withDecontam
+      .filter(col("keep_lang") && col("keep_gopher") && col("keep_decontam"))
 
     // stage 5: exact dedup — in-batch ownership over survivors +
     // cross-batch lookup of earlier batches' surviving hashes
-    val withExact =
-      if (!cfg.exactDedup) withDecontam.withColumn("keep_exact", lit(true))
+    val deduped =
+      if (!cfg.exactDedup) survivors.select(col(idCol), col("text_curated"))
       else {
-        val survivors = withDecontam
-          .filter(col("keep_lang") && col("keep_gopher") && col("keep_decontam"))
-          .withColumn("_h", md5(col("text_curated")))
-        val owners = survivors.groupBy("_h").agg(min(col(idCol)).as("_owner"))
-        val newHashes = pin(survivors.select(col("_h").as("th")).distinct())
+        val hashed = survivors.withColumn("_h", md5(col("text_curated")))
+        // one row per surviving hash: its min-id owner and that owner's
+        // text (every row of a group carries the same text)
+        val owners = hashed.groupBy("_h").agg(min(col(idCol)).as("_owner"),
+          min_by(col("text_curated"), col(idCol)).as("_text"))
         val seen = ClaimStore.seenFor(spark, claimRoot("_texts_seen"),
-          newHashes, "th", batchId).map(pin)
-        // seen side unbroadcast for the same growth reason as lines
-        val ownersUnseen = seen match {
-          case Some(s) => owners.join(s.withColumnRenamed("th", "_h")
-              .withColumn("_seen", lit(true)), Seq("_h"), "left")
-            .withColumn("_owner",
-              when(coalesce(col("_seen"), lit(false)), lit(null)).otherwise(col("_owner")))
-            .drop("_seen")
+          hashed.select(col("_h").as("th")), "th", batchId)
+        // every hash's claim decision, made once: the unseen owners are
+        // both the new claims and the batch's exact-dedup survivors.
+        // Seen side unbroadcast for the same growth reason as lines.
+        // Pinned: it feeds the claims write and the curated write.
+        val unseen = pin(seen match {
+          case Some(s) => owners.join(s.withColumnRenamed("th", "_h"), Seq("_h"),
+            "left_anti")
           case None => owners
-        }
-        val toWrite = seen match {
-          case Some(s) => newHashes.join(s, newHashes("th") === s("th"), "left_anti")
-          case None => newHashes
-        }
-        ClaimStore.appendClaims(spark, claimRoot("_texts_seen"), toWrite, "th", batchId)
-        withDecontam.withColumn("_h", md5(col("text_curated")))
-          .join(ownersUnseen, Seq("_h"), "left")
-          .withColumn("keep_exact",
-            coalesce(col(idCol) === col("_owner"), lit(false)))
-          .drop("_h", "_owner")
+        })
+        ClaimStore.appendClaims(spark, claimRoot("_texts_seen"),
+          unseen.select(col("_h").as("th")), "th", batchId)
+        // a group whose ids are all null has no owner and keeps no row
+        unseen.filter(col("_owner").isNotNull)
+          .select(col("_owner").as(idCol), col("_text").as("text_curated"))
       }
 
     // stage 6 + commit: deterministic sample, then the batch's
     // survivors overwrite their own partition
-    val kept = withExact.withColumn("keep_sample",
-        if (cfg.sampleFraction >= 1.0) lit(true)
-        else md5(concat(lit("sample:"), col(idCol).cast("string")))
-          < lit(graft.ops.TextAnalysis.hexThreshold(cfg.sampleFraction)))
-      .filter(col("keep_lang") && col("keep_gopher") && col("keep_decontam") &&
-        col("keep_exact") && col("keep_sample"))
-      .select(col(idCol), col("text_curated"))
+    val kept =
+      if (cfg.sampleFraction >= 1.0) deduped
+      else deduped.filter(md5(concat(lit("sample:"), col(idCol).cast("string")))
+        < lit(graft.ops.TextAnalysis.hexThreshold(cfg.sampleFraction)))
     writePart(kept, "curated")
   }
 

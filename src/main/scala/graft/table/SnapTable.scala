@@ -3,6 +3,7 @@ package graft.table
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A from-scratch snapshot-manifest table layer over parquet — the
   * engine's stand-in for the Iceberg catalog this sandbox cannot ship
@@ -538,8 +539,13 @@ object SnapTable {
       }
       return entries
     }
-    // one stats job: per-file row count (+ bounds when statsCol set)
-    val base = spark.read.parquet(entries.map(_.path): _*)
+    // one stats job: per-file row count (+ bounds when statsCol set).
+    // It reads only the column it aggregates (statsCol, else the first),
+    // under a given schema: the written schema is known, so no parquet
+    // schema-inference job runs first
+    val readCol = df.schema(statsCol.getOrElse(df.schema.head.name)).copy(nullable = true)
+    val base = spark.read.schema(StructType(Seq(readCol)))
+      .parquet(entries.map(_.path): _*)
       .groupBy(input_file_name().as("_f"))
     val stats = (statsCol match {
       case Some(c) => base.agg(count(lit(1)).as("_n"),

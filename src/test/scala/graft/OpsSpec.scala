@@ -569,6 +569,26 @@ class OpsSpec extends AnyFunSuite {
       "hashed fast path must produce identical count rows")
   }
 
+  test("dupNgrams: a NULL doc id is no document, its occurrences still count") {
+    import spark.implicits._
+    val df = Seq(
+      (Some(1L), "alpha beta gamma delta"),
+      (None, "alpha beta gamma delta"),   // same n-grams, no doc id
+      (Some(2L), "alpha beta gamma"))
+      .toDF("doc_id", "text")
+    def mine(minDocs: Long, hashed: Boolean) =
+      TextAnalysis.dupNgrams(df, "doc_id", "text", n = 3, minDocs = minDocs,
+          hashed = hashed)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).sorted.toSeq
+    // n_docs as countDistinct(doc_id) counts it (nulls ignored);
+    // n_total counts every occurrence, the null-id row's too
+    val all = TextAnalysis.dupNgrams(df, "doc_id", "text", n = 3, minDocs = 1)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(all == Set(("alpha beta gamma", 2L, 3L), ("beta gamma delta", 1L, 2L)), all)
+    assert(mine(2, hashed = false) == Seq((2L, 3L)))
+    assert(mine(2, hashed = true) == Seq((2L, 3L)))
+  }
+
   test("sampleStratified: per-stratum fractions, stratum-independent, partition-invariant") {
     import spark.implicits._
     val df = spark.range(30000).toDF("id")

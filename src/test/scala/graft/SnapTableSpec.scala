@@ -507,4 +507,38 @@ class SnapTableSpec extends AnyFunSuite {
     assert(files.count(_.tag.isEmpty) == files.size - files.count(_.tag.isDefined) &&
       files.exists(_.tag.isEmpty))
   }
+
+  test("stats read under the written schema: manifest rows and bounds match each file") {
+    import spark.implicits._
+    val nullable = Seq[(Option[Long], String)]((Some(3L), "c"), (None, "n"), (Some(1L), "a"),
+      (Some(9L), "i"), (None, "m"), (Some(4L), "d")).toDF("id", "v")
+    // spark.range's id is NOT nullable; the parquet files mark it required
+    val required = spark.range(0, 200, 1, 4)
+      .select(col("id"), (col("id") % 7).cast("string").as("v"))
+    assert(!required.schema("id").nullable && nullable.schema("id").nullable)
+    for ((df, name) <- Seq(nullable -> "nullable", required -> "required")) {
+      val totals = for (stats <- Seq(Some("id"), Some("v"), None)) yield {
+        val root = tmp(s"snap14$name")
+        val files = SnapTable.append(spark, root, df, statsCol = stats,
+          clusterFiles = 3).files
+        // the reference: each file read on its own, schema inferred
+        for (f <- files) {
+          val r = spark.read.parquet(f.path)
+          val want = stats match {
+            case Some(c) => r.agg(count(lit(1)), min(col(c)).cast("string"),
+              max(col(c)).cast("string")).head()
+            case None => r.agg(count(lit(1)), lit(null).cast("string"),
+              lit(null).cast("string")).head()
+          }
+          assert((f.rows, f.lo, f.hi) ==
+            ((want.getLong(0), Option(want.getString(1)), Option(want.getString(2)))),
+            s"$name statsCol=$stats ${f.path}")
+        }
+        assert(files.forall(_.rows > 0))
+        files.map(_.rows).sum
+      }
+      // every row counted, null stats values too, with or without statsCol
+      assert(totals.distinct == Seq(df.count()), s"$name: $totals")
+    }
+  }
 }

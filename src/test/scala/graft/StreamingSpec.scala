@@ -716,6 +716,115 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed2 == streamed)
   }
 
+  test("claim files hold exactly each batch's new claims; an all-seen batch is a watermark bump") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.table.SnapTable
+    val base = java.nio.file.Files.createTempDirectory("scurclaims").toString
+    val out = s"$base/out"
+    val boiler = "SHARED BOILERPLATE NAVIGATION LINE"
+    def en(i: Long) =
+      s"the measurement number $i of this series has finished and the result " +
+        "of all tests is good so we have recorded it with great care today"
+    // every line shorter than lineMinLen: no eligible line, yet it
+    // passes Gopher, so its TEXT is claimed
+    val shortOnly = "the cats\nand dogs\nof the barn\nwere happy"
+    val texts: Map[Long, String] = Map(
+      0L -> s"$boiler\n${en(0)}", 1L -> s"$boiler\n${en(1)}",
+      2L -> s"$boiler\n${en(1)}",                // in-batch exact dup of 1
+      3L -> null, 4L -> shortOnly,
+      5L -> s"$boiler\n${en(5)}\n${en(0)}",      // a line of doc 0 again
+      10L -> s"$boiler\n${en(10)}", 11L -> s"$boiler\n${en(5)}\n${en(0)}",
+      12L -> null, 13L -> s"${en(12)}\n${en(13)}",
+      // every eligible line and every surviving text claimed before
+      20L -> shortOnly, 21L -> s"$boiler\n$shortOnly", 22L -> null,
+      23L -> s"$boiler\n${en(1)}", 24L -> s"${en(12)}\n${en(0)}")
+    val batches = Seq(0L -> (0L to 5L), 1L -> (10L to 13L), 2L -> (20L to 24L))
+    def docs(ids: Seq[Long]) = ids.map(i => (i, texts(i))).toDF("doc_id", "text")
+    val cfg = graft.ops.Curation.CurateConfig(lineMinLen = 12, minWords = 4)
+    // expected line claims: distinct eligible line md5s, from the batch rule
+    def lineHashes(ids: Seq[Long]): Set[String] =
+      graft.ops.Dedup.markDupLines(
+          docs(ids).select(col("doc_id"), coalesce(col("text"), lit("")).as("t")),
+          "doc_id", "t", cfg.lineMinLen)
+        .filter(col("elig")).select(md5(col("line"))).as[String].collect().toSet
+    // expected text claims: distinct survivor text md5s; over doc-ordered
+    // batches the batch funnel keeps exactly one doc per survivor text
+    def textHashes(ids: Seq[Long]): Set[String] =
+      graft.ops.Curation.curate(docs(ids), "doc_id", "text", cfg)
+        .select(md5(col("text_curated"))).as[String].collect().toSet
+    def claimed(name: String, batchId: Long): Seq[String] = {
+      val files = SnapTable.snapshot(spark, s"$out/$name").get.files
+        .filter(_.tag.contains(s"b:$batchId")).map(_.path)
+      if (files.isEmpty) Seq.empty
+      else spark.read.parquet(files: _*).as[String].collect().toSeq
+    }
+    var earlierLines = Set.empty[String]
+    var earlierTexts = Set.empty[String]
+    for ((b, ids) <- batches) {
+      val upTo = batches.filter(_._1 <= b).flatMap(_._2)
+      graft.streaming.StreamingCuration.processBatch(docs(ids), b, out,
+        "doc_id", "text", cfg)
+      for ((name, want) <- Seq(
+          "_lines_seen" -> (lineHashes(upTo) -- earlierLines),
+          "_texts_seen" -> (textHashes(upTo) -- earlierTexts))) {
+        val got = claimed(name, b)
+        assert(got.distinct.length == got.length, s"$name b:$b repeats a hash")
+        assert(got.toSet == want, s"$name b:$b: missing ${want -- got} extra ${got.toSet -- want}")
+        assert(SnapTable.lastWatermark(spark, s"$out/$name").contains(b.toString))
+      }
+      earlierLines = lineHashes(upTo)
+      earlierTexts = textHashes(upTo)
+    }
+    // the trajectory exercised every decision it is meant to
+    assert(lineHashes(0L to 5L).nonEmpty && textHashes(0L to 5L).size == 4)
+    for (name <- Seq("_lines_seen", "_texts_seen")) {
+      val snaps = SnapTable.snapshotIds(spark, s"$out/$name")
+      val (prev, last) = (SnapTable.snapshot(spark, s"$out/$name", Some(snaps.init.last)).get,
+        SnapTable.snapshot(spark, s"$out/$name").get)
+      assert(last.files == prev.files && last.watermark.contains("2"),
+        s"$name: the all-seen batch changed the file list")
+    }
+    val streamed = spark.read.parquet(s"$out/curated")
+      .select("doc_id", "text_curated").as[(Long, String)].collect().toMap
+    assert(streamed == graft.ops.Curation.curate(docs(batches.flatMap(_._2)), "doc_id",
+      "text", cfg).as[(Long, String)].collect().toMap)
+    assert(!streamed.keySet.exists(_ >= 20L), streamed.keySet.toString)
+  }
+
+  test("a steady curation micro-batch starts a bounded number of Spark jobs") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files.createTempDirectory("scurjobs").toString
+    // short prose docs: groups of 4 share a text, every doc shares a
+    // boilerplate first line, and one doc in 16 repeats a text of the
+    // batch before, so the second batch finds claims in the history
+    val perBatch = 40
+    spark.range(0, 2L * perBatch, 1, 4).map { i =>
+      val own = i - i % 4
+      val k = if (i % 16 == 5 && i >= perBatch) (i - perBatch) - (i - perBatch) % 4 else own
+      (i, "shared boilerplate navigation header\n" + (0 until 3).map(j =>
+        s"the measurement run number ${k}_$j was completed and the result " +
+          s"of the test is ${k * 37 + j} units that we have recorded with great care")
+        .mkString("\n"))
+    }.toDF("doc_id", "text").write.parquet(s"$base/docs")
+    val docs = spark.read.parquet(s"$base/docs")
+    def batch(b: Long) = docs.filter(col("doc_id") >= b * perBatch &&
+      col("doc_id") < (b + 1) * perBatch)
+    val cfg = graft.ops.Curation.CurateConfig(minWords = 5)
+    graft.streaming.StreamingCuration.processBatch(batch(0), 0L, s"$base/out",
+      "doc_id", "text", cfg)
+    val (_, jobs) = org.apache.spark.graft.JobCount(spark) {
+      graft.streaming.StreamingCuration.processBatch(batch(1), 1L, s"$base/out",
+        "doc_id", "text", cfg)
+    }
+    // The bound is the count measured for this batch with Spark 4.1.2 on
+    // local[4], once each claim decision was computed once and the
+    // claim files were read under a given schema: 14 jobs.
+    assert(jobs <= 14, s"a steady micro-batch started $jobs Spark jobs")
+    assert(spark.read.parquet(s"$base/out/curated").count() > 0)
+  }
+
   test("TTL'd streaming excision: an n-gram claim expires and re-admits") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger

@@ -162,4 +162,19 @@ class ClaimStoreSpec extends AnyFunSuite {
     ClaimStore.appendClaims(spark, root, hashes(0 until 5), "h", 1L)
     assert(seenSet(root, 0 until 10, 2L) == hashSet(0 until 5))
   }
+
+  test("seenFor starts no Spark job: the claim files are read under the hash column's schema") {
+    val root = tmp("cs8")
+    ClaimStore.appendClaims(spark, root, hashes(0 until 10), "h", 0L)
+    ClaimStore.fold(spark, root, 0L)
+    ClaimStore.appendClaims(spark, root, hashes(10 until 20), "h", 1L)
+    // one base file and one batch file: building the seen frame plans a
+    // scan of both and the semi-join, and runs nothing
+    val (seen, jobs) = org.apache.spark.graft.JobCount(spark) {
+      ClaimStore.seenFor(spark, root, hashes(5 until 15), "h", 2L)
+    }
+    assert(jobs == 0, s"seenFor started $jobs Spark jobs")
+    assert(seen.get.schema == hashes(Nil).schema)
+    assert(seenSet(root, 5 until 15, 2L) == hashSet(5 until 15))
+  }
 }
